@@ -101,46 +101,8 @@ class Compaction:
 
             preds = parse_where(where) if isinstance(where, str) else where
             tasks = prune_tasks(tasks, preds)
-        strategy = PlanStrategy.from_config(self.config.planning)
-        groups = strategy.run(tasks)
-        from iceberg_compaction_spark.sources.schema_evo import (
-            NAME_MAPPING_PROP,
-            parse_name_mapping,
-        )
-
-        nmap = (
-            parse_name_mapping(
-                (manifest.properties or {}).get(NAME_MAPPING_PROP)
-            )
-            or None
-        )
-        for g in groups:
-            g.format_version = manifest.format_version
-            g.schema_fields = manifest.schema_fields or None
-            g.name_mapping = nmap
-        cols = manifest.properties.get("schema.columns") or ()
-        spec = tuple(
-            (f["source"], f.get("transform", "identity"), f.get("name"))
-            for f in manifest.partition_spec
-        )
-        order = tuple(
-            (f["source"], f.get("direction", "asc"), f.get("null-order"))
-            for f in manifest.sort_order
-        )
-        return [
-            CompactionPlan(
-                file_group=g,
-                snapshot_id=manifest.snapshot_id,
-                branch=branch,
-                starting_sequence_number=manifest.sequence_number,
-                schema_id=manifest.schema_id,
-                schema_columns=tuple(cols),
-                partition_spec=spec,
-                spec_id=manifest.default_spec_id,
-                sort_order=order,
-            )
-            for g in groups
-        ]
+        groups = PlanStrategy.from_config(self.config.planning).run(tasks)
+        return plans_from_groups(manifest, groups, branch)
 
     def _effective_sort(self, plan: CompactionPlan) -> list[SortField] | None:
         """Explicit Compaction(sort_order=...) wins; otherwise the
@@ -399,6 +361,7 @@ class Compaction:
         out_root: str | None = None,
         to_branch: str | None = None,
         where=None,
+        groups_per_commit: int | None = None,
     ) -> tuple[Manifest, CompactionStats]:
         """Entry point 1 against a CATALOG table: load -> plan -> rewrite
         -> CAS commit with retry (the reference's managed flow,
@@ -412,29 +375,76 @@ class Compaction:
         the branch's snapshot is the planning base, the new snapshot
         lands with the branch ref moved atomically, and main stays
         untouched until a fast-forward publishes — write-audit-publish
-        with maintenance running on the audit branch."""
+        with maintenance running on the audit branch.
 
-        def _load() -> Manifest:
-            if to_branch:
-                return catalog.load_table_ref(table_name, to_branch)
-            return catalog.load_table(table_name)
+        ``groups_per_commit`` turns on partial progress (Iceberg's
+        ``partial-progress.enabled``): commit after every that many
+        file groups instead of once at the end.  At 100 TB a plan can
+        hold hundreds of groups and run for hours; a single terminal
+        failure (spot-instance loss, a poison file) must not discard
+        every completed group's work.  On failure the exception
+        propagates but all previously committed batches stay durable
+        and visible, and a re-run plans only the remaining
+        fragmentation.  Safe because file groups are disjoint and
+        rewrite_files validates per-file liveness, not head equality —
+        batch k commits cleanly on top of batch k-1's new head.  The
+        trade-off: readers may observe intermediate snapshots (each
+        fully consistent), and history grows by one snapshot per batch.
+        """
+        from iceberg_compaction_spark.sources.ingest import _load_head
 
-        manifest = _load()
-        plans = self.plan(manifest, branch=to_branch or "main", where=where)
-        results, stats = self.execute_plans(manifest, plans, out_root)
-        if not results:
-            return manifest, stats
-
-        def attempt() -> Manifest:
-            current = _load()
-            new = self.commit_manager.rewrite_files(
-                current, results, branch=to_branch or "main"
+        manifest = _load_head(catalog, table_name, to_branch)
+        branch = to_branch or "main"
+        plans = self.plan(manifest, branch=branch, where=where)
+        stats = CompactionStats()
+        committed = manifest
+        step = max(1, groups_per_commit or len(plans))
+        base = out_root or os.path.join(
+            manifest.table_root, f"compacted-{manifest.next_snapshot()}"
+        )
+        for i in range(0, len(plans), step):
+            results, batch_stats = self.execute_plans(
+                manifest,
+                plans[i : i + step],
+                os.path.join(base, f"batch-{i}") if groups_per_commit else base,
             )
-            if to_branch:
-                return catalog.commit_table(
-                    table_name, current.snapshot_id, new, to_branch=to_branch
-                )
-            return catalog.commit_table(table_name, current.snapshot_id, new)
+            if not results:
+                continue
+            committed = self.commit_catalog(
+                catalog,
+                table_name,
+                lambda current: self.commit_manager.rewrite_files(
+                    current, results, branch=branch
+                ),
+                to_branch,
+            )
+            stats.merge(batch_stats)
+        return committed, stats
+
+    def commit_catalog(
+        self,
+        catalog,
+        table_name: str,
+        build,
+        to_branch: str | None = None,
+    ) -> Manifest | None:
+        """The one catalog commit of every catalog entry point: load the
+        target ref's head (``to_branch``, default main), ``build`` the
+        new manifest from it, CAS-commit it with ``commit_table`` —
+        retried on conflict, each attempt against a freshly loaded
+        head — and record the commit metrics.  ``build`` returning
+        None means nothing is left to commit on that head (a race took
+        the work away); the result is then None and no commit counts."""
+        from iceberg_compaction_spark.sources.ingest import _load_head
+
+        def attempt() -> Manifest | None:
+            current = _load_head(catalog, table_name, to_branch)
+            new = build(current)
+            if new is None:
+                return None
+            return catalog.commit_table(
+                table_name, current.snapshot_id, new, to_branch=to_branch
+            )
 
         t0 = time.monotonic()
         try:
@@ -442,81 +452,46 @@ class Compaction:
         except Exception:
             self.metrics.commit_failed_counter.inc()
             raise
-        self.metrics.commit_counter.inc()
-        self.metrics.commit_duration.observe((time.monotonic() - t0) * 1000)
-        return new, stats
-
-
-    def compact_catalog_partial(
-        self,
-        catalog,
-        table_name: str,
-        out_root: str | None = None,
-        groups_per_commit: int = 1,
-        to_branch: str | None = None,
-    ) -> tuple[Manifest, CompactionStats]:
-        """Partial-progress compaction: commit after every
-        ``groups_per_commit`` file groups instead of once at the end —
-        Iceberg's ``partial-progress.enabled``.
-
-        At 100 TB a plan can hold hundreds of groups and run for hours;
-        a single terminal failure (spot-instance loss, a poison file)
-        must not discard every completed group's work.  Each batch's
-        commit is an independent CAS with retry; on failure the
-        exception propagates but all previously committed batches stay
-        durable and visible, and a re-run plans only the remaining
-        fragmentation (compaction is idempotent toward its fixed
-        point).  Safe because file groups are disjoint and
-        rewrite_files validates per-file liveness, not head equality —
-        batch k commits cleanly on top of batch k-1's new head.
-
-        Trade-off vs the single commit: readers may observe
-        intermediate snapshots (each is fully consistent), and history
-        grows by one snapshot per batch — exactly Iceberg's documented
-        partial-progress behavior.
-        """
-        def _load() -> Manifest:
-            if to_branch:
-                return catalog.load_table_ref(table_name, to_branch)
-            return catalog.load_table(table_name)
-
-        manifest = _load()
-        plans = self.plan(manifest, branch=to_branch or "main")
-        stats = CompactionStats()
-        committed = manifest
-        if not plans:
-            return manifest, stats
-        base = out_root or os.path.join(
-            manifest.table_root, f"compacted-{manifest.next_snapshot()}"
-        )
-        for i in range(0, len(plans), max(1, groups_per_commit)):
-            batch = plans[i : i + max(1, groups_per_commit)]
-            results, bstats = self.execute_plans(
-                committed, batch, os.path.join(base, f"batch-{i}")
-            )
-            if not results:
-                continue
-
-            def attempt() -> Manifest:
-                current = _load()
-                new = self.commit_manager.rewrite_files(
-                    current, results, branch=to_branch or "main"
-                )
-                if to_branch:
-                    return catalog.commit_table(
-                        table_name,
-                        current.snapshot_id,
-                        new,
-                        to_branch=to_branch,
-                    )
-                return catalog.commit_table(
-                    table_name, current.snapshot_id, new
-                )
-
-            committed = self.commit_manager.commit_with_retry(attempt)
+        if new is not None:
             self.metrics.commit_counter.inc()
-            stats.merge(bstats)
-        return committed, stats
+            self.metrics.commit_duration.observe((time.monotonic() - t0) * 1000)
+        return new
+
+
+def plans_from_groups(
+    manifest: Manifest, groups, branch: str = "main"
+) -> list[CompactionPlan]:
+    """The one plan builder of every entry point (``Compaction.plan``,
+    :class:`AutoCompaction`, ``service.maintain``): each group gets the
+    table's scan state (``Manifest.stamp_group``) and becomes a plan
+    pinned to ``manifest`` — snapshot, sequence number, schema id and
+    columns, current partition spec and declared sort order, i.e. the
+    state the rewrite writes under and the commit validates against.
+    ``branch`` is the ref the rewrite targets (the reference plans
+    per-branch, ``core/src/compaction/mod.rs:97,1307-1336``)."""
+    cols = tuple(manifest.properties.get("schema.columns") or ())
+    spec = tuple(
+        (f["source"], f.get("transform", "identity"), f.get("name"))
+        for f in manifest.partition_spec
+    )
+    order = tuple(
+        (f["source"], f.get("direction", "asc"), f.get("null-order"))
+        for f in manifest.sort_order
+    )
+    return [
+        CompactionPlan(
+            file_group=manifest.stamp_group(g),
+            snapshot_id=manifest.snapshot_id,
+            branch=branch,
+            starting_sequence_number=manifest.sequence_number,
+            schema_id=manifest.schema_id,
+            schema_columns=cols,
+            partition_spec=spec,
+            spec_id=manifest.default_spec_id,
+            sort_order=order,
+        )
+        for g in groups
+    ]
 
 
 @dataclass
@@ -535,78 +510,32 @@ class AutoCompaction:
     # validation, retry, plan concurrency); planning comes from `config`
     engine_config: CompactionConfig = field(default_factory=CompactionConfig)
 
-    def compact(
-        self, manifest: Manifest, out_root: str | None = None
-    ) -> tuple[Manifest, CompactionStats, "AutoPlanReport"]:
-        from dataclasses import replace
-
+    def plan(self, manifest: Manifest, branch: str = "main") -> "AutoPlanReport":
+        """Select and group candidates from ONE scan of ``manifest``;
+        the report's plans come out of :func:`plans_from_groups`, stamped
+        exactly like manual plans."""
         from iceberg_compaction_spark.plans.auto import (
             AutoCompactionConfig,
             AutoCompactionPlanner,
         )
 
-        cfg = self.config or AutoCompactionConfig()
-        report = AutoCompactionPlanner(cfg).plan_report(
-            scan_data_files(manifest),
-            snapshot_id=manifest.snapshot_id,
-            starting_sequence_number=manifest.sequence_number,
+        report = AutoCompactionPlanner(
+            self.config or AutoCompactionConfig()
+        ).plan_report(scan_data_files(manifest))
+        report.plans = plans_from_groups(
+            manifest, [p.file_group for p in report.plans], branch
         )
-        order = tuple(
-            (f["source"], f.get("direction", "asc"), f.get("null-order"))
-            for f in manifest.sort_order
-        )
-        for p in report.plans:
-            p.schema_id = manifest.schema_id
-            p.sort_order = order
-        if not report.plans:
-            return manifest, CompactionStats(), report
+        return report
 
-        inner = Compaction(
-            spark=self.spark,
-            config=replace(
-                self.engine_config,
-                planning=cfg._planning(report.selected_strategy),
-            ),
-            sort_order=self.sort_order,
-        )
+    def compact(
+        self, manifest: Manifest, out_root: str | None = None
+    ) -> tuple[Manifest, CompactionStats, "AutoPlanReport"]:
+        report = self.plan(manifest)
+        inner = Compaction(self.spark, self.engine_config, self.sort_order)
         new_manifest, stats = inner.compact_plans(
             manifest, report.plans, out_root
         )
         return new_manifest, stats, report
-
-
-def _write_parquet_dir(df, out_dir: str) -> list[str]:
-    """Write ``df`` as a directory of parquet files, FileIO-routed.
-
-    Spark-native schemes use the distributed writer (the scale path —
-    N output files, zstd, no driver materialization).  Other schemes
-    (``mem://`` tests, connector-less stores) write ONE file through
-    the FileIO seam from a driver-side Arrow collect — acceptable for
-    the position-delete artifacts this helper serves (positions, not
-    data).  Returns the sorted written file paths."""
-    from iceberg_compaction_spark.sources.fileio import fileio_for
-    from iceberg_compaction_spark.sources.scan import spark_native_paths
-
-    if spark_native_paths([out_dir]):
-        df.write.mode("overwrite").option("compression", "zstd").parquet(
-            out_dir
-        )
-        return sorted(
-            os.path.join(out_dir, n)
-            for n in os.listdir(out_dir)
-            if n.endswith(".parquet") and not n.startswith("_")
-        )
-    import io as _io
-
-    import pyarrow.parquet as pq
-
-    fio = fileio_for(out_dir)
-    fio.makedirs(out_dir)
-    path = f"{out_dir.rstrip('/')}/part-00000.parquet"
-    buf = _io.BytesIO()
-    pq.write_table(df.toArrow(), buf, compression="zstd")
-    fio.write_bytes(path, buf.getvalue())
-    return [path]
 
 
 @dataclass
@@ -615,56 +544,6 @@ class DeleteRewriteStats:
     output_delete_files: int = 0
     positions_kept: int = 0
     dangling_positions_dropped: int = 0
-
-
-def _write_v3_dv_file(spark, merged, out_path: str):
-    """Write a merged ``(path, pos)`` frame as ONE puffin deletion-
-    vector file with one blob per referenced data file — the v3
-    representation of position deletes (spec: at most one DV per data
-    file; reference reader behavior datafusion_processor.rs:632-653).
-
-    Scale shape: the Roaring bitmap for each data file is serialized on
-    EXECUTORS (``applyInPandas`` grouped by file path — positions never
-    exist as a driver-side list); the driver collects only the compact
-    blobs (bounded by bitmap size, the same metadata scale a manifest
-    already is) and concatenates them into the container.
-
-    Returns ``(referenced_paths, total_positions)``.
-    """
-    import pandas as pd
-
-    from iceberg_compaction_spark.sources.puffin import (
-        write_puffin_from_blobs,
-    )
-    from iceberg_compaction_spark.sources.scan import (
-        HIDDEN_FILE_PATH,
-        HIDDEN_POS,
-    )
-
-    def _ser(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        from iceberg_compaction_spark.sources.puffin import (
-            dv_blob_serialize,
-        )
-
-        positions = sorted({int(x) for x in pdf[HIDDEN_POS]})
-        return pd.DataFrame(
-            {
-                "ref": [str(pdf[HIDDEN_FILE_PATH].iloc[0])],
-                "blob": [dv_blob_serialize(positions)],
-                "card": [len(positions)],
-            }
-        )
-
-    rows = (
-        merged.groupBy(HIDDEN_FILE_PATH)
-        .applyInPandas(_ser, "ref string, blob binary, card long")
-        .collect()
-    )
-    blobs = sorted(
-        (r["ref"], bytes(r["blob"]), int(r["card"])) for r in rows
-    )
-    write_puffin_from_blobs(out_path, blobs)
-    return {b[0] for b in blobs}, sum(b[2] for b in blobs)
 
 
 def upgrade_format_version(catalog, table_name: str, to_version: int = 3):
@@ -731,16 +610,14 @@ def rewrite_position_deletes(
     """
     from pyspark.sql import functions as F
 
-    from iceberg_compaction_spark.plans.datamodel import (
-        POSITION_DELETE,
-        DeleteFile,
-    )
+    from iceberg_compaction_spark.plans.datamodel import POSITION_DELETE
     from iceberg_compaction_spark.sources.puffin import is_puffin_file
     from iceberg_compaction_spark.sources.scan import (
         HIDDEN_FILE_PATH,
         HIDDEN_POS,
         _normalize_path,
         normalize_path_str,
+        read_parquet_files,
     )
 
     v3 = manifest.format_version >= 3
@@ -769,8 +646,6 @@ def rewrite_position_deletes(
         normalize_path_str(t.data_file_path): t.data_file_path
         for t in manifest.data_files
     }
-    from iceberg_compaction_spark.sources.scan import read_parquet_files
-
     raw = None
     if pos_files:
         raw = read_parquet_files(spark, sorted(pos_files)).select(
@@ -791,84 +666,67 @@ def rewrite_position_deletes(
             [(p,) for p in sorted(live)], f"{HIDDEN_FILE_PATH} string"
         )
     )
-    merged = (
-        raw.join(live_df, HIDDEN_FILE_PATH)  # drop dangling references
-        .dropDuplicates([HIDDEN_FILE_PATH, HIDDEN_POS])
-        .repartitionByRange(1, HIDDEN_FILE_PATH, HIDDEN_POS)
-        .sortWithinPartitions(HIDDEN_FILE_PATH, HIDDEN_POS)
+    merged = raw.join(live_df, HIDDEN_FILE_PATH).dropDuplicates(
+        [HIDDEN_FILE_PATH, HIDDEN_POS]
+    )  # the join drops dangling references
+    new, kept_positions = _replace_position_deletes(
+        spark,
+        manifest,
+        merged,
+        out_dir,
+        "pos-deletes",
+        max(d.sequence_number for d in consolidated.values()),
+        lambda d: d.content == POSITION_DELETE and d.path in consolidated,
     )
-    max_seq = max(d.sequence_number for d in consolidated.values())
-
-    from iceberg_compaction_spark.sources.fileio import fileio_for
-
-    if v3:
-        # v3 output representation: ONE puffin deletion-vector file,
-        # one Roaring blob per data file, serialized on executors
-        out_dir = out_dir or manifest.table_root
-        fileio_for(out_dir).makedirs(out_dir)
-        dv_path = os.path.join(
-            out_dir, f"dv-{uuid.uuid4().hex[:12]}.puffin"
-        )
-        refs, kept_positions = _write_v3_dv_file(spark, merged, dv_path)
-        written = [dv_path] if refs else []
-        referenced = {dv_path: refs} if refs else {}
-        new_deletes = {
-            dv_path: DeleteFile(
-                path=dv_path,
-                content=POSITION_DELETE,
-                file_size_in_bytes=fileio_for(dv_path).size(dv_path),
-                record_count=kept_positions,
-                sequence_number=max_seq,
-            )
-        }
-    else:
-        out_dir = out_dir or os.path.join(
-            manifest.table_root, f"pos-deletes-{uuid.uuid4().hex[:12]}"
-        )
-        written = _write_parquet_dir(merged, out_dir)
-
-        import pyarrow.parquet as pq
-
-        # which data files each output references (manifest-scale
-        # collect: one row per distinct referenced path)
-        referenced = {}
-        kept_positions = 0
-        new_deletes = {}
-        for w in written:
-            fio = fileio_for(w)
-            with fio.open_input(w) as fh:
-                t = pq.read_table(fh, columns=[HIDDEN_FILE_PATH])
-            referenced[w] = set(t.column(HIDDEN_FILE_PATH).to_pylist())
-            kept_positions += t.num_rows
-            new_deletes[w] = DeleteFile(
-                path=w,
-                content=POSITION_DELETE,
-                file_size_in_bytes=fio.size(w),
-                record_count=t.num_rows,
-                sequence_number=max_seq,
-            )
-    stats.output_delete_files = len(written)
+    stats.output_delete_files = int(kept_positions > 0)
     stats.positions_kept = kept_positions
     # distinct positions that referenced no live data file
     stats.dangling_positions_dropped = distinct_total - kept_positions
+    return new, stats
 
+
+def _replace_position_deletes(
+    spark, manifest, positions, out_dir, stem, sequence_number, detach
+) -> "tuple[Manifest, int]":
+    """Write ``positions`` (``(path, pos)`` rows) as ONE position-delete
+    file under ``out_dir`` (default: the table root) — a puffin deletion
+    vector on v3, a sorted parquet trail on v2 — and return a
+    row-preserving copy of ``manifest`` in which the ``detach``-selected
+    delete files are dropped and the new file attaches to every data
+    file it references, plus the number of positions written."""
+    from iceberg_compaction_spark.plans.datamodel import (
+        POSITION_DELETE,
+        DeleteFile,
+    )
+    from iceberg_compaction_spark.sources.fileio import fileio_for
+    from iceberg_compaction_spark.sources.ingest import (
+        _write_position_artifact,
+    )
+    from iceberg_compaction_spark.sources.scan import normalize_path_str
+
+    ext = ".puffin" if manifest.format_version >= 3 else ".parquet"
+    path = os.path.join(
+        out_dir or manifest.table_root, f"{stem}-{uuid.uuid4().hex[:12]}{ext}"
+    )
+    refs, n = _write_position_artifact(spark, manifest, positions, path)
+    written = (
+        DeleteFile(
+            path=path,
+            content=POSITION_DELETE,
+            file_size_in_bytes=fileio_for(path).size(path),
+            record_count=n,
+            sequence_number=sequence_number,
+        )
+        if n
+        else None  # nothing written: refs is empty too
+    )
     new = Manifest.from_dict(manifest.to_dict())
     new.operation = "replace"  # live rows unchanged: streams skip it
     for t in new.data_files:
-        norm = normalize_path_str(t.data_file_path)
-        kept = [
-            d
-            for d in t.deletes
-            if not (
-                d.content == POSITION_DELETE
-                and (d.path in consolidated)
-            )
-        ]
-        for w, refs in referenced.items():
-            if norm in refs:
-                kept.append(new_deletes[w])
-        t.deletes = kept
-    return new, stats
+        t.deletes = [d for d in t.deletes if not detach(d)]
+        if normalize_path_str(t.data_file_path) in refs:
+            t.deletes.append(written)
+    return new, n
 
 
 @dataclass
@@ -893,9 +751,11 @@ def convert_equality_deletes(
     applied in the scan.  This action pays the join ONCE: scan the data
     files with hidden (path, pos) columns, inner-join the (broadcast)
     delete keys under the strictly-lower-sequence rule, and write the
-    matched positions as one sorted position-delete parquet.  The new
-    snapshot carries only position deletes for the converted content —
-    same live rows (pinned in tests), cheaper every read after.
+    matched positions as one sorted position-delete parquet (a puffin
+    deletion vector on v3; run :func:`rewrite_position_deletes`
+    afterwards to fold it into pre-existing DVs).  The new snapshot
+    carries only position deletes for the converted content — same
+    live rows (pinned in tests), cheaper every read after.
 
     Scale shape: one distributed scan of the affected data files; the
     delete-key side broadcasts (delete files are small next to data —
@@ -909,12 +769,7 @@ def convert_equality_deletes(
     """
     from pyspark.sql import functions as F
 
-    from iceberg_compaction_spark.operators.mor import EqualityDeleteTable
-    from iceberg_compaction_spark.plans.datamodel import (
-        EQUALITY_DELETE,
-        POSITION_DELETE,
-        DeleteFile,
-    )
+    from iceberg_compaction_spark.plans.datamodel import EQUALITY_DELETE
     from iceberg_compaction_spark.sources.scan import (
         HIDDEN_FILE_PATH,
         HIDDEN_POS,
@@ -997,78 +852,15 @@ def convert_equality_deletes(
         )
         matched = hit if matched is None else matched.unionByName(hit)
 
-    merged = (
-        matched.dropDuplicates([HIDDEN_FILE_PATH, HIDDEN_POS])
-        .repartitionByRange(1, HIDDEN_FILE_PATH, HIDDEN_POS)
-        .sortWithinPartitions(HIDDEN_FILE_PATH, HIDDEN_POS)
+    new, n = _replace_position_deletes(
+        spark,
+        manifest,
+        matched.dropDuplicates([HIDDEN_FILE_PATH, HIDDEN_POS]),
+        out_dir,
+        "eq-convert",
+        max(d.sequence_number for d in eq_files.values()),
+        lambda d: d.content == EQUALITY_DELETE,
     )
-
-    import pyarrow.parquet as pq
-
-    from iceberg_compaction_spark.sources.scan import normalize_path_str
-
-    max_seq = max(d.sequence_number for d in eq_files.values())
-    new_deletes = {}
-    referenced = {}
-    if manifest.format_version >= 3:
-        # v3 output representation: the converted positions become a
-        # puffin DELETION VECTOR (one Roaring blob per data file,
-        # executor-serialized) — a v3 table maintained by this engine
-        # emits DVs, not v2-style parquet position deletes (reference
-        # reader contract: datafusion_processor.rs:632-653).  Run
-        # rewrite_position_deletes afterwards to fold these into any
-        # pre-existing DVs (one DV per data file).
-        from iceberg_compaction_spark.sources.fileio import fileio_for
-
-        out_dir = out_dir or manifest.table_root
-        fileio_for(out_dir).makedirs(out_dir)
-        dv_path = os.path.join(
-            out_dir, f"eq-convert-dv-{uuid.uuid4().hex[:12]}.puffin"
-        )
-        refs, n_positions = _write_v3_dv_file(spark, merged, dv_path)
-        if refs:
-            referenced[dv_path] = refs
-            new_deletes[dv_path] = DeleteFile(
-                path=dv_path,
-                content=POSITION_DELETE,
-                file_size_in_bytes=fileio_for(dv_path).size(dv_path),
-                record_count=n_positions,
-                sequence_number=max_seq,
-            )
-    else:
-        from iceberg_compaction_spark.sources.fileio import fileio_for
-
-        out_dir = out_dir or os.path.join(
-            manifest.table_root, f"eq-convert-{uuid.uuid4().hex[:12]}"
-        )
-        written = _write_parquet_dir(merged, out_dir)
-        for w in written:
-            fio = fileio_for(w)
-            with fio.open_input(w) as fh:
-                t = pq.read_table(fh, columns=[HIDDEN_FILE_PATH])
-            refs = set(t.column(HIDDEN_FILE_PATH).to_pylist())
-            if not refs:
-                continue
-            referenced[w] = refs
-            new_deletes[w] = DeleteFile(
-                path=w,
-                content=POSITION_DELETE,
-                file_size_in_bytes=fio.size(w),
-                record_count=t.num_rows,
-                sequence_number=max_seq,
-            )
-    stats.output_position_files = len(new_deletes)
-    stats.positions_written = sum(
-        d.record_count for d in new_deletes.values()
-    )
-
-    new = Manifest.from_dict(manifest.to_dict())
-    new.operation = "replace"  # live rows unchanged: streams skip it
-    for t in new.data_files:
-        norm = normalize_path_str(t.data_file_path)
-        kept = [d for d in t.deletes if d.content != EQUALITY_DELETE]
-        for w, refs in referenced.items():
-            if norm in refs:
-                kept.append(new_deletes[w])
-        t.deletes = kept
+    stats.output_position_files = int(n > 0)
+    stats.positions_written = n
     return new, stats

@@ -110,13 +110,7 @@ class AutoCompactionPlanner:
     def __init__(self, config: AutoCompactionConfig | None = None) -> None:
         self.config = config or AutoCompactionConfig()
 
-    def plan_report(
-        self,
-        tasks: list[FileScanTask] | None,
-        snapshot_id: int = 0,
-        branch: str = "main",
-        starting_sequence_number: int = 0,
-    ) -> AutoPlanReport:
+    def plan_report(self, tasks: list[FileScanTask] | None) -> AutoPlanReport:
         """Single-pass: stats + candidate selection + grouping.
 
         ``tasks=None`` models a branch with no snapshot.
@@ -139,16 +133,7 @@ class AutoCompactionPlanner:
 
         def build(pcfg: CompactionPlanningConfig) -> AutoPlanReport:
             groups = PlanStrategy.from_config(pcfg).run(list(tasks))
-            plans = [
-                CompactionPlan(
-                    file_group=g,
-                    snapshot_id=snapshot_id,
-                    branch=branch,
-                    starting_sequence_number=starting_sequence_number,
-                )
-                for g in groups
-                if g.data_files
-            ]
+            plans = [CompactionPlan(file_group=g) for g in groups if g.data_files]
             return self._report_from_plans(
                 pcfg.compaction_type, plans, total_data_bytes, AutoPlanReason.RECOMMENDED
             )

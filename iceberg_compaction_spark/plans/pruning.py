@@ -62,7 +62,12 @@ def collect_file_stats(path: str) -> tuple[dict[str, tuple], dict[str, int]]:
     from iceberg_compaction_spark.sources.fileio import open_input
 
     with open_input(path) as fh:
-        md = pq.read_metadata(fh)
+        return footer_stats(pq.read_metadata(fh))
+
+
+def footer_stats(md) -> tuple[dict[str, tuple], dict[str, int]]:
+    """:func:`collect_file_stats` over an already-read footer
+    (``pyarrow.parquet.FileMetaData``)."""
     bounds: dict[str, list] = {}
     nulls: dict[str, int] = {}
     dead: set[str] = set()

@@ -33,6 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from iceberg_compaction_spark.compaction import (
+    AutoCompaction,
     Compaction,
     CompactionStats,
     DeleteRewriteStats,
@@ -43,10 +44,9 @@ from iceberg_compaction_spark.compaction import (
 from iceberg_compaction_spark.config import CompactionConfig
 from iceberg_compaction_spark.plans.auto import (
     AutoCompactionConfig,
-    AutoCompactionPlanner,
     AutoPlanReport,
 )
-from iceberg_compaction_spark.sources.manifest import Manifest, scan_data_files
+from iceberg_compaction_spark.sources.manifest import Manifest
 from iceberg_compaction_spark.sources.manifest_rewrite import (
     ManifestRewriteStats,
     rewrite_manifests,
@@ -139,105 +139,66 @@ def maintain(
     branch target (it would commit on main) and expiration/orphan
     cleanup keep their global, ref-protecting semantics.
     """
-    from dataclasses import replace
+    from iceberg_compaction_spark.compaction import upgrade_format_version
+    from iceberg_compaction_spark.plans.datamodel import POSITION_DELETE
+    from iceberg_compaction_spark.sources.ingest import _load_head
+    from iceberg_compaction_spark.sources.puffin import is_puffin_file
 
     policy = policy or MaintenancePolicy()
+    branch = to_branch or "main"
+    engine = Compaction(spark=spark, config=policy.engine)
 
-    def _load() -> Manifest:
-        if to_branch:
-            return catalog.load_table_ref(table_name, to_branch)
-        return catalog.load_table(table_name)
-
-    def _commit(current: Manifest, new: Manifest) -> Manifest:
-        if to_branch:
-            return catalog.commit_table(
-                table_name, current.snapshot_id, new, to_branch=to_branch
-            )
-        return catalog.commit_table(table_name, current.snapshot_id, new)
-
-    before = _load().snapshot_id
+    before = _load_head(catalog, table_name, to_branch).snapshot_id
     if policy.upgrade_to_version is not None:
         if to_branch:
             raise ValueError(
                 "upgrade_to_version is a whole-table structural change; "
                 "run it without to_branch"
             )
-        from iceberg_compaction_spark.compaction import (
-            upgrade_format_version,
-        )
-
         upgrade_format_version(catalog, table_name, policy.upgrade_to_version)
-    manifest = _load()
+    manifest = _load_head(catalog, table_name, to_branch)
 
-    report = AutoCompactionPlanner(policy.auto).plan_report(
-        scan_data_files(manifest),
-        snapshot_id=manifest.snapshot_id,
-        starting_sequence_number=manifest.sequence_number,
-    )
-    for p in report.plans:
-        p.schema_id = manifest.schema_id
-        p.branch = to_branch or "main"
-    stats = CompactionStats()
-    if report.plans:
-        engine = Compaction(
-            spark=spark,
-            config=replace(
-                policy.engine,
-                planning=policy.auto._planning(report.selected_strategy),
+    # All three row-set steps commit through the engine's ONE catalog
+    # commit (Compaction.commit_catalog): a concurrent writer racing the
+    # long Spark job turns into a re-load + retry instead of aborting
+    # the whole maintenance pass.
+    report = AutoCompaction(spark, policy.auto).plan(manifest, branch)
+    results, stats = engine.execute_plans(manifest, report.plans)
+    if results:
+        engine.commit_catalog(
+            catalog,
+            table_name,
+            lambda current: engine.commit_manager.rewrite_files(
+                current, results, branch=branch
             ),
+            to_branch,
         )
-        results, stats = engine.execute_plans(manifest, report.plans)
-        if results:
-
-            def attempt() -> Manifest:
-                current = _load()
-                new = engine.commit_manager.rewrite_files(
-                    current, results, branch=to_branch or "main"
-                )
-                return _commit(current, new)
-
-            engine.commit_manager.commit_with_retry(attempt)
-
-    # Both delete-maintenance steps commit through the SAME retry loop
-    # the compaction step uses: a concurrent writer racing the long
-    # Spark job turns into a re-load + re-run instead of aborting the
-    # whole maintenance pass (conflicts are rare; the retry price is
-    # paid only when one actually happens).
-    from iceberg_compaction_spark.commit import CommitManager
-    from iceberg_compaction_spark.plans.datamodel import POSITION_DELETE
-    from iceberg_compaction_spark.sources.puffin import is_puffin_file
-
-    mgr = CommitManager()
 
     eqc = EqConvertStats()
-    if policy.convert_eq_deletes:
-        eq_live = {
-            d.path
-            for t in _load().data_files
-            for d in t.deletes
-            if d.content != POSITION_DELETE
-        }
-        if eq_live:
-            holder: list[EqConvertStats] = []
+    if policy.convert_eq_deletes and any(
+        d.content != POSITION_DELETE
+        for t in _load_head(catalog, table_name, to_branch).data_files
+        for d in t.deletes
+    ):
+        eq_stats: list[EqConvertStats] = []
 
-            def attempt_eq() -> Manifest:
-                current = _load()
-                new_m, stats_eq = convert_equality_deletes(spark, current)
-                holder.append(stats_eq)
-                if not stats_eq.input_equality_files:
-                    return current  # raced away: nothing left to convert
-                new_m.snapshot_id = current.snapshot_id + 1
-                return _commit(current, new_m)
+        def build_eq(current: Manifest) -> Manifest | None:
+            new_m, stats_eq = convert_equality_deletes(spark, current)
+            eq_stats.append(stats_eq)
+            if not stats_eq.input_equality_files:
+                return None  # raced away: nothing left to convert
+            new_m.snapshot_id = current.snapshot_id + 1
+            return new_m
 
-            mgr.commit_with_retry(attempt_eq)
-            eqc = holder[-1]
+        engine.commit_catalog(catalog, table_name, build_eq, to_branch)
+        eqc = eq_stats[-1]
 
     drw = DeleteRewriteStats()
     if policy.rewrite_deletes_min_files:
         # gate on driver-scale manifest metadata BEFORE the Spark job:
         # below the threshold the consolidation would only be abandoned
         # (its output files left orphaned) — never start it
-        cur_m = _load()
+        cur_m = _load_head(catalog, table_name, to_branch)
         pos_live = {
             d.path
             for t in cur_m.data_files
@@ -250,12 +211,11 @@ def maintain(
         if len(pos_live) >= policy.rewrite_deletes_min_files or (
             cur_m.format_version >= 3 and pos_live
         ):
-            holder_d: list[DeleteRewriteStats] = []
+            drw_stats: list[DeleteRewriteStats] = []
 
-            def attempt_drw() -> Manifest:
-                current = _load()
+            def build_drw(current: Manifest) -> Manifest | None:
                 new_m, stats_d = rewrite_position_deletes(spark, current)
-                holder_d.append(stats_d)
+                drw_stats.append(stats_d)
                 worth = stats_d.input_delete_files >= (
                     policy.rewrite_deletes_min_files
                 ) or (
@@ -263,12 +223,12 @@ def maintain(
                     and stats_d.input_delete_files
                 )
                 if not (worth and stats_d.output_delete_files):
-                    return current  # raced below the threshold
+                    return None  # raced below the threshold
                 new_m.snapshot_id = current.snapshot_id + 1
-                return _commit(current, new_m)
+                return new_m
 
-            mgr.commit_with_retry(attempt_drw)
-            drw = holder_d[-1]
+            engine.commit_catalog(catalog, table_name, build_drw, to_branch)
+            drw = drw_stats[-1]
 
     # manifest-metadata hygiene BEFORE expiration: the rewrite's replace
     # snapshot supersedes the fragmented one, and the expire pass that
@@ -315,12 +275,8 @@ def maintain(
     # their source — expiring or sweeping here could unlink data the
     # owning table still reads; Iceberg's procedures refuse the same
     # way, and maintain treats that as "nothing to do", not a failure)
-    gc_off = (
-        str(
-            (_load().properties or {}).get("gc.enabled", "true")
-        ).lower()
-        == "false"
-    )
+    props = _load_head(catalog, table_name, to_branch).properties or {}
+    gc_off = str(props.get("gc.enabled", "true")).lower() == "false"
     expired = (
         []
         if gc_off
@@ -344,7 +300,7 @@ def maintain(
         orphans = orphans + catalog.remove_orphan_metadata(
             table_name, older_than_s=policy.orphan_older_than_s
         )
-    after = _load().snapshot_id
+    after = _load_head(catalog, table_name, to_branch).snapshot_id
     return MaintenanceReport(
         table=table_name,
         snapshot_before=before,

@@ -1392,11 +1392,9 @@ def rollback_table(
         # a later equality delete must still apply above this snapshot
         new.sequence_number = max(cur.sequence_number, old.sequence_number) + 1
         new.operation = "overwrite"
-        if to_branch:
-            return catalog.commit_table(
-                name, cur.snapshot_id, new, to_branch=to_branch
-            )
-        return catalog.commit_table(name, cur.snapshot_id, new)
+        return catalog.commit_table(
+            name, cur.snapshot_id, new, to_branch=to_branch
+        )
 
     return CommitManager().commit_with_retry(attempt)
 
@@ -1495,11 +1493,9 @@ def cherry_pick(
                     t, sequence_number=new.sequence_number, deletes=[]
                 )
             )
-        if to_branch:
-            return catalog.commit_table(
-                name, cur.snapshot_id, new, to_branch=to_branch
-            )
-        return catalog.commit_table(name, cur.snapshot_id, new)
+        return catalog.commit_table(
+            name, cur.snapshot_id, new, to_branch=to_branch
+        )
 
     return CommitManager().commit_with_retry(attempt)
 
@@ -1604,11 +1600,9 @@ def _cherry_pick_overwrite(
                 t, sequence_number=new.sequence_number, deletes=[]
             )
         )
-    if to_branch:
-        return catalog.commit_table(
-            name, cur.snapshot_id, new, to_branch=to_branch
-        )
-    return catalog.commit_table(name, cur.snapshot_id, new)
+    return catalog.commit_table(
+        name, cur.snapshot_id, new, to_branch=to_branch
+    )
 
 
 def _check_gc_enabled(properties: dict, what: str) -> None:

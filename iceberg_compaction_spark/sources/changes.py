@@ -322,10 +322,7 @@ def diff_files(old: Manifest, new: Manifest) -> FileDiff:
 
 
 def _group(tasks, m: Manifest) -> FileGroup:
-    g = FileGroup.from_tasks(list(tasks))
-    g.format_version = m.format_version
-    g.schema_fields = m.schema_fields or None
-    return g
+    return m.stamp_group(FileGroup.from_tasks(list(tasks)))
 
 
 def snapshot_rows(spark: SparkSession, manifest: Manifest) -> DataFrame:

@@ -757,18 +757,7 @@ def _partitions_for_manifest(manifest) -> list[_FilePartition]:
         )
         for f in (manifest.schema_fields or [])
     )
-    from iceberg_compaction_spark.sources.schema_evo import (
-        NAME_MAPPING_PROP,
-        parse_name_mapping,
-    )
-
-    nmap = tuple(
-        sorted(
-            parse_name_mapping(
-                (manifest.properties or {}).get(NAME_MAPPING_PROP)
-            ).items()
-        )
-    )
+    nmap = tuple(sorted((manifest.name_mapping() or {}).items()))
     parts = []
     for t in manifest.data_files:
         pos, dvs, eq = [], [], []

@@ -220,11 +220,9 @@ def _commit(catalog, table_name: str, cur, new, to_branch: str | None):
     where newly added data files get their ``first_row_id`` assigned
     (spec: the commit assigns row ids from the table's next-row-id)."""
     new.assign_row_ids()
-    if to_branch:
-        return catalog.commit_table(
-            table_name, cur.snapshot_id, new, to_branch=to_branch
-        )
-    return catalog.commit_table(table_name, cur.snapshot_id, new)
+    return catalog.commit_table(
+        table_name, cur.snapshot_id, new, to_branch=to_branch
+    )
 
 
 def _assert_unique_keys(df: DataFrame, keys: list[str], what: str) -> int:
@@ -470,24 +468,71 @@ def delete_where(
 def _matched_scan(spark, cur) -> DataFrame:
     """CURRENT-snapshot MOR scan carrying hidden ``(file, pos)`` row
     identity — the input every predicate DML statement shares."""
-    group = FileGroup.from_tasks(cur.data_files)
-    group.format_version = cur.format_version
-    group.schema_fields = cur.schema_fields or None
-    group.name_mapping = _manifest_name_mapping(cur)
+    group = cur.stamp_group(FileGroup.from_tasks(cur.data_files))
     return rewrite_file_group(spark, group, keep_file_pos=True)
+
+
+def _write_v3_dv_file(spark, merged, out_path: str):
+    """Write a merged ``(path, pos)`` frame as ONE puffin deletion-
+    vector file with one blob per referenced data file — the v3
+    representation of position deletes (spec: at most one DV per data
+    file; reference reader behavior datafusion_processor.rs:632-653).
+
+    Scale shape: the Roaring bitmap for each data file is serialized on
+    EXECUTORS (``applyInPandas`` grouped by file path — positions never
+    exist as a driver-side list); the driver collects only the compact
+    blobs (bounded by bitmap size, the same metadata scale a manifest
+    already is) and concatenates them into the container.
+
+    Returns ``(referenced_paths, total_positions)``.
+    """
+    import pandas as pd
+
+    from iceberg_compaction_spark.sources.puffin import (
+        write_puffin_from_blobs,
+    )
+    from iceberg_compaction_spark.sources.scan import (
+        HIDDEN_FILE_PATH,
+        HIDDEN_POS,
+    )
+
+    def _ser(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        from iceberg_compaction_spark.sources.puffin import (
+            dv_blob_serialize,
+        )
+
+        positions = sorted({int(x) for x in pdf[HIDDEN_POS]})
+        return pd.DataFrame(
+            {
+                "ref": [str(pdf[HIDDEN_FILE_PATH].iloc[0])],
+                "blob": [dv_blob_serialize(positions)],
+                "card": [len(positions)],
+            }
+        )
+
+    rows = (
+        merged.groupBy(HIDDEN_FILE_PATH)
+        .applyInPandas(_ser, "ref string, blob binary, card long")
+        .collect()
+    )
+    blobs = sorted(
+        (r["ref"], bytes(r["blob"]), int(r["card"])) for r in rows
+    )
+    write_puffin_from_blobs(out_path, blobs)
+    return {b[0] for b in blobs}, sum(b[2] for b in blobs)
 
 
 def _write_position_artifact(spark, cur, matched_pos, path):
     """Write the position-delete artifact for ``matched_pos`` rows
-    (``(sys_hidden_file_path, sys_hidden_pos)``): a parquet trail on v2,
-    a puffin deletion vector on v3.  Returns ``(refs, n)`` — referenced
-    data-file paths and total positions; the artifact file is removed
-    when nothing matched."""
+    (``(sys_hidden_file_path, sys_hidden_pos)``): a parquet trail sorted
+    by ``(path, pos)`` on v2, a puffin deletion vector on v3 — the one
+    position-delete writer of DML and delete maintenance.  Returns
+    ``(refs, n)`` — referenced data-file paths and total positions; the
+    artifact file is removed when nothing matched."""
     from iceberg_compaction_spark.sources.fileio import fileio_for, open_input
 
+    fileio_for(path).makedirs(os.path.dirname(path))
     if cur.format_version >= 3:
-        from iceberg_compaction_spark.compaction import _write_v3_dv_file
-
         refs, n = _write_v3_dv_file(spark, matched_pos, path)
     else:
         from iceberg_compaction_spark.sources.scan import (
@@ -1147,10 +1192,7 @@ def overwrite_partitions(
 def read_table_mor(spark: SparkSession, manifest: Manifest) -> DataFrame:
     """Read a manifest table with all its delete files applied — the
     query-engine view of a MOR table (what compaction materializes)."""
-    group = FileGroup.from_tasks(manifest.data_files)
-    group.format_version = manifest.format_version
-    group.schema_fields = manifest.schema_fields or None
-    group.name_mapping = _manifest_name_mapping(manifest)
+    group = manifest.stamp_group(FileGroup.from_tasks(manifest.data_files))
     return rewrite_file_group(spark, group)
 
 
@@ -1196,22 +1238,5 @@ def read_table_mor_with_lineage(
         raise ValueError(
             "row-lineage read of an empty table (no data files)"
         )
-    group = FileGroup.from_tasks(manifest.data_files)
-    group.format_version = manifest.format_version
-    group.schema_fields = manifest.schema_fields or None
-    group.name_mapping = _manifest_name_mapping(manifest)
+    group = manifest.stamp_group(FileGroup.from_tasks(manifest.data_files))
     return rewrite_file_group_with_lineage(spark, group)
-
-
-def _manifest_name_mapping(manifest: Manifest) -> dict | None:
-    from iceberg_compaction_spark.sources.schema_evo import (
-        NAME_MAPPING_PROP,
-        parse_name_mapping,
-    )
-
-    return (
-        parse_name_mapping(
-            (manifest.properties or {}).get(NAME_MAPPING_PROP)
-        )
-        or None
-    )

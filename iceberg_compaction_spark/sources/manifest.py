@@ -27,6 +27,7 @@ from iceberg_compaction_spark.plans.datamodel import (
     EQUALITY_DELETE,
     POSITION_DELETE,
     DeleteFile,
+    FileGroup,
     FileScanTask,
 )
 
@@ -241,16 +242,14 @@ class Manifest:
                 continue
             path = os.path.join(root, name)
             size = os.path.getsize(path)
-            nrows = pq.read_metadata(path).num_rows
-            bounds, nulls = (
-                pr.collect_file_stats(path) if collect_stats else ({}, {})
-            )
+            md = pq.read_metadata(path)
+            bounds, nulls = pr.footer_stats(md) if collect_stats else ({}, {})
             tasks.append(
                 FileScanTask(
                     data_file_path=path,
                     length=size,
                     file_size_in_bytes=size,
-                    record_count=nrows,
+                    record_count=md.num_rows,
                     sequence_number=sequence_number,
                     column_bounds=bounds,
                     null_counts=nulls,
@@ -614,6 +613,29 @@ class Manifest:
             )
             for f in self.partition_spec
         ]
+
+    def name_mapping(self) -> dict | None:
+        """The parsed ``schema.name-mapping.default`` property (field
+        id -> alias names for id-less import files); None when unset."""
+        from iceberg_compaction_spark.sources.schema_evo import (
+            NAME_MAPPING_PROP,
+            parse_name_mapping,
+        )
+
+        return (
+            parse_name_mapping((self.properties or {}).get(NAME_MAPPING_PROP))
+            or None
+        )
+
+    def stamp_group(self, group: FileGroup) -> FileGroup:
+        """Stamp the table state a group's scan resolves columns with —
+        format version (v3 reads deletion vectors and row lineage),
+        current schema fields and name mapping — onto ``group``; the one
+        place every scan of this table builds its groups."""
+        group.format_version = self.format_version
+        group.schema_fields = self.schema_fields or None
+        group.name_mapping = self.name_mapping()
+        return group
 
     # ---- queries -----------------------------------------------------------
 

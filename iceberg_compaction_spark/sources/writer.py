@@ -174,13 +174,14 @@ def list_written_files(out_dir: str, sequence_number: int = 0) -> list[FileScanT
                 continue
             path = os.path.join(root, name)
             size = os.path.getsize(path)
-            bounds, nulls = _pruning.collect_file_stats(path)
+            md = pq.read_metadata(path)  # one footer read per output
+            bounds, nulls = _pruning.footer_stats(md)
             tasks.append(
                 FileScanTask(
                     data_file_path=path,
                     length=size,
                     file_size_in_bytes=size,
-                    record_count=pq.read_metadata(path).num_rows,
+                    record_count=md.num_rows,
                     sequence_number=sequence_number,
                     partition=part,
                     # footer-only stats: compacted output stays prunable

@@ -236,10 +236,15 @@ def test_partial_progress_commits_per_batch(spark, warehouse, six_files):
     n_groups = len(c.plan(six_files))
     assert n_groups >= 2  # the premise: multiple groups
 
-    final, stats = c.compact_catalog_partial(warehouse, "t", groups_per_commit=1)
+    final, stats = c.compact_catalog(warehouse, "t", groups_per_commit=1)
     # one snapshot per committed batch on top of v1
     history = warehouse.table_history("t")
     assert len(history) == 1 + n_groups
+    # every batch commit goes through the one catalog commit: counted
+    # AND timed
+    assert c.metrics.commit_counter.value == n_groups
+    assert c.metrics.commit_duration.n == n_groups
+    assert c.metrics.commit_failed_counter.value == 0
     assert final.snapshot_id == history[-1]
     assert stats.input_files_count == 6
     live = warehouse.load_table("t")
@@ -267,16 +272,30 @@ def test_partial_progress_failure_keeps_completed_batches(
 
     monkeypatch.setattr(Compaction, "rewrite", flaky)
     with pytest.raises(RuntimeError, match="injected"):
-        c.compact_catalog_partial(warehouse, "t", groups_per_commit=1)
+        c.compact_catalog(warehouse, "t", groups_per_commit=1)
 
     # batch 1 committed and durable; everything still consistent
     assert warehouse.table_history("t") == [1, 2]
     live = warehouse.load_table("t")
     assert spark.read.parquet(*live.paths()).count() == 60
+    assert c.metrics.commit_counter.value == 1
+
+    # a failing batch COMMIT is recorded as a failed commit
+    monkeypatch.setattr(Compaction, "rewrite", real_rewrite)
+    real_commit = warehouse.commit_table
+
+    def catalog_down(*args, **kwargs):
+        raise RuntimeError("injected: catalog down")
+
+    monkeypatch.setattr(warehouse, "commit_table", catalog_down)
+    with pytest.raises(RuntimeError, match="catalog down"):
+        c.compact_catalog(warehouse, "t", groups_per_commit=1)
+    assert c.metrics.commit_failed_counter.value == 1
+    assert warehouse.table_history("t") == [1, 2]
 
     # recovery: a fresh run finishes the remaining groups
-    monkeypatch.setattr(Compaction, "rewrite", real_rewrite)
-    final, _ = c.compact_catalog_partial(warehouse, "t", groups_per_commit=1)
+    monkeypatch.setattr(warehouse, "commit_table", real_commit)
+    final, _ = c.compact_catalog(warehouse, "t", groups_per_commit=1)
     assert spark.read.parquet(*final.paths()).count() == 60
     assert len(final.data_files) < 6
 

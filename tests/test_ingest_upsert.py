@@ -195,7 +195,7 @@ def test_upsert_racing_upsert_resequences_on_retry(spark, table):
     real_commit = table.commit_table
     injected = []
 
-    def racing_commit(name, expected, new):
+    def racing_commit(name, expected, new, to_branch=None):
         if not injected:
             injected.append(True)
             # a concurrent writer beats us to the head with the same key
@@ -206,7 +206,7 @@ def test_upsert_racing_upsert_resequences_on_retry(spark, table):
                 spark.createDataFrame([(3, "winner-mid")], ["id", "val"]),
                 keys=["id"],
             )
-        return real_commit(name, expected, new)
+        return real_commit(name, expected, new, to_branch=to_branch)
 
     table.commit_table = racing_commit
     try:
@@ -877,14 +877,16 @@ def test_update_where_racing_compaction_retries_on_fresh_positions(
     fired = {"n": 0}
     real_commit = type(table).commit_table
 
-    def racing_commit(self, name, expected, new_manifest):
+    def racing_commit(self, name, expected, new_manifest, to_branch=None):
         if fired["n"] == 0:
             fired["n"] = 1
             # compaction sneaks in and wins the CAS (rewrites all files)
             Compaction(
                 spark=spark, config=CompactionConfig.full()
             ).compact_catalog(table, "t")
-        return real_commit(self, name, expected, new_manifest)
+        return real_commit(
+            self, name, expected, new_manifest, to_branch=to_branch
+        )
 
     monkeypatch.setattr(type(table), "commit_table", racing_commit)
     ing.update_where(spark, table, "t", "id % 3 = 0", {"val": "upper(val)"})

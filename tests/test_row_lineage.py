@@ -11,10 +11,13 @@ import pyarrow.parquet as pq
 import pytest
 
 from iceberg_compaction_spark.compaction import (
+    AutoCompaction,
     Compaction,
     upgrade_format_version,
 )
 from iceberg_compaction_spark.config import CompactionConfig
+from iceberg_compaction_spark.plans.auto import AutoCompactionConfig
+from iceberg_compaction_spark.service import MaintenancePolicy, maintain
 from iceberg_compaction_spark.sources.catalog import FileCatalog
 from iceberg_compaction_spark.sources.ingest import (
     read_table_mor,
@@ -94,30 +97,31 @@ def test_upgrade_assigns_lineage(spark, tmp_path):
     assert df.select("_row_id").distinct().count() == 60
 
 
-def test_compaction_preserves_row_ids(spark, tmp_path):
-    """THE invariant: the (business key -> _row_id) mapping is
-    identical before and after compaction, even though files and
-    positions changed — the rewrite materialized the ids."""
-    cat = _make_table(tmp_path)
-    before = {
+def _row_ids(spark, manifest) -> dict:
+    return {
         r["id"]: r["_row_id"]
-        for r in read_table_mor_with_lineage(spark, cat.load_table("t"))
+        for r in read_table_mor_with_lineage(spark, manifest)
         .select("id", "_row_id")
         .collect()
     }
+
+
+def test_compaction_preserves_row_ids(spark, tmp_path):
+    """THE invariant: the (business key -> _row_id) mapping is
+    identical before and after compaction, even though files and
+    positions changed — the rewrite materialized the ids.  Holds for
+    every entry point: manual, AutoCompaction and maintain share one
+    plan builder, so all of them see the v3 format version."""
+    cat = _make_table(tmp_path)
+    before = _row_ids(spark, cat.load_table("t"))
     c = Compaction(spark, CompactionConfig.small_files())
     m2, stats = c.compact_catalog(cat, "t")
     assert stats.input_files_count == 3
     assert len(m2.data_files) == 1
     # rewritten file is marked as materializing its ids
     assert m2.data_files[0].first_row_id == -1
-    after = {
-        r["id"]: r["_row_id"]
-        for r in read_table_mor_with_lineage(spark, cat.load_table("t"))
-        .select("id", "_row_id")
-        .collect()
-    }
-    assert after == before
+    assert _row_ids(spark, cat.load_table("t")) == before
+
     # the parquet itself carries the reserved columns...
     cols = pq.read_schema(m2.data_files[0].data_file_path).names
     assert "_row_id" in cols and "_last_updated_sequence_number" in cols
@@ -125,6 +129,29 @@ def test_compaction_preserves_row_ids(spark, tmp_path):
     plain = read_table_mor(spark, cat.load_table("t"))
     assert "_row_id" not in plain.columns
     assert plain.count() == 60
+
+    auto_cfg = AutoCompactionConfig(min_small_files_count=2)
+    m3, stats, _ = AutoCompaction(spark, auto_cfg).compact(
+        _make_table(tmp_path / "auto").load_table("t")
+    )
+    assert stats.input_files_count == 3
+    assert [t.first_row_id for t in m3.data_files] == [-1]
+    assert _row_ids(spark, m3) == before
+
+    cat = _make_table(tmp_path / "maintain")
+    maintain(spark, cat, "t", MaintenancePolicy(auto=auto_cfg))
+    m4 = cat.load_table("t")
+    assert [t.first_row_id for t in m4.data_files] == [-1]
+    assert _row_ids(spark, m4) == before
+
+    # the README's v2 -> v3 migration: one maintain pass upgrades
+    # (assigning ids in file order, so id == _row_id) and compacts
+    cat = _make_table(tmp_path / "upgrade", files=6, fv=2)
+    maintain(spark, cat, "t", MaintenancePolicy(upgrade_to_version=3))
+    m5 = cat.load_table("t")
+    assert m5.format_version == 3
+    assert [t.first_row_id for t in m5.data_files] == [-1]
+    assert _row_ids(spark, m5) == {i: i for i in range(120)}
 
 
 def test_appends_after_compaction_continue_ids(spark, tmp_path):

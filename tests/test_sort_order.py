@@ -46,17 +46,33 @@ def test_manifest_roundtrip_and_plan_carries_order(spark, tmp_path):
 
 
 def test_compaction_applies_declared_order(spark, tmp_path):
-    m = _table(tmp_path)
+    """Every entry point sorts by the declared order: manual plans,
+    AutoCompaction and maintain are stamped by the same plan builder."""
+    from iceberg_compaction_spark.compaction import AutoCompaction
+    from iceberg_compaction_spark.plans.auto import AutoCompactionConfig
+    from iceberg_compaction_spark.service import MaintenancePolicy, maintain
+    from iceberg_compaction_spark.sources.catalog import FileCatalog
+
+    auto_cfg = AutoCompactionConfig(min_small_files_count=2)
     c = Compaction(spark, CompactionConfig.small_files())
-    new_m, stats = c.compact(m)
+    manual, stats = c.compact(_table(tmp_path / "manual"))
     assert stats.output_files_count >= 1
-    for t in new_m.data_files:
-        if "compacted" not in t.data_file_path:
-            continue
-        ids = pq.read_table(t.data_file_path, columns=["id"]).column(
-            "id"
-        ).to_pylist()
-        assert ids == sorted(ids, reverse=True)  # desc within each file
+    auto, stats, _ = AutoCompaction(spark, auto_cfg).compact(
+        _table(tmp_path / "auto")
+    )
+    assert stats.output_files_count >= 1
+    cat = FileCatalog(warehouse=str(tmp_path / "wh"))
+    cat.create_table("t", _table(tmp_path / "maintain"))
+    report = maintain(spark, cat, "t", MaintenancePolicy(auto=auto_cfg))
+    assert report.stats.output_files_count >= 1
+    for new_m in (manual, auto, cat.load_table("t")):
+        outs = [t for t in new_m.data_files if "compacted" in t.data_file_path]
+        assert outs
+        for t in outs:
+            ids = pq.read_table(t.data_file_path, columns=["id"]).column(
+                "id"
+            ).to_pylist()
+            assert ids == sorted(ids, reverse=True)  # desc within each file
 
 
 def test_explicit_sort_order_wins(spark, tmp_path):
