@@ -37,6 +37,7 @@ from iceberg_compaction_spark.operators.validator import validate_row_counts
 from iceberg_compaction_spark.plans.datamodel import CompactionPlan
 from iceberg_compaction_spark.plans.strategy import PlanStrategy
 from iceberg_compaction_spark.sources.manifest import Manifest, scan_data_files
+from iceberg_compaction_spark.sources.scan import read_listed_parquet
 from iceberg_compaction_spark.sources.writer import (
     SortField,
     estimate_row_size,
@@ -206,7 +207,9 @@ class Compaction:
                 t.partition = tuple(g.partition)
         res = RewriteResult(plan=plan, added_files=added)
         if self.config.enable_validate_compaction:
-            out_df = self.spark.read.parquet(*[t.data_file_path for t in added])
+            out_df = read_listed_parquet(
+                self.spark, [t.data_file_path for t in added]
+            )
             v = validate_row_counts(rewrite_file_group(self.spark, g), out_df)
             res.input_rows, res.output_rows = v.input_rows, v.output_rows
         m = self.metrics
@@ -819,8 +822,8 @@ def convert_equality_deletes(
     matched = None
     for keys_t, group in sorted(by_keys.items()):
         keys = list(keys_t)
-        raw = spark.read.option("mergeSchema", "true").parquet(
-            *[d.path for d in group]
+        raw = read_listed_parquet(
+            spark, [d.path for d in group], mergeSchema="true"
         )
         seq_map = F.create_map(
             *[

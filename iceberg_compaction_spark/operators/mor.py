@@ -42,6 +42,7 @@ from iceberg_compaction_spark.sources.scan import (
     HIDDEN_POS,
     HIDDEN_SEQ,
     read_data_files,
+    read_listed_parquet,
 )
 
 # Deletes smaller than this (bytes, on-disk) are force-broadcast; bigger
@@ -283,7 +284,7 @@ def _read_eq_delete_file(
                 if HIDDEN_SEQ in fsch.names:
                     st = st.add(StructField(HIDDEN_SEQ, LongType(), True))
                 enable_field_id_reads(spark)
-                return spark.read.schema(st).parquet(path)
+                return read_listed_parquet(spark, [path], schema=st)
     from iceberg_compaction_spark.sources.scan import read_parquet_files
 
     return read_parquet_files(spark, [path])

@@ -48,6 +48,19 @@ def _tokens(col: Column) -> Column:
     return F.split(F.trim(F.lower(col)), "\\s+")
 
 
+def _stage_tokens(df: DataFrame, name: str, text_col: str) -> DataFrame:
+    """``df`` plus the token array of ``text_col`` as column ``name``,
+    which the caller drops again — so an input column of that name
+    (Spark matches names case-insensitively) would be overwritten and
+    lost: refuse it instead."""
+    if any(c.lower() == name.lower() for c in df.columns):
+        raise ValueError(
+            f"input column {name!r} collides with the token column this "
+            "operator stages; rename it first"
+        )
+    return df.withColumn(name, _tokens(F.col(text_col)))
+
+
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     c = F.col(text_col)
     ws = F.when(F.trim(c) == "", F.lit(0)).otherwise(F.size(_tokens(c)))
@@ -79,7 +92,7 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     more than once.  Values unchanged — same tokens, same counts.
     """
     c = F.col(text_col)
-    staged = df.withColumn("__toks_q", _tokens(c))
+    staged = _stage_tokens(df, "__toks_q", text_col)
     n = F.length(c)
     n_safe = F.greatest(n, F.lit(1))
     # char-class counts via translate (char-map lookup, ~3x faster than a
@@ -131,8 +144,8 @@ def with_language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     The token array is STAGED once (r16 s3, guide §4.2): each profile's
     ``filter`` HOF embedded its own ``_tokens`` expression, so every row
     tokenized len(LANG_PROFILES) times — interpreted HOFs get no
-    cross-expression CSE.  Staged, it tokenizes once and the six filters
-    read the column.  Values unchanged.
+    cross-expression CSE.  Staged, it tokenizes once and the four profile
+    filters read the column.  Values unchanged.
     """
     def _hits(words: list[str]) -> Column:
         return F.size(
@@ -140,7 +153,7 @@ def with_language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
         )
 
     scores = [_hits(words) for _, words in LANG_PROFILES]
-    out = df.withColumn("__toks_l", _tokens(F.col(text_col)))
+    out = _stage_tokens(df, "__toks_l", text_col)
     for (name, _), s in zip(LANG_PROFILES, scores):
         out = out.withColumn(f"score_{name}", s.cast("int"))
     # argmax with first-wins tie-break

@@ -806,6 +806,7 @@ def position_deletes_df(spark: "SparkSession", manifest: "Manifest") -> "DataFra
     import pyspark.sql.functions as F
 
     from iceberg_compaction_spark.sources.puffin import is_puffin_file
+    from iceberg_compaction_spark.sources.scan import read_listed_parquet
 
     dels: dict = {}
     for t in manifest.data_files:
@@ -818,7 +819,7 @@ def position_deletes_df(spark: "SparkSession", manifest: "Manifest") -> "DataFra
         if not is_puffin_file(p):
             by_seq.setdefault(int(d.sequence_number), []).append(p)
     for seq, paths in sorted(by_seq.items()):
-        df = spark.read.parquet(*paths)
+        df = read_listed_parquet(spark, paths)
         cols = set(df.columns)
         fp = (
             "sys_hidden_file_path"

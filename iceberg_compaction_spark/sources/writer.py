@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from iceberg_compaction_spark.config import WriterConfig
 from iceberg_compaction_spark.plans import pruning as _pruning
 from iceberg_compaction_spark.plans.datamodel import FileScanTask
+from iceberg_compaction_spark.sources.scan import read_listed_parquet
 
 
 @dataclass(frozen=True)
@@ -245,7 +246,7 @@ def enforce_size_band(
     # round-robin imbalance can't shave off a tiny remainder file
     width = max(1, total // max(rows, 1))
     fixed_dir = out_dir.rstrip("/") + "-sized"
-    df = spark.read.parquet(*[t.data_file_path for t in tasks])
+    df = read_listed_parquet(spark, [t.data_file_path for t in tasks])
     cfg2 = replace(
         config,
         estimated_row_size_bytes=max(1, int(width * 0.9)),

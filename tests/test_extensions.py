@@ -38,6 +38,18 @@ def test_quality(spark, docs):
     assert 0 <= r[1]["quality_ppm"] <= 1000000
 
 
+@pytest.mark.parametrize(
+    "op, staged",
+    [(tx.with_quality, "__toks_q"), (tx.with_language_id, "__toks_l")],
+)
+def test_token_staging_column_collision_raises(spark, docs, op, staged):
+    # the staged token column is dropped on the way out, so an input
+    # column of the same name (in any case) would vanish from the output
+    for name in (staged, staged.upper()):
+        with pytest.raises(ValueError, match=staged):
+            op(docs.withColumn(name, F.lit(1)))
+
+
 def test_langid_scores(spark, docs):
     r = {x["doc_id"]: x for x in tx.with_language_id(docs).collect()}
     assert r[1]["score_en"] == 2  # 'the' x2; no other profile words
@@ -100,9 +112,15 @@ def test_minhash_signatures_match_hof_formulation(spark, docs):
     """The codegen-agg signature formulation (r16 s3) is value-identical
     to the replaced staged-HOF form — min over the same affine images of
     the same md5 hashes — including single-shingle (short-text fallback)
-    docs."""
+    docs: one shorter than the shingle size, an empty one and a null
+    one, the rows an explode + group-by could lose."""
     from pyspark.sql import functions as F
 
+    docs = docs.unionByName(
+        spark.createDataFrame(
+            [(6, "two words"), (7, ""), (8, None)], docs.schema
+        )
+    )
     sets = dd.shingle_sets(docs)
     hashed = sets.select(
         F.col("doc_id"), F.transform(F.col("shs"), dd.md5_hash64).alias("__hs")
@@ -125,7 +143,8 @@ def test_minhash_signatures_match_hof_formulation(spark, docs):
     got = sorted(map(tuple, dd.minhash_signatures(docs).collect()))
     want = sorted(map(tuple, old.collect()))
     assert got == want
-    assert len(got) == docs.count()  # no doc vanishes in the group-by
+    # no doc vanishes in the group-by
+    assert sorted(r[0] for r in got) == list(range(1, 9))
 
 
 def test_minhash_lsh_matches_exact_on_high_sim(spark, docs):
