@@ -278,7 +278,7 @@ def upsert(
     if op_col is not None:
         deletes = changes.where(F.col(op_col) == DELETE_OP).drop(op_col)
         upserts = changes.where(F.col(op_col) != DELETE_OP).drop(op_col)
-    _assert_unique_keys(changes, keys, "changes batch")
+    n_changes = _assert_unique_keys(changes, keys, "changes batch")
 
     from iceberg_compaction_spark.commit import CommitConflict  # noqa: F401
 
@@ -295,7 +295,11 @@ def upsert(
         if deletes is None
         else upserts.select(*keys).unionByName(deletes.select(*keys))
     )
-    has_upserts = upserts.limit(1).count() > 0
+    # without op_col every change row is an upsert, so the uniqueness
+    # check's row count already answers this
+    has_upserts = (
+        n_changes > 0 if op_col is None else upserts.limit(1).count() > 0
+    )
     if has_upserts:
         _write_single_parquet(
             _stamp_field_ids_like_table(upserts, current), data_path

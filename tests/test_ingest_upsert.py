@@ -87,6 +87,17 @@ def test_sequential_upserts_last_wins(spark, table):
     assert len(got) == 10
 
 
+def test_empty_upsert_batch_writes_no_data_file(spark, table):
+    empty = spark.createDataFrame([], "id long, val string")
+    m = upsert(spark, table, "t", empty, keys=["id"])
+    root = os.path.dirname(m.data_files[0].data_file_path)
+    assert not [f for f in os.listdir(root) if f.endswith("-data.parquet")]
+    assert [t.data_file_path for t in m.data_files] == [
+        os.path.join(root, "base.parquet")
+    ]
+    assert len(_rows(spark, table)) == 10
+
+
 def test_upsert_rejects_ambiguous_batch(spark, table):
     dup = spark.createDataFrame([(1, "a"), (1, "b")], ["id", "val"])
     with pytest.raises(ValueError, match="duplicate keys"):

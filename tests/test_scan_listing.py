@@ -1,5 +1,6 @@
 """The manifest-listed scan seam (sources/scan.py ``read_listed_parquet``):
-local path lists resolve with no Spark listing job, the rows are those
+local path lists resolve with no Spark job (no listing job, and no
+schema-inference job when no schema is given), the rows are those
 of a plain ``spark.read.parquet``, and the caller's listing threshold
 reads the same afterwards — unset, user-set, after a failed read, and
 after concurrent scans."""
@@ -16,6 +17,7 @@ import iceberg_compaction_spark
 from iceberg_compaction_spark.sources.scan import (
     LISTING_THRESHOLD_KEY,
     read_data_files,
+    read_listed_parquet,
 )
 
 N_FILES = 40  # above Spark's default listing threshold of 32
@@ -59,10 +61,18 @@ def test_local_scan_starts_no_listing_job(spark, paths):
     spark.read.schema("id long, v long").parquet(*paths)
     assert _next_job_id(spark) > before
 
-    before = _next_job_id(spark)
-    df = read_data_files(spark, paths, schema_fields=FIELDS)
-    assert _next_job_id(spark) == before
-    assert _rows(df) == _rows(spark.read.parquet(*paths))
+    want = _rows(spark.read.parquet(*paths))
+    # with a requested schema, and without one: the schema then comes
+    # from one footer read on the driver, not an inference job
+    for read in (
+        lambda: read_data_files(spark, paths, schema_fields=FIELDS),
+        lambda: read_data_files(spark, paths),
+        lambda: read_listed_parquet(spark, paths),
+    ):
+        before = _next_job_id(spark)
+        df = read()
+        assert _next_job_id(spark) == before
+        assert _rows(df) == want
 
 
 @pytest.mark.parametrize("user_value", [None, "7"])
@@ -127,10 +137,80 @@ def _starred_parquet_calls(tree):
             yield node.lineno
 
 
+def _chain(node):
+    """The attribute names along a call chain, and the node it starts
+    from (``spark.read.option(k, v).parquet`` -> read, option, parquet;
+    ``spark``)."""
+    names = []
+    while True:
+        if isinstance(node, ast.Call):
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        elif isinstance(node, ast.Subscript):
+            node = node.value
+        else:
+            return names, node
+
+
+def _parquet_reads(tree):
+    """Lines of ``….parquet(...)`` calls that are not writes.  A write
+    chain passes ``.write``/``.writeStream``, itself or through a name
+    whose every binding in the module (rebinds of the name to itself
+    aside) is a write chain."""
+    bound: dict[str, list] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign):
+            for target in node.targets:
+                if isinstance(target, ast.Name):
+                    bound.setdefault(target.id, []).append(node.value)
+
+    def is_write(node, seen=frozenset()):
+        names, root = _chain(node)
+        if {"write", "writeStream"} & set(names):
+            return True
+        if not isinstance(root, ast.Name) or root.id in seen:
+            return False
+        origins = [
+            v
+            for v in bound.get(root.id, [])
+            if not (
+                isinstance(_chain(v)[1], ast.Name)
+                and _chain(v)[1].id == root.id
+            )
+        ]
+        return bool(origins) and all(
+            is_write(v, seen | {root.id}) for v in origins
+        )
+
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and not is_write(node.func.value)
+        ):
+            yield node.lineno
+
+
+# modules whose parquet reads must all go through the seam, starred or
+# not, so that no single-file read (a delete file, a re-read) brings
+# back its own listing or schema-inference job
+SEAM_ONLY = (
+    "sources",
+    "operators/mor.py",
+    "operators/validator.py",
+    "compaction.py",
+    "service.py",
+)
+
+
 def test_explicit_path_reads_go_through_the_seam():
     """``read_listed_parquet`` is the only place a path list becomes a
     Spark scan: a ``….parquet(*paths)`` anywhere else in the package
-    would bring back the distributed listing job."""
+    would bring back the distributed listing job, and any parquet read
+    in the scan-building modules its own schema-inference job."""
     pkg = pathlib.Path(iceberg_compaction_spark.__file__).parent
     seam = pkg / "sources" / "scan.py"
     offenders = [
@@ -140,5 +220,34 @@ def test_explicit_path_reads_go_through_the_seam():
         for line in _starred_parquet_calls(ast.parse(py.read_text(), str(py)))
     ]
     assert offenders == []
-    # the guard itself still sees the seam's own call
+    guarded = sorted(
+        py
+        for entry in SEAM_ONLY
+        for py in (
+            (pkg / entry).rglob("*.py")
+            if (pkg / entry).is_dir()
+            else [pkg / entry]
+        )
+        if py != seam
+    )
+    assert len(guarded) > len(SEAM_ONLY)
+    offenders = [
+        f"{py.relative_to(pkg)}:{line}"
+        for py in guarded
+        for line in _parquet_reads(ast.parse(py.read_text(), str(py)))
+    ]
+    assert offenders == []
+    # the guards themselves still see the seam's own call, tell a read
+    # from a write, and follow a writer through its rebinds
     assert list(_starred_parquet_calls(ast.parse(seam.read_text())))
+    assert list(_parquet_reads(ast.parse(seam.read_text())))
+    sample = ast.parse(
+        "df.write.parquet(p)\n"
+        "w = df.write.mode('overwrite')\n"
+        "w = w.option('compression', 'zstd')\n"
+        "w.parquet(p)\n"
+        "spark.read.parquet(p)\n"
+        "r = spark.read.option('mergeSchema', 'true')\n"
+        "r.parquet(p)\n"
+    )
+    assert sorted(_parquet_reads(sample)) == [5, 7]

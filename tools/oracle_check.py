@@ -10,9 +10,10 @@ names, and an order-insensitive value hash.  Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
