@@ -37,7 +37,10 @@ from iceberg_compaction_spark.operators.validator import validate_row_counts
 from iceberg_compaction_spark.plans.datamodel import CompactionPlan
 from iceberg_compaction_spark.plans.strategy import PlanStrategy
 from iceberg_compaction_spark.sources.manifest import Manifest, scan_data_files
-from iceberg_compaction_spark.sources.scan import read_listed_parquet
+from iceberg_compaction_spark.sources.scan import (
+    driver_frame,
+    read_listed_parquet,
+)
 from iceberg_compaction_spark.sources.writer import (
     SortField,
     estimate_row_size,
@@ -665,8 +668,8 @@ def rewrite_position_deletes(
         raw = dvf if raw is None else raw.unionByName(dvf)
     distinct_total = raw.dropDuplicates([HIDDEN_FILE_PATH, HIDDEN_POS]).count()
     live_df = F.broadcast(
-        spark.createDataFrame(
-            [(p,) for p in sorted(live)], f"{HIDDEN_FILE_PATH} string"
+        driver_frame(
+            spark, [(p,) for p in sorted(live)], f"{HIDDEN_FILE_PATH} string"
         )
     )
     merged = raw.join(live_df, HIDDEN_FILE_PATH).dropDuplicates(

@@ -17,6 +17,12 @@ subtrees.
         result = pairs.collect()
     # shingle/signature storage released here
 
+The curation flagship (``registry.q_pipeline_curation_full``) scopes its
+pair generation this way: connected components materializes the pairs
+(``localCheckpoint``) before the scope exits, and neither its labels nor
+the kept documents read the cached frames, so a long-lived session
+running it again and again keeps no cache entries behind.
+
 Mirrors the reference's per-run materialization of hash-join build sides
 inside DataFusion (freed when the plan finishes) rather than its
 process-global caches.

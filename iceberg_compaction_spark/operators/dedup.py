@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from iceberg_compaction_spark.operators.text import normalize_text
+from iceberg_compaction_spark.sources.scan import driver_frame
 
 MERSENNE_P = 2147483647  # 2^31-1, modulus for the affine hash family
 DEFAULT_NUM_HASHES = 8
@@ -717,8 +718,10 @@ def connected_components(
     (the common case — LSH-band survivors are a vanishing fraction of the
     corpus), edges are collected once and resolved with an in-memory
     union-find, costing one Spark job instead of ~2 per fixpoint round.
-    Above the ceiling the distributed algorithm below runs with no driver
-    bound:
+    The labels come back as an Arrow-built JVM relation
+    (:func:`~iceberg_compaction_spark.sources.scan.driver_frame`), so
+    the queries that read them run no Python worker.  Above the ceiling
+    the distributed algorithm below runs with no driver bound:
 
     Min-label propagation with pointer jumping: each round a node takes
     the min of (its label, its neighbors' labels, its LABEL'S label).
@@ -771,9 +774,10 @@ def connected_components(
             for r in half_edges.where(F.col("src") != F.col("dst")).collect()
         ]
         comp = _union_find_components(half)
-        spark = pairs.sparkSession
-        return spark.createDataFrame(
-            sorted(comp.items()), schema="doc_id long, component_id long"
+        return driver_frame(
+            pairs.sparkSession,
+            sorted(comp.items()),
+            "doc_id long, component_id long",
         )
     edges = (
         half_edges.union(

@@ -41,6 +41,7 @@ from iceberg_compaction_spark.sources.scan import (
     HIDDEN_FILE_PATH,
     HIDDEN_POS,
     HIDDEN_SEQ,
+    driver_frame,
     read_data_files,
     read_listed_parquet,
 )
@@ -202,9 +203,7 @@ def puffin_dv_frame(spark: SparkSession, puffin_paths: list[str]) -> DataFrame:
             for ref, positions in sorted(read_puffin_dvs(pf).items())
             for pos in positions
         ]
-        return spark.createDataFrame(
-            rows, "__dv_path string, __dv_pos long"
-        )
+        return driver_frame(spark, rows, "__dv_path string, __dv_pos long")
 
     metas = []
     for pf in puffin_paths:
@@ -219,8 +218,8 @@ def puffin_dv_frame(spark: SparkSession, puffin_paths: list[str]) -> DataFrame:
                     _local(blob["properties"]["referenced-data-file"]),
                 )
             )
-    meta_df = spark.createDataFrame(
-        metas, "__pf string, __off long, __len long, __ref string"
+    meta_df = driver_frame(
+        spark, metas, "__pf string, __off long, __len long, __ref string"
     ).repartition(max(1, len(metas)))
 
     def _expand(batches):

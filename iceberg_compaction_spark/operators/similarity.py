@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from iceberg_compaction_spark.sources.scan import driver_frame
+
 
 def as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -216,7 +218,7 @@ def brute_force_topk(
         )
     )
     if not q_rows:
-        return spark.createDataFrame([], out_fields + ", rank int")
+        return driver_frame(spark, [], out_fields + ", rank int")
 
     qids_np = np.asarray([q for q, _ in q_rows], dtype=np.int64)
     Q = np.asarray(
@@ -782,7 +784,7 @@ def lsh_topk(
         )
     )
     if not q_rows:
-        return spark.createDataFrame([], out_fields + ", rank int")
+        return driver_frame(spark, [], out_fields + ", rank int")
 
     # anchor matrix (2 * npairs, d): rows 2i / 2i+1 are pair i's (a, b)
     A = np.asarray(
@@ -1410,7 +1412,7 @@ def pq_topk(
         )
     )
     if not q_rows:
-        empty = spark.createDataFrame([], out_fields + ", rank int")
+        empty = driver_frame(spark, [], out_fields + ", rank int")
         return empty
 
     cb_np = np.asarray(

@@ -121,17 +121,19 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
         ),
         F.lit(1.0),
     )
-    return (
-        staged.withColumn("n_chars_c", n.cast("int"))
-        .withColumn("n_tokens", n_toks.cast("int"))
-        .withColumn("alpha_ppm", _ppm(alpha / n_safe))
-        .withColumn("digit_ppm", _ppm(digit / n_safe))
-        .withColumn("space_ppm", _ppm(space / n_safe))
-        .withColumn("stopword_ppm", _ppm(stop_hits / n_toks_safe))
-        .withColumn("avg_token_len_ppm", _ppm(avg_tok_len))
-        .withColumn("quality_ppm", _ppm(score))
-        .drop("__toks_q")
-    )
+    # one projection: each chained withColumn re-analyzes the whole plan
+    return staged.withColumns(
+        {
+            "n_chars_c": n.cast("int"),
+            "n_tokens": n_toks.cast("int"),
+            "alpha_ppm": _ppm(alpha / n_safe),
+            "digit_ppm": _ppm(digit / n_safe),
+            "space_ppm": _ppm(space / n_safe),
+            "stopword_ppm": _ppm(stop_hits / n_toks_safe),
+            "avg_token_len_ppm": _ppm(avg_tok_len),
+            "quality_ppm": _ppm(score),
+        }
+    ).drop("__toks_q")
 
 
 def with_language_id(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -24,10 +24,15 @@ from iceberg_compaction_spark.operators import dedup as dd
 from iceberg_compaction_spark.operators import similarity as sim
 from iceberg_compaction_spark.operators import synthetic as syn
 from iceberg_compaction_spark.operators import text as tx
+from iceberg_compaction_spark.operators.cache import CacheScope
 from iceberg_compaction_spark.operators.mor import (
     EqualityDeleteTable,
     apply_equality_deletes,
     apply_position_deletes,
+)
+from iceberg_compaction_spark.sources.scan import (
+    driver_frame,
+    read_listed_parquet,
 )
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -80,7 +85,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # type changed across rounds — cheap insurance that an int32 doc_id
     # or varchar-typed text never breaks 20 downstream queries)
     p = f"{sf_dir}/documents.parquet"
-    df = spark.read.parquet(p).withColumn(
+    df = read_listed_parquet(spark, [p]).withColumn(
         "doc_id", F.col("doc_id").cast("long")
     ).withColumn("text", F.col("text").cast("string"))
     return _spread(spark, df, p)
@@ -2154,10 +2159,14 @@ def q_pipeline_curation_full(spark, sf_dir):
     oracle), so both engines see the identical candidate set and the
     demotion output is hash-exact, same as dedup_minhash_lsh."""
     docs = _docs(spark, sf_dir)
-    pairs = dd.minhash_lsh_dedup_pairs(
-        docs, threshold_ppm=JACCARD_THRESHOLD_PPM
-    )
-    cc = dd.connected_components(pairs)
+    # CC materializes the pairs (localCheckpoint) and neither its result
+    # nor ``kept`` reads the shingle/signature caches, so they are
+    # released as soon as CC returns
+    with CacheScope() as cs:
+        pairs = dd.minhash_lsh_dedup_pairs(
+            docs, threshold_ppm=JACCARD_THRESHOLD_PPM, scope=cs
+        )
+        cc = dd.connected_components(pairs)
     demoted = cc.where(F.col("component_id") != F.col("doc_id")).select(
         "doc_id"
     )
@@ -4630,7 +4639,7 @@ def q_stats_theta_ndv(spark, sf_dir):
         (c, int(round(sketches[c].estimate())))
         for c in ["doc_id", "lang", "source"]
     ]
-    return spark.createDataFrame(rows, "col_name string, ndv long")
+    return driver_frame(spark, rows, "col_name string, ndv long")
 
 
 @register(
@@ -4768,7 +4777,8 @@ def q_geo_spatial_join(spark, sf_dir):
         "user_id",
         F.col("user_id").cast("double").alias("uy"),
     )
-    regions = spark.createDataFrame(
+    regions = driver_frame(
+        spark,
         [
             ("west", 0.0, 0.0, 60.0, 25.0),
             ("mid", 50.0, 10.0, 150.0, 40.0),
@@ -4952,7 +4962,8 @@ def q_geo_envelope_join(spark, sf_dir):
         (F.col("value") + F.col("__w")).alias("lxmax"),
         (F.col("__uy") + F.col("__h")).alias("lymax"),
     )
-    regions = spark.createDataFrame(
+    regions = driver_frame(
+        spark,
         [
             ("west", 0.0, 0.0, 60.0, 25.0),
             ("mid", 50.0, 10.0, 150.0, 40.0),
@@ -5027,7 +5038,8 @@ def q_geo_knn_join(spark, sf_dir):
     e = ev.read_events(spark, sf_dir).select(
         "user_id", "value", F.col("user_id").cast("double").alias("uy")
     )
-    queries = spark.createDataFrame(
+    queries = driver_frame(
+        spark,
         [(1, 20.0, 10.0), (2, 100.0, 25.0), (3, 180.0, 45.0)],
         "qid long, qx double, qy double",
     )
@@ -5362,7 +5374,8 @@ def q_geo_multipolygon_join(spark, sf_dir):
         F.col("__env.xmax").alias("lxmax"),
         F.col("__env.ymax").alias("lymax"),
     )
-    regions = spark.createDataFrame(
+    regions = driver_frame(
+        spark,
         [
             ("west", 0.0, 0.0, 60.0, 25.0),
             ("mid", 50.0, 10.0, 150.0, 40.0),
@@ -5636,7 +5649,8 @@ def q_geo_knn_wrap(spark, sf_dir):
         ((F.col("value") * 2.0) % 360.0 - 180.0).alias("lon"),
         ((F.col("user_id") % 120).cast("double") - 60.0).alias("lat"),
     )
-    queries = spark.createDataFrame(
+    queries = driver_frame(
+        spark,
         [(1, 178.0, 0.0), (2, -176.0, 20.0), (3, 0.0, -30.0)],
         "qid long, qx double, qy double",
     )
@@ -5737,7 +5751,8 @@ def q_geo_haversine_join(spark, sf_dir):
         ((F.col("value") * 2.0) % 360.0 - 180.0).alias("lon"),
         ((F.col("event_id") % 178).cast("double") - 89.0).alias("lat"),
     )
-    queries = spark.createDataFrame(
+    queries = driver_frame(
+        spark,
         [(1, 179.5, 10.0), (2, -170.0, 85.0), (3, 20.0, -45.0)],
         "qid long, qlon double, qlat double",
     )
@@ -5809,7 +5824,8 @@ def q_geo_haversine_knn(spark, sf_dir):
         ((F.col("value") * 2.0) % 360.0 - 180.0).alias("lon"),
         ((F.col("event_id") % 178).cast("double") - 89.0).alias("lat"),
     )
-    queries = spark.createDataFrame(
+    queries = driver_frame(
+        spark,
         [(1, 179.5, 10.0), (2, -170.0, 85.0), (3, 20.0, -45.0)],
         "qid long, qlon double, qlat double",
     )

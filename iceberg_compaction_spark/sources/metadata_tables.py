@@ -10,13 +10,13 @@ the direction a production user needs first.
 
 Scale stance: table metadata describes FILES, not rows.  A 100 TB
 table at ~1 GiB/file is ~10^5 file entries and a few thousand
-snapshots — driver-side construction into ``spark.createDataFrame`` is
-the honest design (same reasoning as the planning layer, SURVEY §2.7):
-once a DataFrame, the rows distribute and join/filter like any other
-relation.  A table whose *metadata* outgrew the driver would need the
-manifest-Avro files themselves read as a distributed scan; the JSON
-manifest layer here has no such files, so that path would be
-speculative plumbing.
+snapshots — driver-side construction into one Arrow-built relation
+(:func:`~.sources.scan.driver_frame`) is the honest design (same
+reasoning as the planning layer, SURVEY §2.7): once a DataFrame, the
+rows distribute and join/filter like any other relation.  A table
+whose *metadata* outgrew the driver would need the manifest-Avro
+files themselves read as a distributed scan; the JSON manifest layer
+here has no such files, so that path would be speculative plumbing.
 
 All row builders are pure functions over :class:`Manifest` /
 :class:`FileCatalog` so the DataSource's ``option("metadata", ...)``
@@ -35,6 +35,7 @@ from iceberg_compaction_spark.plans.datamodel import (
     EQUALITY_DELETE,
     FileScanTask,
 )
+from iceberg_compaction_spark.sources.scan import driver_frame
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -761,30 +762,30 @@ def metadata_rows(catalog, name: str, kind: str,
 
 def files_df(spark: "SparkSession", manifest: "Manifest") -> "DataFrame":
     """All file entries (data + deletes) of one snapshot as a DataFrame."""
-    return spark.createDataFrame(files_rows(manifest), FILES_SCHEMA)
+    return driver_frame(spark, files_rows(manifest), FILES_SCHEMA)
 
 
 def partitions_df(spark: "SparkSession", manifest: "Manifest") -> "DataFrame":
-    return spark.createDataFrame(partitions_rows(manifest), PARTITIONS_SCHEMA)
+    return driver_frame(spark, partitions_rows(manifest), PARTITIONS_SCHEMA)
 
 
 def snapshots_df(spark: "SparkSession", catalog, name: str) -> "DataFrame":
-    return spark.createDataFrame(snapshots_rows(catalog, name), SNAPSHOTS_SCHEMA)
+    return driver_frame(spark, snapshots_rows(catalog, name), SNAPSHOTS_SCHEMA)
 
 
 def history_df(spark: "SparkSession", catalog, name: str) -> "DataFrame":
-    return spark.createDataFrame(history_rows(catalog, name), HISTORY_SCHEMA)
+    return driver_frame(spark, history_rows(catalog, name), HISTORY_SCHEMA)
 
 
 def refs_df(spark: "SparkSession", catalog, name: str) -> "DataFrame":
-    return spark.createDataFrame(refs_rows(catalog, name), REFS_SCHEMA)
+    return driver_frame(spark, refs_rows(catalog, name), REFS_SCHEMA)
 
 
 def metadata_log_entries_df(
     spark: "SparkSession", catalog, name: str
 ) -> "DataFrame":
-    return spark.createDataFrame(
-        metadata_log_rows(catalog, name), METADATA_LOG_SCHEMA
+    return driver_frame(
+        spark, metadata_log_rows(catalog, name), METADATA_LOG_SCHEMA
     )
 
 
@@ -851,7 +852,8 @@ def position_deletes_df(spark: "SparkSession", manifest: "Manifest") -> "DataFra
             )
         )
     if not frames:
-        return spark.createDataFrame(
+        return driver_frame(
+            spark,
             [],
             "file_path string, pos long, delete_file_path string, "
             "sequence_number long",
@@ -865,14 +867,14 @@ def position_deletes_df(spark: "SparkSession", manifest: "Manifest") -> "DataFra
 def manifests_df(
     spark: "SparkSession", catalog, name: str, snapshot_id: int | None = None
 ) -> "DataFrame":
-    return spark.createDataFrame(
-        manifests_rows(catalog, name, snapshot_id), MANIFESTS_SCHEMA
+    return driver_frame(
+        spark, manifests_rows(catalog, name, snapshot_id), MANIFESTS_SCHEMA
     )
 
 
 def entries_df(
     spark: "SparkSession", catalog, name: str, snapshot_id: int | None = None
 ) -> "DataFrame":
-    return spark.createDataFrame(
-        entries_rows(catalog, name, snapshot_id), ENTRIES_SCHEMA
+    return driver_frame(
+        spark, entries_rows(catalog, name, snapshot_id), ENTRIES_SCHEMA
     )

@@ -318,6 +318,36 @@ def read_listed_parquet(
         return reader._df(reader._jreader.parquet(jpaths))
 
 
+def driver_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Rows held on the driver (tuples, one per row, in ``schema``'s
+    column order) as a Spark relation.
+
+    ``spark.createDataFrame(rows, schema)`` pickles the rows through
+    ``sc.parallelize`` plus a Python ``map``, so every query that reads
+    them runs a ``PythonRDD`` in Python workers.  Here the rows become
+    one ``pyarrow.Table`` typed by the Spark schema, and the JVM reads
+    that Arrow stream itself (a local relation below
+    ``spark.sql.execution.arrow.localRelationThreshold``): no Python
+    worker ever evaluates them, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.  Schema, rows
+    and row order are those of the list path, DDL-string schemas
+    included; a ``None`` in a non-nullable field raises ``ValueError``
+    from the Arrow cast."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def read_parquet_files(
     spark: SparkSession, paths: list[str], with_metadata: bool = False
 ) -> DataFrame:
@@ -659,8 +689,8 @@ def read_data_files(
                 for p, positions in sorted(position_vectors.items())
                 for i in sorted(set(positions))
             ]
-            dv_df = spark.createDataFrame(
-                dv_rows, schema="__dv_path string, __dv_pos long"
+            dv_df = driver_frame(
+                spark, dv_rows, "__dv_path string, __dv_pos long"
             )
             df = (
                 df.withColumn("__dv_probe_path", path_col)

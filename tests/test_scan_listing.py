@@ -251,3 +251,30 @@ def test_explicit_path_reads_go_through_the_seam():
         "r.parquet(p)\n"
     )
     assert sorted(_parquet_reads(sample)) == [5, 7]
+
+
+def test_registry_docs_read_file_and_directory_fixtures(spark, tmp_path):
+    """``registry._docs`` reads through the seam: a single-file fixture
+    builds with no Spark job, and a directory-shaped one (the scaled
+    fixtures are Spark-written directories) falls back to Spark's own
+    inference; both give the rows of a plain ``spark.read.parquet``."""
+    from iceberg_compaction_spark import registry
+
+    src = spark.range(0, 300).selectExpr(
+        "id AS doc_id", "concat('doc ', id) AS text"
+    )
+    single = tmp_path / "single"
+    single.mkdir()
+    src.toPandas().to_parquet(str(single / "documents.parquet"))
+    spread = tmp_path / "dir"
+    src.repartition(3).write.parquet(str(spread / "documents.parquet"))
+
+    def docs_rows(df):
+        return sorted(map(tuple, df.select("doc_id", "text").collect()))
+
+    for root, builds_with_job in ((single, False), (spread, True)):
+        path = str(root / "documents.parquet")
+        before = _next_job_id(spark)
+        df = registry._docs(spark, str(root))
+        assert (_next_job_id(spark) > before) == builds_with_job, root
+        assert docs_rows(df) == docs_rows(spark.read.parquet(path))
