@@ -26,6 +26,8 @@ import json
 import sys
 from dataclasses import asdict, is_dataclass
 
+from iceberg_compaction_spark.commit import load_head
+
 
 def _json_default(o):
     if is_dataclass(o) and not isinstance(o, type):
@@ -95,9 +97,7 @@ def cmd_compact(args, spark=None) -> dict:
     )
     cat = _catalog(args.warehouse)
     br = getattr(args, "to_branch", None)
-    before = (
-        cat.load_table_ref(args.table, br) if br else cat.load_table(args.table)
-    )
+    before = load_head(cat, args.table, br)
     new, stats = Compaction(spark=spark, config=cfg).compact_catalog(
         cat, args.table, to_branch=br, where=getattr(args, "where", None)
     )
@@ -162,9 +162,7 @@ def cmd_delete(args, spark=None) -> dict:
     spark = spark or _build_session(args.master)
     cat = _catalog(args.warehouse)
     br = getattr(args, "to_branch", None)
-    before = (
-        cat.load_table_ref(args.table, br) if br else cat.load_table(args.table)
-    )
+    before = load_head(cat, args.table, br)
     new = delete_where(spark, cat, args.table, args.where, to_branch=br)
     d = {
         x.path
@@ -199,9 +197,7 @@ def cmd_update(args, spark=None) -> dict:
             raise SystemExit(f"--set needs col=expr, got {s!r}")
         set_exprs[col.strip()] = expr.strip()
     br = getattr(args, "to_branch", None)
-    before = (
-        cat.load_table_ref(args.table, br) if br else cat.load_table(args.table)
-    )
+    before = load_head(cat, args.table, br)
     new = update_where(
         spark, cat, args.table, args.where, set_exprs, to_branch=br
     )

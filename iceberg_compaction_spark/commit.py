@@ -6,11 +6,16 @@ starting snapshot's sequence number so concurrent newer deletes still
 apply, retry on conflicts with exponential backoff
 (core/src/compaction/mod.rs:950-1061, retry config :765-782).
 
-Our backend is the local JSON manifest (sources/manifest.py) with an
-atomic rename; the CommitManager keeps the same semantics (consistency
-validation across plans, add/delete resolution by path, sequence-number
-pinning, retry loop) so a real Iceberg REST-catalog backend can be
-swapped in without touching callers.
+Every catalog writer commits through :func:`commit_catalog`, the one
+commit path: load the target ref's head (:func:`load_head`), ``build``
+the successor manifest from it, compare-and-swap it onto that ref with
+the catalog's ``commit_table``, and on :class:`CommitConflict` retry the
+whole attempt against a freshly loaded head.  Compaction, maintenance,
+the DML statements, the DataSource sinks, statistics, rollback,
+cherry-pick and the format upgrade differ only in their ``build``.  The
+two remaining ``commit_with_retry`` users are below the catalog tier:
+``Compaction.commit`` (the local manifest file under ``manifest_lock``)
+and ``sources/manifest_rewrite.py`` (the Avro manifest-list tier).
 """
 
 from __future__ import annotations
@@ -343,3 +348,43 @@ class CommitManager:
                 time.sleep(min(backoff, self.retry.max_backoff_s) * random.uniform(0.8, 1.0))
                 backoff = min(backoff * 2, self.retry.max_backoff_s)
         raise last  # type: ignore[misc]
+
+
+def load_head(catalog, table: str, to_branch: str | None = None) -> Manifest:
+    """The head of the ref a commit targets: the named branch's snapshot
+    under ``to_branch`` (reference: branch-targeted commits,
+    core/src/compaction/mod.rs:97,1307-1336), else the table head."""
+    if to_branch:
+        return catalog.load_table_ref(table, to_branch)
+    return catalog.load_table(table)
+
+
+def commit_catalog(
+    catalog,
+    table: str,
+    build: Callable[[Manifest], Manifest | None],
+    to_branch: str | None = None,
+    retry: CommitRetryConfig | None = None,
+) -> Manifest:
+    """The one catalog commit: load the target ref's head (``to_branch``,
+    default main), ``build`` the new manifest from it, and CAS-commit it
+    onto that ref with ``commit_table``.  A :class:`CommitConflict`
+    retries the whole attempt against a freshly loaded head, so any work
+    that depends on the head (re-sequencing, re-scanning positions,
+    replay checks) belongs in ``build``.
+
+    ``build`` returning None means nothing is left to commit on that
+    head; the head is then returned unchanged and no commit is made."""
+
+    def attempt() -> Manifest:
+        head = load_head(catalog, table, to_branch)
+        new = build(head)
+        if new is None:
+            return head
+        return catalog.commit_table(
+            table, head.snapshot_id, new, to_branch=to_branch
+        )
+
+    return CommitManager(retry or CommitRetryConfig()).commit_with_retry(
+        attempt
+    )

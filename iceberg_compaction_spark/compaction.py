@@ -25,7 +25,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from iceberg_compaction_spark.commit import CommitManager, RewriteResult
+from iceberg_compaction_spark.commit import (
+    CommitManager,
+    RewriteResult,
+    commit_catalog,
+    load_head,
+)
 from iceberg_compaction_spark.config import CompactionConfig
 from iceberg_compaction_spark.metrics import CompactionMetrics
 from iceberg_compaction_spark.operators.mor import (
@@ -397,9 +402,7 @@ class Compaction:
         trade-off: readers may observe intermediate snapshots (each
         fully consistent), and history grows by one snapshot per batch.
         """
-        from iceberg_compaction_spark.sources.ingest import _load_head
-
-        manifest = _load_head(catalog, table_name, to_branch)
+        manifest = load_head(catalog, table_name, to_branch)
         branch = to_branch or "main"
         plans = self.plan(manifest, branch=branch, where=where)
         stats = CompactionStats()
@@ -433,32 +436,29 @@ class Compaction:
         table_name: str,
         build,
         to_branch: str | None = None,
-    ) -> Manifest | None:
-        """The one catalog commit of every catalog entry point: load the
-        target ref's head (``to_branch``, default main), ``build`` the
-        new manifest from it, CAS-commit it with ``commit_table`` —
-        retried on conflict, each attempt against a freshly loaded
-        head — and record the commit metrics.  ``build`` returning
-        None means nothing is left to commit on that head (a race took
-        the work away); the result is then None and no commit counts."""
-        from iceberg_compaction_spark.sources.ingest import _load_head
+    ) -> Manifest:
+        """:func:`~iceberg_compaction_spark.commit.commit_catalog` under
+        this engine's retry policy, recording the commit metrics.
+        ``build`` returning None means nothing is left to commit on that
+        head (a race took the work away); the head is then returned and
+        no commit counts."""
+        built: list[bool] = []
 
-        def attempt() -> Manifest | None:
-            current = _load_head(catalog, table_name, to_branch)
-            new = build(current)
-            if new is None:
-                return None
-            return catalog.commit_table(
-                table_name, current.snapshot_id, new, to_branch=to_branch
-            )
+        def counted(head: Manifest) -> Manifest | None:
+            new = build(head)
+            built.append(new is not None)
+            return new
 
         t0 = time.monotonic()
         try:
-            new = self.commit_manager.commit_with_retry(attempt)
+            new = commit_catalog(
+                catalog, table_name, counted, to_branch,
+                self.commit_manager.retry,
+            )
         except Exception:
             self.metrics.commit_failed_counter.inc()
             raise
-        if new is not None:
+        if built[-1]:
             self.metrics.commit_counter.inc()
             self.metrics.commit_duration.observe((time.monotonic() - t0) * 1000)
         return new
@@ -563,28 +563,27 @@ def upgrade_format_version(catalog, table_name: str, to_version: int = 3):
     the complete v2 -> v3 migration story.  Rows are untouched, so the
     commit stamps the row-preserving ``replace`` operation (streaming
     readers skip it silently)."""
-    from iceberg_compaction_spark.sources.manifest import Manifest
 
-    cur = catalog.load_table(table_name)
-    if to_version < cur.format_version:
-        raise ValueError(
-            f"format version can never downgrade "
-            f"(v{cur.format_version} -> v{to_version})"
-        )
-    if to_version not in (2, 3):
-        raise ValueError(f"unsupported format version {to_version}")
-    if to_version == cur.format_version:
-        return cur
-    new = Manifest.from_dict(cur.to_dict())
-    new.snapshot_id = cur.next_snapshot()
-    new.format_version = to_version
-    new.operation = "replace"
-    if to_version >= 3:
-        # v3 row lineage: the upgrade commit assigns first_row_id to
-        # every pre-existing data file (spec: existing rows get ids on
-        # upgrade), so _row_id is readable immediately afterwards
-        new.assign_row_ids()
-    return catalog.commit_table(table_name, cur.snapshot_id, new)
+    def build(cur: Manifest) -> Manifest | None:
+        if to_version < cur.format_version:
+            raise ValueError(
+                f"format version can never downgrade "
+                f"(v{cur.format_version} -> v{to_version})"
+            )
+        if to_version not in (2, 3):
+            raise ValueError(f"unsupported format version {to_version}")
+        if to_version == cur.format_version:
+            return None
+        new = cur.successor("replace")
+        new.format_version = to_version
+        if to_version >= 3:
+            # v3 row lineage: the upgrade commit assigns first_row_id to
+            # every pre-existing data file (spec: existing rows get ids
+            # on upgrade), so _row_id is readable immediately afterwards
+            new.assign_row_ids()
+        return new
+
+    return commit_catalog(catalog, table_name, build)
 
 
 def rewrite_position_deletes(

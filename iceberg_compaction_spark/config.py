@@ -13,7 +13,6 @@ from dataclasses import dataclass, field
 # --- defaults (core/src/config/mod.rs:29-55) -------------------------------
 DEFAULT_TARGET_FILE_SIZE = 1024 * 1024 * 1024  # 1 GiB (mod.rs:29)
 DEFAULT_MAX_RECORD_BATCH_ROWS = 1024  # (mod.rs:31)
-DEFAULT_MAX_ROW_GROUP_BYTES = 128 * 1024 * 1024  # 128 MiB (mod.rs:35)
 DEFAULT_COMPRESSION = "zstd"  # writer props (mod.rs:295-303)
 DEFAULT_SMALL_FILE_THRESHOLD = 32 * 1024 * 1024  # 32 MiB (mod.rs:39)
 DEFAULT_MIN_SIZE_PER_PARTITION = 512 * 1024 * 1024  # 512 MiB (mod.rs:40)
@@ -51,7 +50,6 @@ class WriterConfig:
     """Output-writer knobs (S10/S11; core/src/config/mod.rs:29-35,295-303)."""
 
     target_file_size_bytes: int = DEFAULT_TARGET_FILE_SIZE
-    max_row_group_bytes: int = DEFAULT_MAX_ROW_GROUP_BYTES
     compression: str = DEFAULT_COMPRESSION
     # Spark sizes files by rows, not bytes: estimated average row width is
     # used to translate target bytes -> maxRecordsPerFile (SURVEY.md §7.3).
@@ -270,9 +268,6 @@ class CompactionConfig:
     writer: WriterConfig = field(default_factory=WriterConfig)
     retry: CommitRetryConfig = field(default_factory=CommitRetryConfig)
     memory: ExecutionMemoryConfig = field(default_factory=ExecutionMemoryConfig)
-    object_store: ObjectStoreReadConfig = field(
-        default_factory=ObjectStoreReadConfig.for_compaction
-    )
     max_concurrent_compaction_plans: int = DEFAULT_MAX_CONCURRENT_COMPACTION_PLANS
     enable_validate_compaction: bool = False
 

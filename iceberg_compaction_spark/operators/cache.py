@@ -1,10 +1,11 @@
 """Scoped DataFrame caching.
 
 Operators like :func:`~iceberg_compaction_spark.operators.dedup.minhash_lsh_dedup_pairs`
-persist small intermediate tables (shingle sets, signatures) that feed
-multiple join branches.  By default those handles stay cached after the
-result is consumed and rely on Spark's LRU storage eviction — fine for a
-single corpus, sloppy for a long-lived session processing many corpora.
+can persist small intermediate tables (shingle sets, signatures) that
+feed multiple join branches.  They do so only through a ``CacheScope``:
+a cache needs an owner that releases it, and a lazy result frame has
+none.  Without a scope the operators cache nothing and their branches
+share those subtrees through the query's own exchange reuse.
 
 ``CacheScope`` makes the lifetime explicit: every DataFrame persisted
 through the scope is unpersisted (non-blocking) when the scope exits.

@@ -324,6 +324,13 @@ def lsh_candidate_pairs(
     )
 
 
+def _persister(scope):
+    """How an operator shares an intermediate between its branches:
+    persisted through ``scope`` (a CacheScope, which releases it on
+    exit), or — with no scope to own a cache — left to the query plan."""
+    return scope.persist if scope is not None else (lambda d: d)
+
+
 def minhash_lsh_dedup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -343,19 +350,20 @@ def minhash_lsh_dedup_pairs(
     the number of candidate pairs, not with corpus co-occurrence.
 
     ``scope``: an optional
-    :class:`~iceberg_compaction_spark.operators.cache.CacheScope` that
-    bounds the lifetime of the persisted shingle/signature intermediates
-    — consume the result inside the scope and their storage is released
-    on exit.  Without a scope the handles stay cached (Spark's LRU
-    storage eviction reclaims them under pressure; a long-lived session
-    processing many corpora should pass a scope).
+    :class:`~iceberg_compaction_spark.operators.cache.CacheScope`.  With
+    one, the shingle-set and signature intermediates are persisted
+    through it — consume the result inside the scope and their storage
+    is released on exit.  Without one nothing is cached: the returned
+    frame is a plain lazy plan whose branches share those subtrees
+    through the query's own exchange reuse, so no cache entry outlives
+    the query.
     """
     # The shingle-set and signature tables are tiny relative to the corpus
     # (k ints / a string array per doc) but feed multiple join branches;
-    # persist them so the md5/tokenize subtrees evaluate once, not once
-    # per branch. (The reference materializes join build sides the same
-    # way inside DataFusion's hash join.)
-    _persist = scope.persist if scope is not None else (lambda d: d.persist())
+    # under a scope, persist them so the md5/tokenize subtrees evaluate
+    # once, not once per branch. (The reference materializes join build
+    # sides the same way inside DataFusion's hash join.)
+    _persist = _persister(scope)
     sets = _persist(shingle_sets(df, id_col, text_col, n))
     sh = sets.select(F.col(id_col), F.explode("shs").alias("shingle"))
     sigs = _persist(minhash_signatures(df, id_col, text_col, n, num_hashes, sets=sets))
@@ -424,9 +432,9 @@ def minhash_lsh_incremental_pairs(
 
     Output: (new_id, old_id, jaccard_ppm) — exact Jaccard computed for
     candidate pairs only, same verification as
-    :func:`minhash_lsh_dedup_pairs`.
+    :func:`minhash_lsh_dedup_pairs`; ``scope`` as there.
     """
-    _persist = scope.persist if scope is not None else (lambda d: d.persist())
+    _persist = _persister(scope)
     sets = _persist(shingle_sets(df, id_col, text_col, n))
     sh = sets.select(F.col(id_col), F.explode("shs").alias("shingle"))
     sigs = _persist(
@@ -605,10 +613,10 @@ def simhash_banded_pairs(
     """
     n_bands = max_hamming + 1
     # The fingerprint table (one long per doc) feeds three branches
-    # (distinct banding + both expansion sides); persist so the
-    # token-explode/vote subtree runs once.  ``scope`` (a CacheScope)
-    # bounds the cache lifetime, as in minhash_lsh_dedup_pairs.
-    _persist = scope.persist if scope is not None else (lambda d: d.persist())
+    # (distinct banding + both expansion sides); under a ``scope`` (a
+    # CacheScope) it is persisted so the token-explode/vote subtree runs
+    # once — without one nothing is cached, as in minhash_lsh_dedup_pairs.
+    _persist = _persister(scope)
     s = _persist(simhash(df, id_col, text_col, bits))
 
     # Work on DISTINCT fingerprints, not documents.  Template-heavy

@@ -91,26 +91,17 @@ def analyze_table(
     properties-only ``replace`` snapshot (row-preserving by contract:
     streaming consumers correctly skip it) through the standard CAS
     retry loop.  Returns the committed Manifest."""
-    from iceberg_compaction_spark.commit import CommitManager
-    from iceberg_compaction_spark.sources.ingest import (
-        _commit,
-        _load_head,
-        read_table_mor,
-    )
-    from iceberg_compaction_spark.sources.manifest import Manifest
+    from iceberg_compaction_spark.commit import commit_catalog, load_head
+    from iceberg_compaction_spark.sources.ingest import read_table_mor
 
-    current = _load_head(catalog, table_name=name, to_branch=to_branch)
+    current = load_head(catalog, name, to_branch)
     analyzed_sid = current.snapshot_id
     rows = column_stats(
         read_table_mor(spark, current), columns, approx=approx
     ).collect()  # one row per column: metadata-sized by definition
 
-    def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name=name, to_branch=to_branch)
-        new = Manifest.from_dict(cur.to_dict())
-        new.snapshot_id = cur.next_snapshot()
-        new.sequence_number = cur.sequence_number  # rows unchanged
-        new.operation = "replace"
+    def build(cur):
+        new = cur.successor("replace")  # rows unchanged
         props = dict(new.properties or {})
         props["stats.snapshot-id"] = str(analyzed_sid)
         if rows:
@@ -124,9 +115,10 @@ def analyze_table(
             if r["max_value"] is not None:
                 props[f"stats.{c}.max"] = r["max_value"]
         new.properties = props
-        return _commit(catalog, name, cur, new, to_branch)
+        new.assign_row_ids()  # v3 row lineage (no-op on v2)
+        return new
 
-    return CommitManager().commit_with_retry(attempt)
+    return commit_catalog(catalog, name, build, to_branch)
 
 
 # ---------------------------------------------------------------------------
@@ -301,17 +293,12 @@ def compute_table_stats(
     import os
     import uuid as _uuid
 
-    from iceberg_compaction_spark.commit import CommitManager
+    from iceberg_compaction_spark.commit import commit_catalog, load_head
     from iceberg_compaction_spark.sources.fileio import fileio_for
-    from iceberg_compaction_spark.sources.ingest import (
-        _commit,
-        _load_head,
-        read_table_mor,
-    )
-    from iceberg_compaction_spark.sources.manifest import Manifest
+    from iceberg_compaction_spark.sources.ingest import read_table_mor
     from iceberg_compaction_spark.sources.puffin import write_puffin
 
-    current = _load_head(catalog, table_name=name, to_branch=to_branch)
+    current = load_head(catalog, name, to_branch)
     analyzed_sid = current.snapshot_id
     df = read_table_mor(spark, current)
     if columns is None:
@@ -368,7 +355,7 @@ def compute_table_stats(
         path, blobs, {"created-by": "iceberg-compaction-spark theta"}
     )
     entry = {
-        # stamped with the COMMITTED snapshot's id inside attempt():
+        # stamped with the COMMITTED snapshot's id inside build():
         # spec readers (Spark/Trino CBO) select statistics whose
         # snapshot-id equals the CURRENT snapshot, and this engine's
         # registration commit itself creates a snapshot — stamping the
@@ -387,12 +374,8 @@ def compute_table_stats(
         ],
     }
 
-    def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name=name, to_branch=to_branch)
-        new = Manifest.from_dict(cur.to_dict())
-        new.snapshot_id = cur.next_snapshot()
-        new.sequence_number = cur.sequence_number  # rows unchanged
-        new.operation = "replace"
+    def build(cur):
+        new = cur.successor("replace")  # rows unchanged
         entry["snapshot-id"] = new.snapshot_id
         # retention: prune registrations whose snapshot has been
         # EXPIRED — their files then age out through the orphan sweep
@@ -413,9 +396,10 @@ def compute_table_stats(
         props = dict(new.properties or {})
         props[STATS_SNAPSHOT_PROP] = str(analyzed_sid)
         new.properties = props
-        return _commit(catalog, name, cur, new, to_branch)
+        new.assign_row_ids()  # v3 row lineage (no-op on v2)
+        return new
 
-    return CommitManager().commit_with_retry(attempt), ndv
+    return commit_catalog(catalog, name, build, to_branch), ndv
 
 
 def read_table_ndv(manifest) -> dict[str, float]:
@@ -550,12 +534,10 @@ def compute_partition_stats(catalog, name: str, to_branch: str | None = None):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from iceberg_compaction_spark.commit import CommitManager
+    from iceberg_compaction_spark.commit import commit_catalog, load_head
     from iceberg_compaction_spark.sources.fileio import fileio_for
-    from iceberg_compaction_spark.sources.ingest import _commit, _load_head
-    from iceberg_compaction_spark.sources.manifest import Manifest
 
-    current = _load_head(catalog, table_name=name, to_branch=to_branch)
+    current = load_head(catalog, name, to_branch)
     analyzed_sid = current.snapshot_id
     rows = partition_stats_rows(current)
     stats_dir = os.path.join(current.table_root, "metadata")
@@ -618,12 +600,8 @@ def compute_partition_stats(catalog, name: str, to_branch: str | None = None):
         "file-size-in-bytes": io.size(path),
     }
 
-    def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name=name, to_branch=to_branch)
-        new = Manifest.from_dict(cur.to_dict())
-        new.snapshot_id = cur.next_snapshot()
-        new.sequence_number = cur.sequence_number  # rows unchanged
-        new.operation = "replace"
+    def build(cur):
+        new = cur.successor("replace")  # rows unchanged
         try:
             alive = set(catalog.table_history(name))
         except Exception:
@@ -634,9 +612,10 @@ def compute_partition_stats(catalog, name: str, to_branch: str | None = None):
             if s.get("snapshot-id") != analyzed_sid
             and (alive is None or s.get("snapshot-id") in alive)
         ] + [entry]
-        return _commit(catalog, name, cur, new, to_branch)
+        new.assign_row_ids()  # v3 row lineage (no-op on v2)
+        return new
 
-    return CommitManager().commit_with_retry(attempt), rows
+    return commit_catalog(catalog, name, build, to_branch), rows
 
 
 def read_partition_stats(manifest) -> list[dict]:

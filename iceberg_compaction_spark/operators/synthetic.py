@@ -609,6 +609,7 @@ def metadata_fixture_warehouse(sf_dir: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from iceberg_compaction_spark.commit import commit_catalog
     from iceberg_compaction_spark.plans.datamodel import FileScanTask
     from iceberg_compaction_spark.sources.catalog import FileCatalog
     from iceberg_compaction_spark.sources.manifest import Manifest
@@ -683,15 +684,18 @@ def metadata_fixture_warehouse(sf_dir: str) -> str:
     cat = FileCatalog(warehouse=os.path.join(stage, "wh"))
     cat.create_table("docs_meta", m1)
 
-    m2 = Manifest.from_dict(cat.load_table("docs_meta").to_dict())
-    m2.snapshot_id = 2
-    m2.sequence_number = 2
-    m2.operation = "append"
+    v2_tasks = []
     for lang in sorted(set(langs)):
         w = _write(f"{lang}-m10.parquet", (lang_arr == lang) & (ids % 10 == 0))
         if w:
-            m2.data_files.append(task(w, lang, 2))
-    cat.commit_table("docs_meta", 1, m2)
+            v2_tasks.append(task(w, lang, 2))
+
+    def append_v2(head: Manifest) -> Manifest:
+        m2 = head.successor("append")
+        m2.data_files += v2_tasks
+        return m2
+
+    commit_catalog(cat, "docs_meta", append_v2)
 
     try:
         os.rename(stage, root)  # atomic publish; race loser cleans up

@@ -2504,7 +2504,10 @@ def q_dedup_containment(spark, sf_dir):
     the verification formula differs, so the oracle reuses the shared
     CTE chain with a LEAST() denominator."""
     docs = _docs(spark, sf_dir)
-    sets = dd.shingle_sets(docs).persist()
+    # not persisted: the result is a lazy frame, so nothing here could
+    # release a cache; the branches share ``sets`` through the query's
+    # exchange reuse
+    sets = dd.shingle_sets(docs)
     sigs = dd.minhash_signatures(docs, sets=sets)
     cand = dd.lsh_candidate_pairs(
         sigs, "doc_id", dd.DEFAULT_NUM_HASHES, dd.DEFAULT_BAND_SIZE

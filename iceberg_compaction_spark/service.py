@@ -41,6 +41,7 @@ from iceberg_compaction_spark.compaction import (
     convert_equality_deletes,
     rewrite_position_deletes,
 )
+from iceberg_compaction_spark.commit import load_head
 from iceberg_compaction_spark.config import CompactionConfig
 from iceberg_compaction_spark.plans.auto import (
     AutoCompactionConfig,
@@ -141,14 +142,13 @@ def maintain(
     """
     from iceberg_compaction_spark.compaction import upgrade_format_version
     from iceberg_compaction_spark.plans.datamodel import POSITION_DELETE
-    from iceberg_compaction_spark.sources.ingest import _load_head
     from iceberg_compaction_spark.sources.puffin import is_puffin_file
 
     policy = policy or MaintenancePolicy()
     branch = to_branch or "main"
     engine = Compaction(spark=spark, config=policy.engine)
 
-    before = _load_head(catalog, table_name, to_branch).snapshot_id
+    before = load_head(catalog, table_name, to_branch).snapshot_id
     if policy.upgrade_to_version is not None:
         if to_branch:
             raise ValueError(
@@ -156,7 +156,7 @@ def maintain(
                 "run it without to_branch"
             )
         upgrade_format_version(catalog, table_name, policy.upgrade_to_version)
-    manifest = _load_head(catalog, table_name, to_branch)
+    manifest = load_head(catalog, table_name, to_branch)
 
     # All three row-set steps commit through the engine's ONE catalog
     # commit (Compaction.commit_catalog): a concurrent writer racing the
@@ -177,7 +177,7 @@ def maintain(
     eqc = EqConvertStats()
     if policy.convert_eq_deletes and any(
         d.content != POSITION_DELETE
-        for t in _load_head(catalog, table_name, to_branch).data_files
+        for t in load_head(catalog, table_name, to_branch).data_files
         for d in t.deletes
     ):
         eq_stats: list[EqConvertStats] = []
@@ -198,7 +198,7 @@ def maintain(
         # gate on driver-scale manifest metadata BEFORE the Spark job:
         # below the threshold the consolidation would only be abandoned
         # (its output files left orphaned) — never start it
-        cur_m = _load_head(catalog, table_name, to_branch)
+        cur_m = load_head(catalog, table_name, to_branch)
         pos_live = {
             d.path
             for t in cur_m.data_files
@@ -275,7 +275,7 @@ def maintain(
     # their source — expiring or sweeping here could unlink data the
     # owning table still reads; Iceberg's procedures refuse the same
     # way, and maintain treats that as "nothing to do", not a failure)
-    props = _load_head(catalog, table_name, to_branch).properties or {}
+    props = load_head(catalog, table_name, to_branch).properties or {}
     gc_off = str(props.get("gc.enabled", "true")).lower() == "false"
     expired = (
         []
@@ -300,7 +300,7 @@ def maintain(
         orphans = orphans + catalog.remove_orphan_metadata(
             table_name, older_than_s=policy.orphan_older_than_s
         )
-    after = _load_head(catalog, table_name, to_branch).snapshot_id
+    after = load_head(catalog, table_name, to_branch).snapshot_id
     return MaintenanceReport(
         table=table_name,
         snapshot_before=before,

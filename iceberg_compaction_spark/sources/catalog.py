@@ -1375,16 +1375,11 @@ def rollback_table(
     state).  Data files keep their original sequence numbers; the
     commit stamps ``overwrite`` because visible rows change.
     """
-    from iceberg_compaction_spark.commit import CommitManager
+    from iceberg_compaction_spark.commit import commit_catalog
 
-    def attempt() -> Manifest:
-        cur = (
-            catalog.load_table_ref(name, to_branch)
-            if to_branch
-            else catalog.load_table(name)
-        )
+    def build(cur: Manifest) -> Manifest | None:
         if cur.snapshot_id == snapshot_id:
-            return cur  # already there: no empty commit
+            return None  # already there: no empty commit
         old = catalog.load_table_at(name, snapshot_id)
         new = Manifest.from_dict(old.to_dict())
         new.snapshot_id = cur.next_snapshot()
@@ -1392,11 +1387,9 @@ def rollback_table(
         # a later equality delete must still apply above this snapshot
         new.sequence_number = max(cur.sequence_number, old.sequence_number) + 1
         new.operation = "overwrite"
-        return catalog.commit_table(
-            name, cur.snapshot_id, new, to_branch=to_branch
-        )
+        return new
 
-    return CommitManager().commit_with_retry(attempt)
+    return commit_catalog(catalog, name, build, to_branch)
 
 
 def cherry_pick(
@@ -1431,10 +1424,12 @@ def cherry_pick(
 
     Catalog-generic and CAS-retried like :func:`rollback_table`.
     """
-    from iceberg_compaction_spark.commit import CommitManager
+    import dataclasses
+
+    from iceberg_compaction_spark.commit import commit_catalog
     from iceberg_compaction_spark.sources.changes import diff_files
 
-    def attempt() -> Manifest:
+    def build(cur: Manifest) -> Manifest | None:
         staged = catalog.load_table_at(name, snapshot_id)
         parents = catalog.snapshot_parents(name)
         parent_id = parents.get(snapshot_id)
@@ -1451,8 +1446,7 @@ def cherry_pick(
                 and not diff.changed_delete_files
             ):
                 return _cherry_pick_overwrite(
-                    catalog, name, snapshot_id, staged, parent, diff,
-                    to_branch,
+                    cur, name, snapshot_id, staged, parent, diff
                 )
             raise ValueError(
                 f"cherry-pick supports append-only and "
@@ -1462,11 +1456,6 @@ def cherry_pick(
                 "publish via fast_forward (exact lineage) or re-apply "
                 "the DML against the current head"
             )
-        cur = (
-            catalog.load_table_ref(name, to_branch)
-            if to_branch
-            else catalog.load_table(name)
-        )
         have = set(cur.paths())
         added_set = set(diff.added_data_files)
         added = [
@@ -1480,24 +1469,17 @@ def cherry_pick(
                 f"{dups[:3]}"
             )
         if not added:
-            return cur  # empty append: nothing to publish
-        new = Manifest.from_dict(cur.to_dict())
-        new.snapshot_id = cur.next_snapshot()
-        new.sequence_number = cur.sequence_number + 1
-        new.operation = "append"
-        import dataclasses
-
+            return None  # empty append: nothing to publish
+        new = cur.successor("append")
         for t in added:
             new.data_files.append(
                 dataclasses.replace(
                     t, sequence_number=new.sequence_number, deletes=[]
                 )
             )
-        return catalog.commit_table(
-            name, cur.snapshot_id, new, to_branch=to_branch
-        )
+        return new
 
-    return CommitManager().commit_with_retry(attempt)
+    return commit_catalog(catalog, name, build, to_branch)
 
 
 def _cell_state(manifest: Manifest, cells: set) -> dict:
@@ -1521,18 +1503,17 @@ def _cell_state(manifest: Manifest, cells: set) -> dict:
 
 
 def _cherry_pick_overwrite(
-    catalog,
+    cur: Manifest,
     name: str,
     snapshot_id: int,
     staged: Manifest,
     parent: Manifest,
     diff,
-    to_branch: "str | None",
 ) -> Manifest:
     """Replay a staged replace-partitions (dynamic overwrite) snapshot
-    onto the moved target head — Iceberg ``cherrypick_snapshot``
+    onto the moved target head ``cur`` — Iceberg ``cherrypick_snapshot``
     parity for WAP flows that stage a partition overwrite.  Called
-    from inside :func:`cherry_pick`'s retry attempt; see its docstring
+    from inside :func:`cherry_pick`'s commit build; see its docstring
     for the conflict contract."""
     import dataclasses
 
@@ -1560,11 +1541,6 @@ def _cherry_pick_overwrite(
             "it cannot be scoped to partition cells; re-apply the DML "
             "against the current head"
         )
-    cur = (
-        catalog.load_table_ref(name, to_branch)
-        if to_branch
-        else catalog.load_table(name)
-    )
     # untouched-since-fork validation, cell by cell
     fork_state = _cell_state(parent, cells)
     head_state = _cell_state(cur, cells)
@@ -1585,10 +1561,7 @@ def _cherry_pick_overwrite(
             f"{len(dups)} of the staged files (already published?): "
             f"{sorted(dups)[:3]}"
         )
-    new = Manifest.from_dict(cur.to_dict())
-    new.snapshot_id = cur.next_snapshot()
-    new.sequence_number = cur.sequence_number + 1
-    new.operation = "overwrite"
+    new = cur.successor("overwrite")
     new.data_files = [
         t
         for t in new.data_files
@@ -1600,9 +1573,7 @@ def _cherry_pick_overwrite(
                 t, sequence_number=new.sequence_number, deletes=[]
             )
         )
-    return catalog.commit_table(
-        name, cur.snapshot_id, new, to_branch=to_branch
-    )
+    return new
 
 
 def _check_gc_enabled(properties: dict, what: str) -> None:

@@ -1174,11 +1174,9 @@ class _ChangesStreamReader(DataSourceStreamReader):
         """The followed ref's current snapshot: a named branch when
         ``option("branch", ...)`` is set (audit consumers streaming the
         staged lineage), else main."""
-        if self._ref_branch:
-            return cat.load_table_ref(
-                self._table, self._ref_branch
-            ).snapshot_id
-        return cat.load_table(self._table).snapshot_id
+        from iceberg_compaction_spark.commit import load_head
+
+        return load_head(cat, self._table, self._ref_branch).snapshot_id
 
     def initialOffset(self):
         if self._starting == "earliest":
@@ -1539,6 +1537,15 @@ def _tasks_from_files(files, new_seq: int, spec_id: int):
     return added
 
 
+def _replayed(head, batch_id: int) -> bool:
+    """Whether a streaming batch's commit already landed on ``head`` (a
+    restart after the commit, before the checkpoint advanced) — the
+    streaming sinks' idempotence check, run against each attempt's
+    fresh head."""
+    last = head.properties.get("streaming.last-batch-id")
+    return last is not None and int(last) >= batch_id
+
+
 class _AppendWriter(DataSourceArrowWriter):
     """Executor-parallel append: each task STREAMS its Arrow batches
     straight into parquet (DataSourceArrowWriter — no Spark Row
@@ -1589,11 +1596,10 @@ class _AppendWriter(DataSourceArrowWriter):
             scheme_of,
         )
 
-        _cat = catalog_from_options(self._copts)
-        _m = (
-            _cat.load_table_ref(self._table, self._branch)
-            if self._branch
-            else _cat.load_table(self._table)
+        from iceberg_compaction_spark.commit import load_head
+
+        _m = load_head(
+            catalog_from_options(self._copts), self._table, self._branch
         )
         self._root = _m.table_root
         # file-size target resolution, Iceberg's order: writer option >
@@ -1831,28 +1837,18 @@ class _AppendWriter(DataSourceArrowWriter):
         ]
 
     def commit(self, messages):
-        from iceberg_compaction_spark.commit import CommitManager
+        from iceberg_compaction_spark.commit import commit_catalog
         from iceberg_compaction_spark.sources.catalog import (
             catalog_from_options,
         )
 
         files = [t for m in messages if m for t in m.files]
-        cat = catalog_from_options(self._copts)
-        mgr = CommitManager()
 
-        def attempt():
-            cur = (
-                cat.load_table_ref(self._table, self._branch)
-                if self._branch
-                else cat.load_table(self._table)
+        def build(cur):
+            new = cur.successor("overwrite" if self._overwrite else "append")
+            added = _tasks_from_files(
+                files, new.sequence_number, cur.default_spec_id
             )
-            new_seq = cur.sequence_number + 1
-            added = _tasks_from_files(files, new_seq, cur.default_spec_id)
-            from iceberg_compaction_spark.sources.manifest import Manifest
-
-            new = Manifest.from_dict(cur.to_dict())
-            new.snapshot_id = cur.snapshot_id + 1
-            new.sequence_number = new_seq
             if self._overwrite:
                 if self._dynamic and cur.partition_spec:
                     # dynamic partition overwrite: only the written
@@ -1870,21 +1866,15 @@ class _AppendWriter(DataSourceArrowWriter):
                     ] + added
                 else:
                     new.data_files = added
-                new.operation = "overwrite"
             else:
                 new.data_files = list(new.data_files) + added
-                new.operation = "append"
             new.assign_row_ids()  # v3 row lineage (no-op on v2)
-            if self._branch:
-                return cat.commit_table(
-                    self._table,
-                    cur.snapshot_id,
-                    new,
-                    to_branch=self._branch,
-                )
-            return cat.commit_table(self._table, cur.snapshot_id, new)
+            return new
 
-        mgr.commit_with_retry(attempt)
+        commit_catalog(
+            catalog_from_options(self._copts), self._table, build,
+            self._branch,
+        )
 
     def abort(self, messages):
         from iceberg_compaction_spark.sources.fileio import fileio_for
@@ -1922,46 +1912,29 @@ class _StreamAppendWriter(DataSourceStreamArrowWriter):
     def write(self, iterator):
         return self._inner.write(iterator)
 
-    def _load_head(self, cat):
-        if self._branch:
-            return cat.load_table_ref(self._table, self._branch)
-        return cat.load_table(self._table)
-
-    def _commit_head(self, cat, cur, new):
-        if self._branch:
-            return cat.commit_table(
-                self._table, cur.snapshot_id, new, to_branch=self._branch
-            )
-        return cat.commit_table(self._table, cur.snapshot_id, new)
-
     def commit(self, messages, batchId):
-        from iceberg_compaction_spark.commit import CommitManager
+        from iceberg_compaction_spark.commit import commit_catalog
         from iceberg_compaction_spark.sources.catalog import (
             catalog_from_options,
         )
-        from iceberg_compaction_spark.sources.manifest import Manifest
 
         files = [t for m in messages if m for t in m.files]
-        cat = catalog_from_options(self._copts)
-        mgr = CommitManager()
 
-        def attempt():
-            cur = self._load_head(cat)
-            last = cur.properties.get("streaming.last-batch-id")
-            if last is not None and int(last) >= batchId:
-                return cur  # replayed batch: already committed
-            new_seq = cur.sequence_number + 1
-            added = _tasks_from_files(files, new_seq, cur.default_spec_id)
-            new = Manifest.from_dict(cur.to_dict())
-            new.snapshot_id = cur.snapshot_id + 1
-            new.sequence_number = new_seq
-            new.data_files = list(new.data_files) + added
+        def build(cur):
+            if _replayed(cur, batchId):
+                return None
+            new = cur.successor("append")
+            new.data_files += _tasks_from_files(
+                files, new.sequence_number, cur.default_spec_id
+            )
             new.properties["streaming.last-batch-id"] = int(batchId)
-            new.operation = "append"
             new.assign_row_ids()  # v3 row lineage (no-op on v2)
-            return self._commit_head(cat, cur, new)
+            return new
 
-        mgr.commit_with_retry(attempt)
+        commit_catalog(
+            catalog_from_options(self._copts), self._table, build,
+            self._branch,
+        )
 
     def abort(self, messages, batchId):
         self._inner.abort(messages)
@@ -1971,19 +1944,17 @@ class _StreamUpsertWriter(DataSourceStreamArrowWriter):
     """Streaming UPSERT sink (CDC ingestion): each micro-batch commits
     the equality-delete + data-file pair a streaming upsert producer
     emits (the shape the reference's docs assume RisingWave/Flink
-    produce, README.md "Why Compaction"; same artifact layout as
-    sources/ingest.py upsert) —
+    produce, README.md "Why Compaction") —
 
     - executors write the batch's rows as rolling data files (the
       append writer's mechanics, partition fan-out included);
     - the driver collects the batch's KEY COLUMNS from those files
       (micro-batch scale by definition — the same bound as any
-      foreachBatch upsert) and writes ONE equality-delete file with the
-      new sequence number baked into ``sys_hidden_seq_num``, attached
-      to every pre-existing data file;
-    - one CAS-retried catalog commit appends both; a retry that lost
-      the race re-stamps the delete file at the fresh sequence so it
-      still applies to the winner's files and not its own batch.
+      foreachBatch upsert) and writes them once as ONE equality-delete
+      file;
+    - one catalog commit of ``ingest.upsert_snapshot`` — the same
+      snapshot the batch ``upsert`` commits — attaches both at the
+      head's next sequence number.
 
     Idempotence matches the append sink: a replayed batch (restart
     after commit, before checkpoint advance) is detected via the
@@ -2017,17 +1988,15 @@ class _StreamUpsertWriter(DataSourceStreamArrowWriter):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from iceberg_compaction_spark.commit import CommitManager
-        from iceberg_compaction_spark.plans.datamodel import (
-            EQUALITY_DELETE,
-            DeleteFile,
-        )
+        from iceberg_compaction_spark.commit import commit_catalog
         from iceberg_compaction_spark.sources.catalog import (
             catalog_from_options,
         )
         from iceberg_compaction_spark.sources.fileio import fileio_for
-        from iceberg_compaction_spark.sources.manifest import Manifest
-        from iceberg_compaction_spark.sources.scan import HIDDEN_SEQ
+        from iceberg_compaction_spark.sources.ingest import (
+            _SCOPE_VALUE_CAP,
+            upsert_snapshot,
+        )
 
         files = [t for m in messages if m for t in m.files]
         if not files:
@@ -2046,87 +2015,42 @@ class _StreamUpsertWriter(DataSourceStreamArrowWriter):
                 "stream (last-wins) before the sink"
             )
 
-        cat = catalog_from_options(self._copts)
-        eq_path = None  # assigned on first attempt, stable across retries
+        def _key_vals(col: str):
+            # the key values are already driver-side (micro-batch
+            # scale); per-field type safety lives in _eq_delete_scope
+            vals = key_tbl.column(col).unique().to_pylist()
+            return None if len(vals) > _SCOPE_VALUE_CAP else vals
 
-        def _stamp_eq(root: str, seq: int) -> str:
+        eq_path = None  # written by the first attempt that commits
+
+        def build(cur):
             nonlocal eq_path
+            if _replayed(cur, batchId):
+                return None
             if eq_path is None:
                 eq_path = os.path.join(
-                    root,
+                    cur.table_root,
                     f"upsert-b{batchId}-{_uuid.uuid4().hex[:8]}"
                     "-eqdel.parquet",
                 )
-            stamped = key_tbl.append_column(
-                HIDDEN_SEQ,
-                pa.array([seq] * key_tbl.num_rows, type=pa.int64()),
+                buf = _io.BytesIO()
+                pq.write_table(key_tbl, buf, compression="zstd")
+                fileio_for(eq_path).write_bytes(eq_path, buf.getvalue())
+            new = upsert_snapshot(
+                cur,
+                self._keys,
+                eq_path,
+                n_rows,
+                _key_vals,
+                _tasks_from_files(files, 0, cur.default_spec_id),
             )
-            buf = _io.BytesIO()
-            pq.write_table(stamped, buf, compression="zstd")
-            fileio_for(eq_path).write_bytes(eq_path, buf.getvalue())
-            return eq_path
-
-        # partition-scoped attachment, same contract as ingest.upsert:
-        # identity partition on a key column means files in untouched
-        # partitions provably hold no matching row (the key values are
-        # already driver-side in key_tbl — micro-batch scale)
-        from iceberg_compaction_spark.sources.ingest import (
-            _SCOPE_VALUE_CAP,
-            _eq_attach_needed,
-            _eq_delete_scope,
-        )
-
-        def _key_vals(col: str):
-            vals = key_tbl.column(col).unique().to_pylist()
-            # cap only; per-field type safety lives in _eq_delete_scope
-            return None if len(vals) > _SCOPE_VALUE_CAP else vals
-
-        def attempt():
-            cur = (
-                cat.load_table_ref(self._table, self._branch)
-                if self._branch
-                else cat.load_table(self._table)
-            )
-            last = cur.properties.get("streaming.last-batch-id")
-            if last is not None and int(last) >= batchId:
-                return cur  # replayed batch: already committed
-            new_seq = cur.sequence_number + 1
-            path = _stamp_eq(cur.table_root, new_seq)
-            eq_file = DeleteFile(
-                path=path,
-                content=EQUALITY_DELETE,
-                file_size_in_bytes=fileio_for(path).size(path),
-                record_count=n_rows,
-                sequence_number=new_seq,
-                equality_ids=self._keys,
-            )
-            added = _tasks_from_files(files, new_seq, cur.default_spec_id)
-            new = Manifest.from_dict(cur.to_dict())
-            new.snapshot_id = cur.snapshot_id + 1
-            new.sequence_number = new_seq
-            scope = _eq_delete_scope(cur, list(self._keys), _key_vals)
-            for t in new.data_files:
-                # applies to every file at a strictly lower sequence —
-                # all current files, never this batch's own; scoped to
-                # touched partitions when provably safe
-                if scope is None or _eq_attach_needed(
-                    t, cur.default_spec_id, *scope
-                ):
-                    t.deletes.append(eq_file)
-            new.data_files = list(new.data_files) + added
             new.properties["streaming.last-batch-id"] = int(batchId)
-            new.operation = "overwrite"  # rows change in place
-            new.assign_row_ids()  # v3 row lineage (no-op on v2)
-            if self._branch:
-                return cat.commit_table(
-                    self._table,
-                    cur.snapshot_id,
-                    new,
-                    to_branch=self._branch,
-                )
-            return cat.commit_table(self._table, cur.snapshot_id, new)
+            return new
 
-        CommitManager().commit_with_retry(attempt)
+        commit_catalog(
+            catalog_from_options(self._copts), self._table, build,
+            self._branch,
+        )
 
     def abort(self, messages, batchId):
         self._inner.abort(messages)

@@ -11,16 +11,16 @@ would —
 - one EQUALITY-DELETE file over the primary keys of every changed row,
   sequenced ABOVE all current data files (so it applies to them and
   only them: Iceberg's sequence-number rule, J2's ``seq`` residual);
-- one data file holding the upserted rows, carrying that same new
-  sequence number (so the delete does NOT apply to it);
+- the upserted rows' data files (one per touched partition), carrying
+  that same new sequence number (so the delete does NOT apply to them);
 - a CAS catalog commit appending both.
 
 Reading the table through :func:`read_table_mor` then shows exactly the
 upserted state; running compaction afterwards materializes it and drops
 the delete files — the full produce -> read -> compact lifecycle.
 
-At scale this writes one delete file + one data file per commit
-(streaming sinks roll them per checkpoint); the heavy lifting (key
+At scale this writes one delete file + the batch's data files per
+commit (streaming sinks roll them per checkpoint); the heavy lifting (key
 dedup within the batch) is one window-free groupBy on the keys.
 """
 
@@ -32,6 +32,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_compaction_spark.commit import commit_catalog, load_head
 from iceberg_compaction_spark.operators.mor import rewrite_file_group
 from iceberg_compaction_spark.plans.datamodel import (
     EQUALITY_DELETE,
@@ -202,29 +203,6 @@ def _eq_attach_needed(t, default_spec_id, spec_len, fields):
     return True
 
 
-def _load_head(catalog, table_name: str, to_branch: str | None):
-    """The DML planning base: the named branch's snapshot when
-    ``to_branch`` is set (reference: branch-targeted commits,
-    core/src/compaction/mod.rs:97,1307-1336), else the table head."""
-    if to_branch:
-        return catalog.load_table_ref(table_name, to_branch)
-    return catalog.load_table(table_name)
-
-
-def _commit(catalog, table_name: str, cur, new, to_branch: str | None):
-    """CAS-commit ``new`` against the target ref — main by default, a
-    named branch under ``to_branch`` (main then provably stays put
-    until a fast-forward publishes the branch).
-
-    v3 row lineage: every DML commit routes through here, so this is
-    where newly added data files get their ``first_row_id`` assigned
-    (spec: the commit assigns row ids from the table's next-row-id)."""
-    new.assign_row_ids()
-    return catalog.commit_table(
-        table_name, cur.snapshot_id, new, to_branch=to_branch
-    )
-
-
 def _assert_unique_keys(df: DataFrame, keys: list[str], what: str) -> int:
     """ONE aggregation job asserting batch key-uniqueness (total rows
     and distinct keys used to be two separate jobs — every upsert/MERGE
@@ -264,14 +242,14 @@ def upsert(
     this function asserts key uniqueness to fail loudly instead of
     committing ambiguous state.
 
-    Commit protocol: CAS with retry through the catalog (same seam as
-    compaction commits); each retry reloads the table, RE-SEQUENCES the
-    write above the fresh head (rewriting the equality-delete file's
-    baked sys_hidden_seq_num column when the sequence moved — equality
-    deletes apply only to strictly-LOWER sequences, so committing a
-    retry at the stale sequence would skip the race winner's files and
-    leave two live rows per key), and re-attaches the delete file to the
-    files of the fresh snapshot.
+    Commit protocol: the batch is written once — its rows through the
+    DML data writer (one file per touched partition on a partitioned
+    table), its keys, by the first commit attempt, as one
+    equality-delete file holding only the key columns — and
+    :func:`upsert_snapshot` attaches both to the head the catalog commit
+    lands on.  A retry after a lost CAS race re-sequences above the
+    winner without touching a file: readers take an equality delete's
+    sequence number from its manifest entry.
     """
     upserts = changes
     deletes = None
@@ -280,13 +258,9 @@ def upsert(
         upserts = changes.where(F.col(op_col) != DELETE_OP).drop(op_col)
     n_changes = _assert_unique_keys(changes, keys, "changes batch")
 
-    from iceberg_compaction_spark.commit import CommitConflict  # noqa: F401
-
-    current = _load_head(catalog, table_name, to_branch)
-    table_root = current.table_root
-    suffix = uuid.uuid4().hex[:8]
-    eq_path = os.path.join(table_root, f"upsert-{suffix}-eqdel.parquet")
-    data_path = os.path.join(table_root, f"upsert-{suffix}-data.parquet")
+    current = load_head(catalog, table_name, to_branch)
+    base = f"upsert-{uuid.uuid4().hex[:8]}"
+    eq_path = os.path.join(current.table_root, f"{base}-eqdel.parquet")
 
     # equality-delete keys: EVERY change row (upserts replace, deletes
     # remove — both need the old row gone)
@@ -300,21 +274,11 @@ def upsert(
     has_upserts = (
         n_changes > 0 if op_col is None else upserts.limit(1).count() > 0
     )
-    if has_upserts:
-        _write_single_parquet(
-            _stamp_field_ids_like_table(upserts, current), data_path
-        )
-
-    written_seq: list[int] = []  # seq the eq parquet currently carries
-
-    def _stamp(seq: int) -> None:
-        """(Re)write the eq-delete parquet with ``seq`` baked into its
-        sys_hidden_seq_num column.  os.replace keeps the path stable, so
-        retries republish the same manifest paths."""
-        _write_single_parquet(
-            key_df.withColumn(HIDDEN_SEQ, F.lit(seq).cast("long")), eq_path
-        )
-        written_seq[:] = [seq]
+    data_tasks = (
+        _write_dml_data_files(spark, current, upserts, base)
+        if has_upserts
+        else []
+    )
 
     # Partition-scoped attachment (see _eq_delete_scope): the distinct
     # key values are collected at most once per column and reused across
@@ -338,71 +302,70 @@ def upsert(
             )
         return _scope_vals[col]
 
-    def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
-        # sequence ABOVE the head we are committing against — recomputed
-        # per attempt so a retry after losing the CAS race lands STRICTLY
-        # above the winner (its delete must apply to the winner's files)
-        new_seq = cur.sequence_number + 1
-        if written_seq != [new_seq]:
-            _stamp(new_seq)
-        from iceberg_compaction_spark.sources.fileio import fileio_for
+    n_keys: list[int] = []  # set once the delete file is written
 
-        eq_file = DeleteFile(
-            path=eq_path,
-            content=EQUALITY_DELETE,
-            file_size_in_bytes=fileio_for(eq_path).size(eq_path),
-            sequence_number=new_seq,
-            equality_ids=tuple(keys),
-        )
-        data_task = None
-        if has_upserts:
+    def build(head: Manifest) -> Manifest:
+        if not n_keys:  # the first attempt writes the delete file
+            _write_single_parquet(key_df, eq_path)
             import pyarrow.parquet as pq
 
-            fio = fileio_for(data_path)
-            with fio.open_input(data_path) as fh:
-                md = pq.read_metadata(fh)
-            dsize = fio.size(data_path)
-            # data parquet carries no seq column (seq is manifest
-            # metadata, attached at scan time) — no rewrite needed
-            data_task = FileScanTask(
-                data_file_path=data_path,
-                length=dsize,
-                file_size_in_bytes=dsize,
-                record_count=md.num_rows,
-                sequence_number=new_seq,
-            )
-        # from_dict round-trip: a deep copy that preserves EVERY table
-        # property (partition spec, declared sort order, last-column-id,
-        # per-file spec ids and column bounds) — rebuilding the manifest
-        # field-by-field here silently dropped them (round-8 fix)
-        new = Manifest.from_dict(cur.to_dict())
-        new.snapshot_id = cur.next_snapshot()
-        new.sequence_number = new_seq
-        # rows change in place: streaming raises unless skipped
-        new.operation = "overwrite"
-        # The delete applies to every file with an older sequence
-        # number — i.e. all current files — but when the table is
-        # identity-partitioned on a key column, files in partitions the
-        # batch never touches provably hold no matching row, so the
-        # attachment (and every later scan's J2 eq-join against it)
-        # is scoped to the touched partitions.  At 10^5 files this is
-        # the difference between every scan paying the eq-join per
-        # commit until compaction and only the written partitions
-        # paying it.
-        scope = _eq_delete_scope(cur, keys, _key_vals)
-        for t in new.data_files:
-            if scope is None or _eq_attach_needed(
-                t, cur.default_spec_id, *scope
-            ):
-                t.deletes.append(eq_file)
-        if data_task is not None:
-            new.data_files.append(data_task)
-        return _commit(catalog, table_name, cur, new, to_branch)
+            from iceberg_compaction_spark.sources.fileio import open_input
 
-    from iceberg_compaction_spark.commit import CommitManager
+            with open_input(eq_path) as fh:
+                n_keys.append(pq.read_metadata(fh).num_rows)
+        return upsert_snapshot(
+            head, keys, eq_path, n_keys[0], _key_vals, data_tasks
+        )
 
-    return CommitManager().commit_with_retry(attempt)
+    return commit_catalog(catalog, table_name, build, to_branch)
+
+
+def upsert_snapshot(
+    head: Manifest,
+    keys,
+    eq_path: str,
+    n_keys: int,
+    key_vals_for,
+    data_tasks: list[FileScanTask],
+) -> Manifest:
+    """The upsert commit of both :func:`upsert` and the DataSource's
+    streaming upsert sink: ``head``'s successor with the equality delete
+    at ``eq_path`` (``n_keys`` key rows, key columns only) and the
+    batch's new data files, both at the new sequence number — so the
+    delete applies to every older file and never to the batch's own.
+
+    The delete attaches to every current file, except that files in
+    partitions the batch provably never touches are skipped (see
+    :func:`_eq_delete_scope`; ``key_vals_for(col)`` gives the batch's
+    distinct values of a key column, or None to decline).  At 10^5
+    files that spares every later scan of an untouched partition the
+    eq-join against this commit's delete until compaction."""
+    import dataclasses
+
+    from iceberg_compaction_spark.sources.fileio import fileio_for
+
+    # rows change in place: streaming raises unless skipped
+    new = head.successor("overwrite")
+    seq = new.sequence_number
+    eq_file = DeleteFile(
+        path=eq_path,
+        content=EQUALITY_DELETE,
+        file_size_in_bytes=fileio_for(eq_path).size(eq_path),
+        record_count=n_keys,
+        sequence_number=seq,
+        equality_ids=tuple(keys),
+    )
+    scope = _eq_delete_scope(head, list(keys), key_vals_for)
+    for t in new.data_files:
+        if scope is None or _eq_attach_needed(
+            t, head.default_spec_id, *scope
+        ):
+            t.deletes.append(eq_file)
+    new.data_files += [
+        dataclasses.replace(t, sequence_number=seq) for t in data_tasks
+    ]
+    new.assign_row_ids()  # v3 row lineage (no-op on v2)
+    return new
 
 
 def delete_where(
@@ -444,8 +407,7 @@ def delete_where(
 
     suffix = uuid.uuid4().hex[:8]
 
-    def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
+    def build(cur: Manifest) -> Manifest | None:
         matched = (
             _matched_scan(spark, cur)
             .where(predicate)
@@ -458,15 +420,10 @@ def delete_where(
         )
         refs, n = _write_position_artifact(spark, cur, matched, path)
         if n == 0:
-            return cur
-        return _commit_row_change(
-            catalog, table_name, cur, refs, n, path, None,
-            operation="delete", to_branch=to_branch,
-        )
+            return None
+        return _row_change_snapshot(cur, refs, n, path, None, "delete")
 
-    from iceberg_compaction_spark.commit import CommitManager
-
-    return CommitManager().commit_with_retry(attempt)
+    return commit_catalog(catalog, table_name, build, to_branch)
 
 
 def _matched_scan(spark, cur) -> DataFrame:
@@ -563,11 +520,14 @@ def _write_dml_data_files(
 ) -> list[FileScanTask]:
     """Write a DML statement's new-rows frame under the table's CURRENT
     partition spec: partitioned Spark-native tables fan out through the
-    transform-aware sized writer (partition tuples in the returned
-    tasks — Iceberg's partitioned-write contract); unpartitioned tables
-    and FileIO-only backends keep the single-file artifact (a bounded
-    changed-rows set by definition).  Sequence numbers are stamped by
-    the caller's commit."""
+    transform-aware sized writer (partition tuples and column bounds in
+    the returned tasks — Iceberg's partitioned-write contract), with
+    rows hash-distributed by partition first (Iceberg's default
+    ``write.distribution-mode`` for partitioned tables), so each touched
+    partition gets one file rather than one per input task; unpartitioned
+    tables and FileIO-only backends keep the single-file artifact (a
+    bounded changed-rows set by definition).  Sequence numbers are
+    stamped by the caller's commit."""
     from iceberg_compaction_spark.sources.scan import spark_native_paths
 
     df = _stamp_field_ids_like_table(df, cur)
@@ -595,7 +555,12 @@ def _write_dml_data_files(
         ] or None
         out_dir = os.path.join(cur.table_root, f"{base}-data")
         tasks = write_sized_parquet(
-            df, out_dir, WriterConfig(), sort_order=order, partition_spec=spec
+            df,
+            out_dir,
+            WriterConfig(),
+            output_parallelism=spark.sparkContext.defaultParallelism,
+            sort_order=order,
+            partition_spec=spec,
         )
         for t in tasks:
             t.spec_id = cur.default_spec_id
@@ -621,31 +586,25 @@ def _write_dml_data_files(
     ]
 
 
-def _commit_row_change(
-    catalog,
-    table_name: str,
+def _row_change_snapshot(
     cur: Manifest,
     refs: set,
     n_deleted: int,
     delete_path: str,
     new_data_tasks: "list[FileScanTask] | None",
     operation: str,
-    to_branch: str | None = None,
 ) -> Manifest:
-    """One-snapshot commit of a predicate DML statement: the position
-    delete attaches to exactly the data files it references; the new
-    data file (updated/inserted rows), when present, joins the snapshot
-    at the SAME new sequence number — the delete does not apply to it
+    """The snapshot of a predicate DML statement: the position delete
+    attaches to exactly the data files it references; the new data
+    files (updated/inserted rows), when present, join the snapshot at
+    the SAME new sequence number — the delete does not apply to them
     (it references only the old files)."""
     from iceberg_compaction_spark.plans.datamodel import POSITION_DELETE
-    from iceberg_compaction_spark.sources.fileio import fileio_for, open_input
+    from iceberg_compaction_spark.sources.fileio import fileio_for
     from iceberg_compaction_spark.sources.scan import normalize_path_str
 
-    new_seq = cur.sequence_number + 1
-    new = Manifest.from_dict(cur.to_dict())
-    new.snapshot_id = cur.next_snapshot()
-    new.sequence_number = new_seq
-    new.operation = operation
+    new = cur.successor(operation)
+    new_seq = new.sequence_number
     if n_deleted:
         dfile = DeleteFile(
             path=delete_path,
@@ -660,7 +619,8 @@ def _commit_row_change(
     for t in new_data_tasks or ():
         t.sequence_number = new_seq
         new.data_files.append(t)
-    return _commit(catalog, table_name, cur, new, to_branch)
+    new.assign_row_ids()  # v3 row lineage (no-op on v2)
+    return new
 
 
 def update_where(
@@ -702,8 +662,7 @@ def update_where(
 
     suffix = uuid.uuid4().hex[:8]
 
-    def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
+    def build(cur: Manifest) -> Manifest | None:
         df = _matched_scan(spark, cur)
         table_cols = [
             c
@@ -733,7 +692,7 @@ def update_where(
                 del_path,
             )
             if n == 0:
-                return cur
+                return None
             updated = matched.select(
                 *[
                     F.expr(set_exprs[c]).alias(c)
@@ -747,14 +706,11 @@ def update_where(
             )
         finally:
             matched.unpersist()
-        return _commit_row_change(
-            catalog, table_name, cur, refs, n, del_path, data_tasks,
-            operation="overwrite", to_branch=to_branch,
+        return _row_change_snapshot(
+            cur, refs, n, del_path, data_tasks, "overwrite"
         )
 
-    from iceberg_compaction_spark.commit import CommitManager
-
-    return CommitManager().commit_with_retry(attempt)
+    return commit_catalog(catalog, table_name, build, to_branch)
 
 
 def merge_into(
@@ -838,8 +794,7 @@ def merge_into(
     _assert_unique_keys(source, keys, "MERGE source")
     suffix = uuid.uuid4().hex[:8]
 
-    def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
+    def build(cur: Manifest) -> Manifest | None:
         df = _matched_scan(spark, cur)
         if delete_unmatched_target:
             # the NOT MATCHED BY SOURCE anti-join reads the target scan
@@ -945,7 +900,7 @@ def merge_into(
 
             has_rows = out is not None and out.limit(1).count() > 0
             if not has_rows and n == 0:
-                return cur
+                return None
             data_tasks = (
                 _write_dml_data_files(spark, cur, out, f"merge-{suffix}")
                 if has_rows
@@ -955,14 +910,11 @@ def merge_into(
             joined.unpersist()
             if delete_unmatched_target:
                 df.unpersist()
-        return _commit_row_change(
-            catalog, table_name, cur, refs, n, del_path, data_tasks,
-            operation="overwrite", to_branch=to_branch,
+        return _row_change_snapshot(
+            cur, refs, n, del_path, data_tasks, "overwrite"
         )
 
-    from iceberg_compaction_spark.commit import CommitManager
-
-    return CommitManager().commit_with_retry(attempt)
+    return commit_catalog(catalog, table_name, build, to_branch)
 
 
 def _stamp_hive_partitions(
@@ -1041,7 +993,7 @@ def add_files(
     import on a branch (the WAP pattern for bulk backfills: import,
     audit the branch, fast-forward).
     """
-    from iceberg_compaction_spark.commit import CommitManager
+    import dataclasses
 
     staged = Manifest.from_parquet_dir(src_dir, recursive=True)
     if not staged.data_files:
@@ -1062,8 +1014,7 @@ def add_files(
             for t in staged.data_files
         }
 
-    def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
+    def build(cur: Manifest) -> Manifest:
         if cur.partition_spec:
             _stamp_hive_partitions(
                 staged,
@@ -1108,16 +1059,16 @@ def add_files(
                 f"{len(dups)} file(s) already tracked by "
                 f"{table_name}: {dups[:3]}"
             )
-        new = Manifest.from_dict(cur.to_dict())
-        new.snapshot_id = cur.next_snapshot()
-        new.sequence_number = cur.sequence_number + 1
-        new.operation = "append"
-        for t in staged.data_files:
-            t.sequence_number = new.sequence_number
-            new.data_files.append(t)
-        return _commit(catalog, table_name, cur, new, to_branch)
+        new = cur.successor("append")
+        # copies: row-id assignment must start fresh on every attempt
+        new.data_files += [
+            dataclasses.replace(t, sequence_number=new.sequence_number)
+            for t in staged.data_files
+        ]
+        new.assign_row_ids()  # v3 row lineage (no-op on v2)
+        return new
 
-    return CommitManager().commit_with_retry(attempt)
+    return commit_catalog(catalog, table_name, build, to_branch)
 
 
 def partition_cell(part) -> tuple:
@@ -1158,9 +1109,9 @@ def overwrite_partitions(
     the data files are written once and only re-sequenced on retry
     (parquet carries no sequence column).
     """
-    from iceberg_compaction_spark.commit import CommitManager
+    import dataclasses
 
-    current = _load_head(catalog, table_name, to_branch)
+    current = load_head(catalog, table_name, to_branch)
     suffix = uuid.uuid4().hex[:8]
     new_tasks = _write_dml_data_files(
         spark, current, df, f"overwrite-{suffix}"
@@ -1169,28 +1120,23 @@ def overwrite_partitions(
         return current  # empty batch: dynamic overwrite replaces nothing
     written_cells = {partition_cell(t.partition) for t in new_tasks}
 
-    def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
-        new = Manifest.from_dict(cur.to_dict())
-        new.snapshot_id = cur.next_snapshot()
-        new.sequence_number = cur.sequence_number + 1
-        new.operation = "overwrite"
+    def build(cur: Manifest) -> Manifest:
+        new = cur.successor("overwrite")
         new.data_files = [
             t
             for t in new.data_files
             if partition_cell(t.partition) not in written_cells
         ]
-        import dataclasses
-
         for t in new_tasks:
             new.data_files.append(
                 dataclasses.replace(
                     t, sequence_number=new.sequence_number, deletes=[]
                 )
             )
-        return _commit(catalog, table_name, cur, new, to_branch)
+        new.assign_row_ids()  # v3 row lineage (no-op on v2)
+        return new
 
-    return CommitManager().commit_with_retry(attempt)
+    return commit_catalog(catalog, table_name, build, to_branch)
 
 
 def read_table_mor(spark: SparkSession, manifest: Manifest) -> DataFrame:

@@ -439,6 +439,22 @@ class Manifest:
             next_row_id=int(d.get("next_row_id", 0)),
         )
 
+    def successor(self, operation: str) -> "Manifest":
+        """The next snapshot of this table, to be edited and committed:
+        a deep copy (the ``from_dict`` round trip keeps every table
+        property — partition spec, declared sort order, last-column-id,
+        statistics files, per-file spec ids and column bounds) with the
+        next snapshot id and ``operation`` stamped.  Every operation
+        but a row-preserving ``replace`` takes the next data sequence
+        number, which is the one the commit's new files and deletes
+        carry."""
+        new = Manifest.from_dict(self.to_dict())
+        new.snapshot_id = self.next_snapshot()
+        if operation != "replace":
+            new.sequence_number = self.sequence_number + 1
+        new.operation = operation
+        return new
+
     # ---- v3 row lineage ----------------------------------------------------
 
     def assign_row_ids(self) -> int:

@@ -3,7 +3,7 @@
 query that reads them runs a Python worker.  Schema, rows and row order
 match ``spark.createDataFrame(rows, schema)``; the curation flagship
 releases its shingle/signature caches once connected components has
-materialized the pairs."""
+materialized the pairs, and the unscoped dedup entries cache nothing."""
 
 import ast
 import pathlib
@@ -190,6 +190,36 @@ def test_curation_flagship_releases_its_caches(spark, sf_dir):
     # kept rows
     assert 0 < len(want) < 52
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_minhash_lsh",
+        "dedup_simhash_pairs",
+        "dedup_containment",
+        "dedup_incremental",
+    ],
+)
+def test_unscoped_dedup_entries_leave_no_cache(spark, sf_dir, name):
+    """The dedup entries return lazy frames with no scope to own a
+    cache, so they persist nothing: collecting one leaves the session
+    cache empty, and its rows still match the DuckDB oracle."""
+    import duckdb
+
+    from iceberg_compaction_spark import registry
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    got = sorted(map(tuple, registry.QUERIES[name](spark, sf_dir).collect()))
+    assert cache.isEmpty()
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/documents.parquet')"
+    )
+    assert got == sorted(con.execute(registry.ORACLES[name]).fetchall())
 
 
 def _create_calls(tree):

@@ -203,12 +203,21 @@ def test_upsert_racing_upsert_resequences_on_retry(spark, table):
     regressed below the head."""
     from iceberg_compaction_spark.sources.ingest import read_table_mor
 
+    from iceberg_compaction_spark.plans.datamodel import EQUALITY_DELETE
+
     real_commit = table.commit_table
     injected = []
+    loser_eq = {}  # the loser's equality-delete file -> (size, mtime)
+    winner_seq = []
 
     def racing_commit(name, expected, new, to_branch=None):
         if not injected:
             injected.append(True)
+            for t in new.data_files:
+                for d in t.deletes:
+                    if d.content == EQUALITY_DELETE:
+                        st = os.stat(d.path)
+                        loser_eq[d.path] = (st.st_size, st.st_mtime_ns)
             # a concurrent writer beats us to the head with the same key
             upsert(
                 spark,
@@ -217,6 +226,7 @@ def test_upsert_racing_upsert_resequences_on_retry(spark, table):
                 spark.createDataFrame([(3, "winner-mid")], ["id", "val"]),
                 keys=["id"],
             )
+            winner_seq.append(table.load_table("t").sequence_number)
         return real_commit(name, expected, new, to_branch=to_branch)
 
     table.commit_table = racing_commit
@@ -234,7 +244,19 @@ def test_upsert_racing_upsert_resequences_on_retry(spark, table):
     head = table.load_table("t")
     assert head.snapshot_id == 3
     # strictly monotonic: loser re-sequenced above the winner's seq
-    assert head.sequence_number == 3
+    assert head.sequence_number == 3 == winner_seq[0] + 1
+    # the retry re-sequenced in the manifest only: the loser's
+    # equality-delete file was written once and never touched again
+    (eq_path, before), = loser_eq.items()
+    st = os.stat(eq_path)
+    assert (st.st_size, st.st_mtime_ns) == before
+    committed = {
+        d.sequence_number
+        for t in head.data_files
+        for d in t.deletes
+        if d.path == eq_path
+    }
+    assert committed == {winner_seq[0] + 1}
 
     df = read_table_mor(spark, head)
     # exactly ONE live row for the contended key (the dict helper would
@@ -999,6 +1021,56 @@ def test_upsert_eq_delete_scoped_to_touched_partitions(spark, tmp_path):
     }
     assert got[2] == "v2-new" and got[100] == "v100"
     assert got[7] == "v7" and len(got) == 16
+
+
+def test_upsert_partitioned_writes_one_file_per_touched_partition(
+    spark, tmp_path
+):
+    """An upsert on a partitioned table writes its rows the way
+    update_where does: one data file per touched partition, each with
+    its partition tuple and footer column bounds (a single file holding
+    two partitions under partition ``()`` can never be pruned)."""
+    cat = _partitioned_table(tmp_path)
+    changes = spark.createDataFrame(
+        [("en", 2, "v2-new"), ("fr", 100, "v100"), ("fr", 6, "v6-new")],
+        ["lang", "id", "val"],
+    )
+    m = upsert(spark, cat, "p", changes, keys=["lang", "id"])
+    added = [t for t in m.data_files if t.sequence_number == 2]
+    assert sorted(t.partition for t in added) == [("en",), ("fr",)]
+    for t in added:
+        assert t.column_bounds and "id" in t.column_bounds
+        langs = {
+            r["lang"] for r in spark.read.parquet(t.data_file_path).collect()
+        }
+        assert langs == {t.partition[0]}
+    got = {r["id"]: r["val"] for r in read_table_mor(spark, m).collect()}
+    assert got[2] == "v2-new" and got[6] == "v6-new" and got[100] == "v100"
+    assert len(got) == 16
+
+
+def test_upsert_eq_delete_counts_keys_and_holds_only_keys(spark, table):
+    """The equality delete records one row per changed key (upserts and
+    deletes alike) and its file holds only the key columns — the
+    sequence lives in the manifest entry, not in the file."""
+    from iceberg_compaction_spark.plans.datamodel import EQUALITY_DELETE
+
+    changes = spark.createDataFrame(
+        [(3, "x", "U"), (0, "y", "D"), (42, "z", "I")],
+        ["id", "val", "op"],
+    )
+    m = upsert(spark, table, "t", changes, keys=["id"], op_col="op")
+    eqs = {
+        d.path: d
+        for t in m.data_files
+        for d in t.deletes
+        if d.content == EQUALITY_DELETE
+    }
+    (d,) = eqs.values()
+    assert d.record_count == 3
+    assert d.sequence_number == m.sequence_number == 2
+    assert pq.read_schema(d.path).names == ["id"]
+    assert pq.read_metadata(d.path).num_rows == 3
 
 
 def test_upsert_eq_delete_scope_plan_has_no_eq_join_on_untouched(

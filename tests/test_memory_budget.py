@@ -118,10 +118,7 @@ def test_object_store_profile_emits_s3a_confs():
     profile mapping to the cloud connector's fadvise/readahead/vectored
     IO — the Spark-side replacement for the reference's prefetching
     scan (iceberg_file_task_scan.rs:473-580)."""
-    from iceberg_compaction_spark.config import (
-        CompactionConfig,
-        ObjectStoreReadConfig,
-    )
+    from iceberg_compaction_spark.config import ObjectStoreReadConfig
 
     conf = ObjectStoreReadConfig.for_compaction().spark_conf()
     assert conf["spark.hadoop.fs.s3a.experimental.input.fadvise"] == (
@@ -132,9 +129,6 @@ def test_object_store_profile_emits_s3a_confs():
 
     rnd = ObjectStoreReadConfig.for_point_lookups().spark_conf()
     assert rnd["spark.hadoop.fs.s3a.experimental.input.fadvise"] == "random"
-
-    # wired as a first-class CompactionConfig field, default sequential
-    assert CompactionConfig().object_store.input_policy == "sequential"
 
     import pytest as _pytest
 
