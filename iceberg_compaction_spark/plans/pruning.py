@@ -83,9 +83,15 @@ def footer_stats(md) -> tuple[dict[str, tuple], dict[str, int]]:
             if st is None or not st.has_min_max:
                 dead.add(name)
                 continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes) or isinstance(hi, bytes):
-                dead.add(name)  # physical binary without logical order
+            try:
+                lo, hi = st.min, st.max
+            except NotImplementedError:  # e.g. Spark's INT64 decimals
+                dead.add(name)
+                continue
+            if not isinstance(lo, tuple(_TYPE_TAGS)):
+                # physical binary without logical order, or a type with
+                # no manifest form (e.g. Decimal)
+                dead.add(name)
                 continue
             if name in bounds:
                 b = bounds[name]

@@ -1952,7 +1952,7 @@ class _StreamUpsertWriter(DataSourceStreamArrowWriter):
       (micro-batch scale by definition — the same bound as any
       foreachBatch upsert) and writes them once as ONE equality-delete
       file;
-    - one catalog commit of ``ingest.upsert_snapshot`` — the same
+    - one catalog commit of ``ingest.upsert_build`` — the same
       snapshot the batch ``upsert`` commits — attaches both at the
       head's next sequence number.
 
@@ -1982,7 +1982,6 @@ class _StreamUpsertWriter(DataSourceStreamArrowWriter):
         return self._inner.write(iterator)
 
     def commit(self, messages, batchId):
-        import io as _io
         import uuid as _uuid
 
         import pyarrow as pa
@@ -1993,10 +1992,7 @@ class _StreamUpsertWriter(DataSourceStreamArrowWriter):
             catalog_from_options,
         )
         from iceberg_compaction_spark.sources.fileio import fileio_for
-        from iceberg_compaction_spark.sources.ingest import (
-            _SCOPE_VALUE_CAP,
-            upsert_snapshot,
-        )
+        from iceberg_compaction_spark.sources.ingest import upsert_build
 
         files = [t for m in messages if m for t in m.files]
         if not files:
@@ -2005,44 +2001,18 @@ class _StreamUpsertWriter(DataSourceStreamArrowWriter):
         for entry in files:
             with fileio_for(entry[0]).open_input(entry[0]) as fh:
                 key_tbls.append(pq.read_table(fh, columns=list(self._keys)))
-        key_tbl = pa.concat_tables(key_tbls)
-        n_rows = key_tbl.num_rows
-        n_distinct = key_tbl.group_by(list(self._keys)).aggregate([]).num_rows
-        if n_rows != n_distinct:
-            raise ValueError(
-                f"upsert batch {batchId} has duplicate keys ({n_rows} "
-                f"rows, {n_distinct} distinct) — pre-aggregate the "
-                "stream (last-wins) before the sink"
-            )
-
-        def _key_vals(col: str):
-            # the key values are already driver-side (micro-batch
-            # scale); per-field type safety lives in _eq_delete_scope
-            vals = key_tbl.column(col).unique().to_pylist()
-            return None if len(vals) > _SCOPE_VALUE_CAP else vals
-
-        eq_path = None  # written by the first attempt that commits
+        upsert = upsert_build(
+            self._keys,
+            pa.concat_tables(key_tbls),
+            f"upsert batch {batchId}",
+            f"upsert-b{batchId}-{_uuid.uuid4().hex[:8]}",
+        )
 
         def build(cur):
-            nonlocal eq_path
             if _replayed(cur, batchId):
                 return None
-            if eq_path is None:
-                eq_path = os.path.join(
-                    cur.table_root,
-                    f"upsert-b{batchId}-{_uuid.uuid4().hex[:8]}"
-                    "-eqdel.parquet",
-                )
-                buf = _io.BytesIO()
-                pq.write_table(key_tbl, buf, compression="zstd")
-                fileio_for(eq_path).write_bytes(eq_path, buf.getvalue())
-            new = upsert_snapshot(
-                cur,
-                self._keys,
-                eq_path,
-                n_rows,
-                _key_vals,
-                _tasks_from_files(files, 0, cur.default_spec_id),
+            new = upsert(
+                cur, _tasks_from_files(files, 0, cur.default_spec_id)
             )
             new.properties["streaming.last-batch-id"] = int(batchId)
             return new

@@ -20,8 +20,10 @@ upserted state; running compaction afterwards materializes it and drops
 the delete files — the full produce -> read -> compact lifecycle.
 
 At scale this writes one delete file + the batch's data files per
-commit (streaming sinks roll them per checkpoint); the heavy lifting (key
-dedup within the batch) is one window-free groupBy on the keys.
+commit (streaming sinks roll them per checkpoint).  The batch's key
+columns reach the driver once, as one Arrow table: the key-uniqueness
+check, the partition scope and the equality-delete write all read it
+there, with no further Spark job.
 """
 
 from __future__ import annotations
@@ -40,6 +42,7 @@ from iceberg_compaction_spark.plans.datamodel import (
     FileGroup,
     FileScanTask,
 )
+from iceberg_compaction_spark.sources.fileio import fileio_for
 from iceberg_compaction_spark.sources.manifest import Manifest
 from iceberg_compaction_spark.sources.scan import HIDDEN_SEQ
 
@@ -72,25 +75,19 @@ def _stamp_field_ids_like_table(df: DataFrame, cur: Manifest) -> DataFrame:
 
 
 def _write_single_parquet(df: DataFrame, path: str) -> None:
-    """Write a DataFrame as exactly one parquet FILE at ``path``,
-    routed through the FileIO seam.
+    """Write a DML statement's new data rows as exactly one parquet FILE
+    at ``path``, routed through the FileIO seam.
 
-    Local warehouses take the Spark write path (one executor task via
-    ``coalesce(1)`` — correct for the one-file-per-commit DML contract
-    and bounded by a single micro-batch / delete set, though a
-    pathological predicate matching ~all rows serializes its write
-    through that one task; the artifact is positions/keys, not data).
+    Local warehouses take the Spark write path: one executor task via
+    ``coalesce(1)``, so the rows never pass through the driver.
     Non-Spark-native schemes (``mem://`` tests, connector-less object
-    stores) Arrow-collect the bounded artifact on the driver and put
-    the bytes through :func:`fileio_for` — the same seam the puffin
-    writer and catalog use."""
-    from iceberg_compaction_spark.sources.fileio import (
-        LocalFileIO,
-        fileio_for,
-    )
+    stores) Arrow-collect the rows and put the bytes through
+    :func:`_write_arrow`.  Delete files never come here: their keys or
+    positions are already on the driver and go to :func:`_write_arrow`
+    directly."""
+    from iceberg_compaction_spark.sources.fileio import LocalFileIO
 
-    fio = fileio_for(path)
-    if isinstance(fio, LocalFileIO):
+    if isinstance(fileio_for(path), LocalFileIO):
         local = LocalFileIO.strip(path)
         tmp = f"{local}.tmpdir-{uuid.uuid4().hex[:8]}"
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -100,13 +97,19 @@ def _write_single_parquet(df: DataFrame, path: str) -> None:
 
         shutil.rmtree(tmp, ignore_errors=True)
         return
-    import io as _io
+    _write_arrow(df.toArrow(), path)
+
+
+def _write_arrow(table, path: str) -> None:
+    """Write a driver-held Arrow table as one parquet file at ``path``
+    through :func:`fileio_for` — every scheme, no Spark job."""
+    import io
 
     import pyarrow.parquet as pq
 
-    buf = _io.BytesIO()
-    pq.write_table(df.toArrow(), buf)
-    fio.write_bytes(path, buf.getvalue())
+    buf = io.BytesIO()
+    pq.write_table(table, buf, compression="zstd")
+    fileio_for(path).write_bytes(path, buf.getvalue())
 
 
 #: upper bound on the distinct key values collected to scope an
@@ -244,128 +247,123 @@ def upsert(
 
     Commit protocol: the batch is written once — its rows through the
     DML data writer (one file per touched partition on a partitioned
-    table), its keys, by the first commit attempt, as one
-    equality-delete file holding only the key columns — and
-    :func:`upsert_snapshot` attaches both to the head the catalog commit
-    lands on.  A retry after a lost CAS race re-sequences above the
-    winner without touching a file: readers take an equality delete's
-    sequence number from its manifest entry.
+    table), its keys, collected once as Arrow and written by the first
+    commit attempt, as one equality-delete file holding only the key
+    columns — and :func:`upsert_build` attaches both to the head the
+    catalog commit lands on.
     """
+    import pyarrow.compute as pc
+
     upserts = changes
-    deletes = None
     if op_col is not None:
-        deletes = changes.where(F.col(op_col) == DELETE_OP).drop(op_col)
         upserts = changes.where(F.col(op_col) != DELETE_OP).drop(op_col)
-    n_changes = _assert_unique_keys(changes, keys, "changes batch")
+    # the one Spark job over the batch before the data write: its keys
+    # (and ops) as Arrow on the driver
+    batch = changes.select(*keys, *([op_col] if op_col else [])).toArrow()
+    base = f"upsert-{uuid.uuid4().hex[:8]}"
+    build = upsert_build(keys, batch, "changes batch", base, op_col)
 
     current = load_head(catalog, table_name, to_branch)
-    base = f"upsert-{uuid.uuid4().hex[:8]}"
-    eq_path = os.path.join(current.table_root, f"{base}-eqdel.parquet")
-
-    # equality-delete keys: EVERY change row (upserts replace, deletes
-    # remove — both need the old row gone)
-    key_df = (
-        upserts.select(*keys)
-        if deletes is None
-        else upserts.select(*keys).unionByName(deletes.select(*keys))
-    )
-    # without op_col every change row is an upsert, so the uniqueness
-    # check's row count already answers this
     has_upserts = (
-        n_changes > 0 if op_col is None else upserts.limit(1).count() > 0
+        batch.num_rows > 0
+        if op_col is None
+        else bool(pc.any(pc.not_equal(batch[op_col], DELETE_OP)).as_py())
     )
     data_tasks = (
         _write_dml_data_files(spark, current, upserts, base)
         if has_upserts
         else []
     )
-
-    # Partition-scoped attachment (see _eq_delete_scope): the distinct
-    # key values are collected at most once per column and reused across
-    # CAS retries — the batch does not change between attempts.
-    _scope_vals: dict = {}
-
-    def _key_vals(col: str):
-        if col not in _scope_vals:
-            rows = (
-                key_df.select(col)
-                .distinct()
-                .limit(_SCOPE_VALUE_CAP + 1)
-                .collect()
-            )
-            vals = [r[0] for r in rows]
-            # over the cap the driver-side set stops being
-            # "micro-batch bounded" — decline (attach everywhere);
-            # type safety is judged per spec field in _eq_delete_scope
-            _scope_vals[col] = (
-                None if len(vals) > _SCOPE_VALUE_CAP else vals
-            )
-        return _scope_vals[col]
-
-    n_keys: list[int] = []  # set once the delete file is written
-
-    def build(head: Manifest) -> Manifest:
-        if not n_keys:  # the first attempt writes the delete file
-            _write_single_parquet(key_df, eq_path)
-            import pyarrow.parquet as pq
-
-            from iceberg_compaction_spark.sources.fileio import open_input
-
-            with open_input(eq_path) as fh:
-                n_keys.append(pq.read_metadata(fh).num_rows)
-        return upsert_snapshot(
-            head, keys, eq_path, n_keys[0], _key_vals, data_tasks
-        )
-
-    return commit_catalog(catalog, table_name, build, to_branch)
+    return commit_catalog(
+        catalog,
+        table_name,
+        lambda head: build(head, data_tasks),
+        to_branch,
+    )
 
 
-def upsert_snapshot(
-    head: Manifest,
-    keys,
-    eq_path: str,
-    n_keys: int,
-    key_vals_for,
-    data_tasks: list[FileScanTask],
-) -> Manifest:
+def upsert_build(keys, batch, what: str, stem: str, op_col=None):
     """The upsert commit of both :func:`upsert` and the DataSource's
-    streaming upsert sink: ``head``'s successor with the equality delete
-    at ``eq_path`` (``n_keys`` key rows, key columns only) and the
-    batch's new data files, both at the new sequence number — so the
-    delete applies to every older file and never to the batch's own.
+    streaming upsert sink, over the batch's keys already on the driver.
 
-    The delete attaches to every current file, except that files in
-    partitions the batch provably never touches are skipped (see
-    :func:`_eq_delete_scope`; ``key_vals_for(col)`` gives the batch's
-    distinct values of a key column, or None to decline).  At 10^5
-    files that spares every later scan of an untouched partition the
-    eq-join against this commit's delete until compaction."""
+    ``batch`` is an Arrow table of the key columns (plus ``op_col`` when
+    given).  Raises at once when two rows share a key; null keys group
+    together, as ``countDistinct`` over a struct does.  Rows whose op is
+    null are neither upserts nor deletes, so they stay out of the
+    equality delete.
+
+    Returns ``build(head, data_tasks)`` for ``commit_catalog``:
+    ``head``'s successor with one equality delete (key columns only) and
+    the batch's new data files, both at the new sequence number — so the
+    delete applies to every older file and never to the batch's own.
+    The first attempt writes the delete file as ``<stem>-eqdel.parquet``;
+    a retry after a lost CAS race re-sequences it without touching a
+    file, because readers take an equality delete's sequence number from
+    its manifest entry.
+
+    The delete attaches to every current file, except files in
+    partitions the batch provably never touches (see
+    :func:`_eq_delete_scope`).  At 10^5 files that spares every later
+    scan of an untouched partition the eq-join against this commit's
+    delete until compaction."""
     import dataclasses
 
-    from iceberg_compaction_spark.sources.fileio import fileio_for
+    import pyarrow.compute as pc
 
-    # rows change in place: streaming raises unless skipped
-    new = head.successor("overwrite")
-    seq = new.sequence_number
-    eq_file = DeleteFile(
-        path=eq_path,
-        content=EQUALITY_DELETE,
-        file_size_in_bytes=fileio_for(eq_path).size(eq_path),
-        record_count=n_keys,
-        sequence_number=seq,
-        equality_ids=tuple(keys),
-    )
-    scope = _eq_delete_scope(head, list(keys), key_vals_for)
-    for t in new.data_files:
-        if scope is None or _eq_attach_needed(
-            t, head.default_spec_id, *scope
-        ):
-            t.deletes.append(eq_file)
-    new.data_files += [
-        dataclasses.replace(t, sequence_number=seq) for t in data_tasks
-    ]
-    new.assign_row_ids()  # v3 row lineage (no-op on v2)
-    return new
+    keys = list(keys)
+    n = batch.num_rows
+    d = batch.group_by(keys).aggregate([]).num_rows
+    if n != d:
+        raise ValueError(
+            f"{what} has duplicate keys ({n} rows, {d} distinct keys) — "
+            "pre-deduplicate (last-wins or otherwise) first"
+        )
+    if op_col is not None:
+        batch = batch.filter(pc.is_valid(batch[op_col]))
+    key_tbl = batch.select(keys)
+    scope_vals: dict = {}
+
+    def key_vals(col: str):
+        # over the cap the driver-side set stops being "micro-batch
+        # bounded": decline (attach everywhere); type safety is judged
+        # per spec field in _eq_delete_scope
+        if col not in scope_vals:
+            vals = key_tbl.column(col).unique().to_pylist()
+            scope_vals[col] = None if len(vals) > _SCOPE_VALUE_CAP else vals
+        return scope_vals[col]
+
+    eq_path: list[str] = []  # set by the first attempt
+
+    def build(head: Manifest, data_tasks) -> Manifest:
+        if not eq_path:
+            eq_path.append(
+                os.path.join(head.table_root, f"{stem}-eqdel.parquet")
+            )
+            _write_arrow(key_tbl, eq_path[0])
+        # rows change in place: streaming raises unless skipped
+        new = head.successor("overwrite")
+        seq = new.sequence_number
+        eq_file = DeleteFile(
+            path=eq_path[0],
+            content=EQUALITY_DELETE,
+            file_size_in_bytes=fileio_for(eq_path[0]).size(eq_path[0]),
+            record_count=key_tbl.num_rows,
+            sequence_number=seq,
+            equality_ids=tuple(keys),
+        )
+        scope = _eq_delete_scope(head, keys, key_vals)
+        for t in new.data_files:
+            if scope is None or _eq_attach_needed(
+                t, head.default_spec_id, *scope
+            ):
+                t.deletes.append(eq_file)
+        new.data_files += [
+            dataclasses.replace(t, sequence_number=seq) for t in data_tasks
+        ]
+        new.assign_row_ids()  # v3 row lineage (no-op on v2)
+        return new
+
+    return build
 
 
 def delete_where(
@@ -395,10 +393,10 @@ def delete_where(
     rows added by the race winner (the serializable-delete view).
 
     Scale shape: the scan + filter is a distributed plan with the
-    predicate eligible for pushdown; positions never exist driver-side
-    (single-file parquet write, or executor-serialized DV blobs) —
-    only the REFERENCED FILE PATHS are collected, which is manifest
-    scale by definition.
+    predicate eligible for pushdown.  On v2 the matched ``(path, pos)``
+    rows are collected once as Arrow and written on the driver (one
+    Spark job); on v3 the DV blobs are serialized on executors and only
+    they are collected.
     """
     from iceberg_compaction_spark.sources.scan import (
         HIDDEN_FILE_PATH,
@@ -485,34 +483,31 @@ def _write_v3_dv_file(spark, merged, out_path: str):
 
 def _write_position_artifact(spark, cur, matched_pos, path):
     """Write the position-delete artifact for ``matched_pos`` rows
-    (``(sys_hidden_file_path, sys_hidden_pos)``): a parquet trail sorted
-    by ``(path, pos)`` on v2, a puffin deletion vector on v3 — the one
-    position-delete writer of DML and delete maintenance.  Returns
-    ``(refs, n)`` — referenced data-file paths and total positions; the
-    artifact file is removed when nothing matched."""
-    from iceberg_compaction_spark.sources.fileio import fileio_for, open_input
+    (``(sys_hidden_file_path, sys_hidden_pos)``) — the one
+    position-delete writer of DML and delete maintenance.  On v2 the
+    rows are collected once as Arrow, sorted by ``(path, pos)`` on the
+    driver and written through :func:`_write_arrow`; on v3 they become a
+    puffin deletion vector serialized on executors.  Returns
+    ``(refs, n)`` — referenced data-file paths and total positions; no
+    file is left when nothing matched."""
+    from iceberg_compaction_spark.sources.scan import (
+        HIDDEN_FILE_PATH,
+        HIDDEN_POS,
+    )
 
-    fileio_for(path).makedirs(os.path.dirname(path))
+    fio = fileio_for(path)
+    fio.makedirs(os.path.dirname(path))
     if cur.format_version >= 3:
         refs, n = _write_v3_dv_file(spark, matched_pos, path)
-    else:
-        from iceberg_compaction_spark.sources.scan import (
-            HIDDEN_FILE_PATH,
-            HIDDEN_POS,
-        )
-
-        _write_single_parquet(
-            matched_pos.orderBy(HIDDEN_FILE_PATH, HIDDEN_POS), path
-        )
-        import pyarrow.parquet as pq
-
-        with open_input(path) as fh:
-            t = pq.read_table(fh, columns=[HIDDEN_FILE_PATH])
-        n = t.num_rows
-        refs = set(t.column(HIDDEN_FILE_PATH).unique().to_pylist())
-    if n == 0:
-        fileio_for(path).remove(path)
-    return refs, n
+        if n == 0:
+            fio.remove(path)
+        return refs, n
+    t = matched_pos.toArrow().sort_by(
+        [(HIDDEN_FILE_PATH, "ascending"), (HIDDEN_POS, "ascending")]
+    )
+    if t.num_rows:
+        _write_arrow(t, path)
+    return set(t.column(HIDDEN_FILE_PATH).unique().to_pylist()), t.num_rows
 
 
 def _write_dml_data_files(
@@ -526,8 +521,9 @@ def _write_dml_data_files(
     ``write.distribution-mode`` for partitioned tables), so each touched
     partition gets one file rather than one per input task; unpartitioned
     tables and FileIO-only backends keep the single-file artifact (a
-    bounded changed-rows set by definition).  Sequence numbers are
-    stamped by the caller's commit."""
+    bounded changed-rows set by definition), its column bounds and null
+    counts taken from the footer like the sized writer's.  Sequence
+    numbers are stamped by the caller's commit."""
     from iceberg_compaction_spark.sources.scan import spark_native_paths
 
     df = _stamp_field_ids_like_table(df, cur)
@@ -565,15 +561,16 @@ def _write_dml_data_files(
         for t in tasks:
             t.spec_id = cur.default_spec_id
         return tasks
-    path = os.path.join(cur.table_root, f"{base}-data.parquet")
-    _write_single_parquet(df, path)
     import pyarrow.parquet as pq
 
-    from iceberg_compaction_spark.sources.fileio import fileio_for
+    from iceberg_compaction_spark.plans.pruning import footer_stats
 
+    path = os.path.join(cur.table_root, f"{base}-data.parquet")
+    _write_single_parquet(df, path)
     fio = fileio_for(path)
     with fio.open_input(path) as fh:
         md = pq.read_metadata(fh)
+    bounds, nulls = footer_stats(md)
     size = fio.size(path)
     return [
         FileScanTask(
@@ -582,6 +579,8 @@ def _write_dml_data_files(
             file_size_in_bytes=size,
             record_count=md.num_rows,
             spec_id=cur.default_spec_id if not cur.partition_spec else 0,
+            column_bounds=bounds,
+            null_counts=nulls,
         )
     ]
 
@@ -600,7 +599,6 @@ def _row_change_snapshot(
     the SAME new sequence number — the delete does not apply to them
     (it references only the old files)."""
     from iceberg_compaction_spark.plans.datamodel import POSITION_DELETE
-    from iceberg_compaction_spark.sources.fileio import fileio_for
     from iceberg_compaction_spark.sources.scan import normalize_path_str
 
     new = cur.successor(operation)
@@ -650,10 +648,10 @@ def update_where(
 
     Scale shape: the matched scan is the same distributed
     predicate-eligible plan ``delete_where`` uses; the updated-row
-    projection is JVM-side expressions; the two artifacts are one
-    bounded sidecar write each (positions + changed rows only — the
-    UNCHANGED rows are never rewritten, which is the entire point of
-    merge-on-read UPDATE at 100 TB).
+    projection is JVM-side expressions.  The positions are written as
+    ``delete_where`` writes them, the changed rows by the DML data
+    writer — the UNCHANGED rows are never rewritten, which is the
+    entire point of merge-on-read UPDATE at 100 TB.
     """
     from iceberg_compaction_spark.sources.scan import (
         HIDDEN_FILE_PATH,

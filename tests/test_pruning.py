@@ -106,6 +106,39 @@ def test_footer_stats_and_wire_roundtrip(tmp_path):
     assert t2.null_counts == t.null_counts
 
 
+def test_footer_stats_skip_decimal_columns(spark, tmp_path):
+    """Decimal bounds have no manifest wire form, and pyarrow cannot read
+    the statistics of Spark's INT64-backed decimals: both are left
+    unbounded, the other columns keep theirs, and the manifest saves."""
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "tbl")
+    os.makedirs(d)
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([1, 5], pa.int64()),
+                "p": pa.array(
+                    [decimal.Decimal("1.25")] * 2, pa.decimal128(20, 2)
+                ),
+            }
+        ),
+        f"{d}/arrow.parquet",
+    )
+    spark.createDataFrame(
+        [(7, decimal.Decimal("2.50"))], "k long, p decimal(10,2)"
+    ).coalesce(1).write.parquet(f"{d}/spark")
+    m = Manifest.from_parquet_dir(d, recursive=True)
+    bounds = sorted(t.column_bounds["k"] for t in m.data_files)
+    assert bounds == [(1, 5), (7, 7)]
+    assert all("p" not in t.column_bounds for t in m.data_files)
+    m.save()
+    assert Manifest.load(m.manifest_path()).data_files[0].column_bounds
+
+
 def test_pruned_scan_equals_full_filter_property(spark, tmp_path):
     """The safety property, randomized: for disjointly-ranged files and
     random predicates, read_pruned == full-scan + filter, while at least
