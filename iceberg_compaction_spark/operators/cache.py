@@ -18,20 +18,47 @@ subtrees.
         result = pairs.collect()
     # shingle/signature storage released here
 
-The curation flagship (``registry.q_pipeline_curation_full``) scopes its
-pair generation this way: connected components materializes the pairs
-(``localCheckpoint``) before the scope exits, and neither its labels nor
-the kept documents read the cached frames, so a long-lived session
-running it again and again keeps no cache entries behind.
+A scope pays off when the shared intermediate would otherwise be
+recomputed.  ``minhash_lsh_dedup_pairs`` needs none: its four readers of
+the per-doc shingle sets share one reused exchange, and the curation
+flagship (``registry.q_pipeline_curation_full``) measured faster without
+a scope.
 
 Mirrors the reference's per-run materialization of hash-join build sides
 inside DataFusion (freed when the plan finishes) rather than its
 process-global caches.
+
+``temp_views`` binds DataFrames into SQL text (one ``spark.sql`` call
+builds a whole subplan) without evicting their cache entries: dropping a
+temp view through ``spark.catalog`` — as ``spark.sql(text, df=frame)``
+does on return — also uncaches any persisted plan equal to the view's.
 """
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
+
+
+@contextmanager
+def temp_views(**frames: DataFrame):
+    """Registers each DataFrame as a uniquely named temp view and yields
+    ``{key: view name}``; build the ``spark.sql`` frames inside the block
+    (analysis is eager, so they keep working after it).  On exit the
+    views are dropped from the session catalog only, so a persisted
+    frame passed here stays cached."""
+    names = {k: f"__{k}_{uuid.uuid4().hex}" for k in frames}
+    for k, df in frames.items():
+        df.createOrReplaceTempView(names[k])
+    try:
+        yield names
+    finally:
+        spark = next(iter(frames.values())).sparkSession
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names.values():
+            catalog.dropTempView(name)
 
 
 class CacheScope:

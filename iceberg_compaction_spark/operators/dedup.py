@@ -30,7 +30,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from iceberg_compaction_spark.operators.text import normalize_text
+from iceberg_compaction_spark.operators.cache import temp_views
+from iceberg_compaction_spark.operators.text import (
+    normalize_text,
+    normalize_text_sql,
+    sql_ident,
+)
 from iceberg_compaction_spark.sources.scan import driver_frame
 
 MERSENNE_P = 2147483647  # 2^31-1, modulus for the affine hash family
@@ -43,32 +48,56 @@ def md5_hash64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
+def _md5_hash64_sql(expr: str) -> str:
+    """:func:`md5_hash64` as SQL text over the expression ``expr``."""
+    return f"CAST(conv(substring(md5({expr}), 1, 8), 16, 10) AS BIGINT)"
+
+
+def _ngrams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, __tk, __tk_in, __ng): the normalized token array of
+    ``text_col`` (null for a null text) and its word n-grams.
+
+    The n-grams come from the JVM ``org.apache.spark.ml.feature.NGram``
+    transformer (JVM-side; 6x faster than the interpreted
+    higher-order-function formulation, measured at sf0.1), built and
+    applied directly over py4j in about a dozen round trips: the
+    ``pyspark.ml`` wrapper copies every param to the JVM one call at a
+    time, 229 round trips per call.  NGram reads ``__tk_in``, the tokens
+    with null replaced by an empty array, because it fails on a null."""
+    spark = df.sparkSession
+    tk = df.selectExpr(
+        sql_ident(id_col),
+        f"split({normalize_text_sql(sql_ident(text_col))}, ' ') AS __tk",
+        "coalesce(__tk, array()) AS __tk_in",
+    )
+    ngram = spark._jvm.org.apache.spark.ml.feature.NGram()
+    ngram.setN(n).setInputCol("__tk_in").setOutputCol("__ng")
+    return DataFrame(ngram.transform(tk._jdf), spark)
+
+
+def _shingles_sql(n: int) -> str:
+    """SQL text of a doc's distinct shingles over :func:`_ngrams`'
+    columns.  Texts shorter than n words keep the whole text as their one
+    shingle (NGram alone would emit an empty array); a null text keeps
+    ``[null]``."""
+    return (
+        f"array_distinct(CASE WHEN size(__tk) >= {n} THEN __ng"
+        " ELSE array(array_join(__tk, ' ')) END)"
+    )
+
+
 def shingle_sets(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
-    """(id, shs: array<string>, sz: int) with per-doc DISTINCT shingles.
-
-    Shingling runs through ``pyspark.ml.feature.NGram`` (JVM-side; 6x
-    faster than the interpreted higher-order-function formulation,
-    measured at sf0.1) with the same output: space-joined word n-grams.
-    Texts shorter than n words keep the whole-text-as-one-shingle
-    semantics (NGram alone would emit an empty array).  Everything is a
-    narrow per-row op — per-document dedup needs no shuffle, unlike
-    explode + dropDuplicates.
+    """(id, shs: array<string>, sz: int) with per-doc DISTINCT shingles:
+    the space-joined word n-grams of :func:`_ngrams`, or the whole text
+    when it is shorter than n words.  Everything is a narrow per-row op —
+    per-document dedup needs no shuffle, unlike explode + dropDuplicates.
     """
-    from pyspark.ml.feature import NGram
-
-    tk = df.select(
-        F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("__tk")
-    )
-    grams = NGram(n=n, inputCol="__tk", outputCol="__ng").transform(tk)
-    shs = F.array_distinct(
-        F.when(F.size("__tk") >= n, F.col("__ng")).otherwise(
-            F.array(F.array_join("__tk", " "))
-        )
-    )
-    return grams.select(F.col(id_col), shs.alias("shs")).select(
-        F.col(id_col), "shs", F.size("shs").alias("sz")
+    # ``sz`` reads ``shs`` as a lateral column alias: one call, and the
+    # analyzer still stages ``shs`` in its own projection
+    return _ngrams(df, id_col, text_col, n).selectExpr(
+        sql_ident(id_col), f"{_shingles_sql(n)} AS shs", "size(shs) AS sz"
     )
 
 
@@ -222,6 +251,19 @@ def hash_params(num_hashes: int = DEFAULT_NUM_HASHES) -> list[tuple[int, int]]:
     return [(2 * i + 1, 101 * i + 7) for i in range(num_hashes)]
 
 
+def _signatures_sql(sets: str, id_col: str, num_hashes: int) -> str:
+    """SQL text of :func:`minhash_signatures` over the relation ``sets``."""
+    i = sql_ident(id_col)
+    mins = ", ".join(
+        f"min(({a} * __h + {b}) % {MERSENNE_P}) AS sig_{k}"
+        for k, (a, b) in enumerate(hash_params(num_hashes))
+    )
+    return (
+        f"SELECT {i}, {mins} FROM (SELECT {i}, {_md5_hash64_sql('__s')} AS __h"
+        f" FROM (SELECT {i}, explode(shs) AS __s FROM {sets})) GROUP BY {i}"
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -262,17 +304,24 @@ def minhash_signatures(
     """
     if sets is None:
         sets = shingle_sets(df, id_col, text_col, n)
+    with temp_views(sets=sets) as v:
+        return sets.sparkSession.sql(_signatures_sql(v["sets"], id_col, num_hashes))
 
-    hashed = sets.select(
-        F.col(id_col), F.explode("shs").alias("__s")
-    ).select(F.col(id_col), md5_hash64(F.col("__s")).alias("__h"))
-    aggs = [
-        F.min((F.lit(a) * F.col("__h") + F.lit(b)) % MERSENNE_P).alias(
-            f"sig_{i}"
+
+def _band_keys_sql(num_hashes: int, band_size: int) -> str:
+    """SQL text of the LSH band keys of a signature row, one per band."""
+    if num_hashes % band_size != 0:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by band_size "
+            f"({band_size}) — trailing signatures would be silently unused"
         )
-        for i, (a, b) in enumerate(hash_params(num_hashes))
-    ]
-    return hashed.groupBy(id_col).agg(*aggs)
+    keys = ", ".join(
+        f"md5(concat_ws('_', '{j}', "
+        + ", ".join(f"sig_{j * band_size + k}" for k in range(band_size))
+        + "))"
+        for j in range(num_hashes // band_size)
+    )
+    return f"explode(array({keys}))"
 
 
 def band_table(
@@ -289,20 +338,18 @@ def band_table(
     At 100 TB this IS the persisted dedup index: store it once per
     corpus snapshot and every new batch joins against it (see
     :func:`minhash_lsh_incremental_pairs`)."""
-    if num_hashes % band_size != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by band_size "
-            f"({band_size}) — trailing signatures would be silently unused"
-        )
-    n_bands = num_hashes // band_size
-    keys = []
-    for j in range(n_bands):
-        cols = [f"sig_{j * band_size + k}" for k in range(band_size)]
-        keys.append(
-            F.md5(F.concat_ws("_", F.lit(str(j)), *[F.col(c) for c in cols]))
-        )
-    return signatures.select(
-        F.col(id_col), F.explode(F.array(*keys)).alias("band_key")
+    return signatures.selectExpr(
+        sql_ident(id_col), f"{_band_keys_sql(num_hashes, band_size)} AS band_key"
+    )
+
+
+def _candidates_sql(bands: str, id_col: str) -> str:
+    """SQL text of the distinct (id_a < id_b) pairs sharing a band of
+    the (id, band_key) relation ``bands``."""
+    i = sql_ident(id_col)
+    return (
+        f"SELECT DISTINCT a.{i} AS id_a, b.{i} AS id_b FROM {bands} a"
+        f" JOIN {bands} b ON a.band_key = b.band_key WHERE a.{i} < b.{i}"
     )
 
 
@@ -314,14 +361,122 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Distinct (id_a, id_b) pairs sharing at least one LSH band bucket."""
     bands = band_table(signatures, id_col, num_hashes, band_size)
-    a = bands.select(F.col(id_col).alias("id_a"), "band_key")
-    b = bands.select(F.col(id_col).alias("id_b"), "band_key")
-    return (
-        a.join(b, "band_key")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()
-    )
+    with temp_views(bands=bands) as v:
+        return bands.sparkSession.sql(_candidates_sql(v["bands"], id_col))
+
+
+# Pair similarities as integer ppm over the staged intersection size
+# ``__inter`` and the set sizes ``__sz_l``/``__sz_r`` of
+# :func:`verify_candidates`.  ``1000000.0D`` keeps the arithmetic in
+# double: a bare ``1000000.0`` is a DECIMAL literal in Spark SQL text.
+JACCARD_PPM_SQL = "__inter * 1000000.0D / (__sz_l + __sz_r - __inter)"
+CONTAINMENT_PPM_SQL = "__inter * 1000000.0D / least(__sz_l, __sz_r)"
+
+
+def _verify_sql(
+    cands: str,
+    sets: str,
+    ppm_sql: str,
+    metric: str,
+    threshold_ppm: int,
+    id_col: str,
+    left: str,
+    right: str,
+) -> str:
+    """SQL text of :func:`verify_candidates` over the relations
+    ``cands`` and ``sets``."""
+    i, l, r, m = (sql_ident(x) for x in (id_col, left, right, metric))
+    return f"""
+    SELECT {l}, {r}, {m} FROM (
+      SELECT {l}, {r}, __inter, CAST(FLOOR({ppm_sql}) AS BIGINT) AS {m}
+      FROM (
+        SELECT c.{l}, c.{r}, sl.sz AS __sz_l, sr.sz AS __sz_r,
+          size(array_compact(array_intersect(sl.shs, sr.shs))) AS __inter
+        FROM {cands} c
+        JOIN {sets} sl ON sl.{i} = c.{l}
+        JOIN {sets} sr ON sr.{i} = c.{r}))
+    WHERE __inter > 0 AND {m} >= {int(threshold_ppm)}"""
+
+
+def verify_candidates(
+    cands: DataFrame,
+    sets: DataFrame,
+    ppm_sql: str,
+    metric: str,
+    threshold_ppm: int,
+    id_col: str = "doc_id",
+    left: str = "id_a",
+    right: str = "id_b",
+) -> DataFrame:
+    """Exact verification of candidate pairs: ``(left, right, metric)``
+    for the candidates sharing at least one shingle whose
+    ``floor(ppm_sql)`` reaches ``threshold_ppm``.
+
+    Each candidate joins both docs' rows of ``sets`` (from
+    :func:`shingle_sets`) once, and the intersection is
+    ``size(array_intersect(shs_l, shs_r))`` — exact, because ``shs`` is
+    already distinct — without the null shingle of a null text, which
+    matches nothing, as in a join on the shingle.  Verification cost is two joins of the candidate
+    set, never a join of the corpus-sized shingle stream.
+    """
+    with temp_views(cands=cands, sets=sets) as v:
+        return sets.sparkSession.sql(
+            _verify_sql(
+                v["cands"], v["sets"], ppm_sql, metric, threshold_ppm,
+                id_col, left, right,
+            )
+        )
+
+
+def lsh_verified_pairs(
+    df: DataFrame,
+    ppm_sql: str,
+    metric: str,
+    threshold_ppm: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    num_hashes: int = DEFAULT_NUM_HASHES,
+    band_size: int = DEFAULT_BAND_SIZE,
+    scope=None,
+) -> DataFrame:
+    """MinHash-LSH candidate pairs of the documents ``df``, verified by
+    :func:`verify_candidates`: shingle sets, signatures, band keys, the
+    candidate self-join and the verification are ONE ``spark.sql``
+    query over the n-grams of :func:`_ngrams`, so the subplan is parsed
+    and analyzed once.
+
+    The shingle sets are an aggregate on the doc id (ids are unique per
+    the documents contract, so ``first`` is exact): the only filters
+    their four readers — both band sides and both verification sides —
+    can push below it are on the id, so all four read one reused
+    exchange and the corpus is tokenized and shingled once per query
+    with no cache.  With a ``scope`` the sets are persisted through it
+    instead."""
+    spark = df.sparkSession
+    i = sql_ident(id_col)
+
+    def query(docs: str) -> str:
+        return f"""
+        WITH docs AS ({docs}),
+        sigs AS ({_signatures_sql("docs", id_col, num_hashes)}),
+        bands AS (SELECT {i}, {_band_keys_sql(num_hashes, band_size)} AS band_key
+                  FROM sigs),
+        cands AS ({_candidates_sql("bands", id_col)})
+        {_verify_sql("cands", "docs", ppm_sql, metric, threshold_ppm,
+                     id_col, "id_a", "id_b")}"""
+
+    with temp_views(grams=_ngrams(df, id_col, text_col, n)) as v:
+        docs = (
+            f"SELECT {i}, shs, size(shs) AS sz FROM (SELECT {i},"
+            f" first({_shingles_sql(n)}) AS shs FROM {v['grams']}"
+            f" WHERE {i} IS NOT NULL GROUP BY {i})"
+        )
+        if scope is None:
+            return spark.sql(query(docs))
+        cached = scope.persist(spark.sql(docs))
+    with temp_views(sets=cached) as v:
+        return spark.sql(query(f"SELECT * FROM {v['sets']}"))
 
 
 def _persister(scope):
@@ -346,59 +501,28 @@ def minhash_lsh_dedup_pairs(
 
     This is the point of LSH at scale: the all-pairs shingle join
     (cost ~ sum of shingle-frequency squared) is replaced by
-    candidates x their-shingles joins, so verification cost scales with
-    the number of candidate pairs, not with corpus co-occurrence.
+    :func:`verify_candidates`, which joins each candidate to both docs'
+    distinct shingle arrays once and intersects them with
+    ``array_intersect``, so verification cost scales with the number of
+    candidate pairs, not with corpus co-occurrence.
+
+    The plan is built from SQL text: the n-grams in two DataFrame steps,
+    then shingle sets, signatures, bands, candidates and verification as
+    one ``spark.sql`` query (:func:`lsh_verified_pairs`) holding the
+    expressions ``registry._minhash_ctes`` writes for the DuckDB oracle.
+    Building it costs a few dozen py4j round trips, not thousands.
 
     ``scope``: an optional
     :class:`~iceberg_compaction_spark.operators.cache.CacheScope`.  With
-    one, the shingle-set and signature intermediates are persisted
-    through it — consume the result inside the scope and their storage
-    is released on exit.  Without one nothing is cached: the returned
-    frame is a plain lazy plan whose branches share those subtrees
-    through the query's own exchange reuse, so no cache entry outlives
-    the query.
+    one, the per-doc shingle-set table that the band and verification
+    branches read is persisted through it — consume the result inside
+    the scope and the storage is released on exit.  Without one nothing
+    is cached, and the branches read one reused exchange of that table,
+    so the corpus is still tokenized and shingled once per query.
     """
-    # The shingle-set and signature tables are tiny relative to the corpus
-    # (k ints / a string array per doc) but feed multiple join branches;
-    # under a scope, persist them so the md5/tokenize subtrees evaluate
-    # once, not once per branch. (The reference materializes join build
-    # sides the same way inside DataFusion's hash join.)
-    _persist = _persister(scope)
-    sets = _persist(shingle_sets(df, id_col, text_col, n))
-    sh = sets.select(F.col(id_col), F.explode("shs").alias("shingle"))
-    sigs = _persist(minhash_signatures(df, id_col, text_col, n, num_hashes, sets=sets))
-    cands = lsh_candidate_pairs(sigs, id_col, num_hashes, band_size)
-
-    sizes = sets.select(F.col(id_col), "sz")
-    sh_a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = sh.select(
-        F.col(id_col).alias("__b_id"), F.col("shingle").alias("__b_shingle")
-    )
-    inter = (
-        cands.join(sh_a, on="id_a")
-        .join(
-            sh_b,
-            (F.col("id_b") == F.col("__b_id"))
-            & (F.col("shingle") == F.col("__b_shingle")),
-            "inner",
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .withColumn(
-            "jaccard_ppm",
-            F.floor(
-                F.col("inter") * 1000000.0
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-            ).cast("long"),
-        )
-        .where(F.col("jaccard_ppm") >= threshold_ppm)
-        .select("id_a", "id_b", "jaccard_ppm")
+    return lsh_verified_pairs(
+        df, JACCARD_PPM_SQL, "jaccard_ppm", threshold_ppm, id_col, text_col,
+        n, num_hashes, band_size, scope,
     )
 
 
@@ -431,12 +555,11 @@ def minhash_lsh_incremental_pairs(
     oracle-checkable.
 
     Output: (new_id, old_id, jaccard_ppm) — exact Jaccard computed for
-    candidate pairs only, same verification as
+    candidate pairs only by :func:`verify_candidates`, as in
     :func:`minhash_lsh_dedup_pairs`; ``scope`` as there.
     """
     _persist = _persister(scope)
     sets = _persist(shingle_sets(df, id_col, text_col, n))
-    sh = sets.select(F.col(id_col), F.explode("shs").alias("shingle"))
     sigs = _persist(
         minhash_signatures(df, id_col, text_col, n, num_hashes, sets=sets)
     )
@@ -458,36 +581,9 @@ def minhash_lsh_incremental_pairs(
         .dropDuplicates()
     )
 
-    sizes = sets.select(F.col(id_col), "sz")
-    sh_new = sh.select(F.col(id_col).alias("new_id"), "shingle")
-    sh_old = sh.select(
-        F.col(id_col).alias("__o_id"), F.col("shingle").alias("__o_shingle")
-    )
-    inter = (
-        cands.join(sh_new, on="new_id")
-        .join(
-            sh_old,
-            (F.col("old_id") == F.col("__o_id"))
-            & (F.col("shingle") == F.col("__o_shingle")),
-            "inner",
-        )
-        .groupBy("new_id", "old_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sz_n = sizes.select(F.col(id_col).alias("new_id"), F.col("sz").alias("sz_n"))
-    sz_o = sizes.select(F.col(id_col).alias("old_id"), F.col("sz").alias("sz_o"))
-    return (
-        inter.join(sz_n, "new_id")
-        .join(sz_o, "old_id")
-        .withColumn(
-            "jaccard_ppm",
-            F.floor(
-                F.col("inter") * 1000000.0
-                / (F.col("sz_n") + F.col("sz_o") - F.col("inter"))
-            ).cast("long"),
-        )
-        .where(F.col("jaccard_ppm") >= threshold_ppm)
-        .select("new_id", "old_id", "jaccard_ppm")
+    return verify_candidates(
+        cands, sets, JACCARD_PPM_SQL, "jaccard_ppm", threshold_ppm, id_col,
+        left="new_id", right="old_id",
     )
 
 
@@ -725,7 +821,9 @@ def connected_components(
     Hybrid execution: when the pair graph fits under ``driver_max_edges``
     (the common case — LSH-band survivors are a vanishing fraction of the
     corpus), edges are collected once and resolved with an in-memory
-    union-find, costing one Spark job instead of ~2 per fixpoint round.
+    union-find: after the checkpoint, one ``limit`` collect both decides
+    the path and fetches the edges, instead of ~2 jobs per fixpoint
+    round.
     The labels come back as an Arrow-built JVM relation
     (:func:`~iceberg_compaction_spark.sources.scan.driver_frame`), so
     the queries that read them run no Python worker.  Above the ceiling
@@ -763,23 +861,30 @@ def connected_components(
     # Small-graph fast path: the fixpoint loop below costs ~2 Spark jobs
     # per round of pure fixed overhead, which dominates when the survivor
     # pair graph is small (the common case — measured 4.4 s -> ~2 s on
-    # the sf0.1 curation flagship).  r16: the fast path decides and
-    # collects from the HALF edges directly — the symmetrize + global
-    # dropDuplicates + second localCheckpoint (a second materialization
-    # job over the whole edge set) now runs only on the distributed path
-    # (guide §2.4: one materialization, not two).  Each undirected edge
-    # contributes 2 rows to the symmetrized set the driver_max_edges
-    # threshold was calibrated against, hence the 2x.
-    n_half = half_edges.count()
-    if n_half == 0:
+    # the sf0.1 curation flagship).  The fast path reads the HALF edges
+    # directly; the symmetrize + global dropDuplicates + second
+    # localCheckpoint run only on the distributed path.  Each undirected
+    # edge contributes 2 rows to the symmetrized set the driver_max_edges
+    # threshold was calibrated against, so at most half of it may come
+    # back.  Collecting one edge past that cap decides the path in the
+    # same job that fetches the edges — a separate count() cost two more
+    # jobs (an AQE stage plus its result) — and an over-cap graph goes on
+    # from the same checkpoint, so the pairs are never computed twice.
+    # ``toArrow`` runs the limit as ONE job whatever the partition count
+    # (``collect`` would scan partitions in growing batches, a job each).
+    cap = max(driver_max_edges, 0) // 2
+    head = half_edges.limit(cap + 1).toArrow()
+    if head.num_rows == 0:
         # clean corpus: no pairs, no components — skip the fixpoint loop
         return half_edges.select(
             F.col("src").alias("doc_id"), F.col("dst").alias("component_id")
         )
-    if 2 * n_half <= driver_max_edges:
+    if head.num_rows <= cap:
+        # the SQL ``src != dst`` filter: self-loops and null ends drop out
         half = [
-            (r["src"], r["dst"])
-            for r in half_edges.where(F.col("src") != F.col("dst")).collect()
+            (a, b)
+            for a, b in zip(head["src"].to_pylist(), head["dst"].to_pylist())
+            if a is not None and b is not None and a != b
         ]
         comp = _union_find_components(half)
         return driver_frame(
@@ -893,9 +998,10 @@ def jaccard_pairs_prefix(
     the hot-shingle df^2 blowup twice over: prefixes are ~(1-t) of each
     set, and the global-frequency order pushes them onto the RARE end of
     the vocabulary.  Measured on the sf0.1 fixture at t=0.6: 1.40M
-    classic candidates -> 0.37M.  Candidates are then verified with an
-    exact array_intersect against the full shingle sets, so the output is
-    identical to the classic inverted-index join (same oracle SQL).
+    classic candidates -> 0.37M.  Candidates are then verified by
+    :func:`verify_candidates` (an exact array_intersect against the full
+    shingle sets), so the output is identical to the classic
+    inverted-index join (same oracle SQL).
 
     The prefix length uses pure integer arithmetic —
     ``sz - ceil_div(threshold_ppm * sz, 1e6) + 1`` — because a float
@@ -951,30 +1057,8 @@ def jaccard_pairs_prefix(
         .select("id_a", "id_b")
         .dropDuplicates()
     )
-    sa = sets.select(
-        F.col(id_col).alias("id_a"),
-        F.col("shs").alias("shs_a"),
-        F.col("sz").alias("vsz_a"),
-    )
-    sb = sets.select(
-        F.col(id_col).alias("id_b"),
-        F.col("shs").alias("shs_b"),
-        F.col("sz").alias("vsz_b"),
-    )
-    inter = F.size(F.array_intersect("shs_a", "shs_b"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard_ppm",
-            F.floor(
-                F.col("inter") * 1000000.0
-                / (F.col("vsz_a") + F.col("vsz_b") - F.col("inter"))
-            ).cast("long"),
-        )
-        .where(F.col("jaccard_ppm") >= threshold_ppm)
-        .select("id_a", "id_b", "jaccard_ppm")
+    return verify_candidates(
+        cand, sets, JACCARD_PPM_SQL, "jaccard_ppm", threshold_ppm, id_col
     )
 
 

@@ -48,16 +48,26 @@ def _tokens(col: Column) -> Column:
     return F.split(F.trim(F.lower(col)), "\\s+")
 
 
-def _stage_tokens(df: DataFrame, name: str, text_col: str) -> DataFrame:
-    """``df`` plus the token array of ``text_col`` as column ``name``,
-    which the caller drops again — so an input column of that name
-    (Spark matches names case-insensitively) would be overwritten and
-    lost: refuse it instead."""
+def _tokens_sql(expr: str) -> str:
+    """:func:`_tokens` as SQL text over the expression ``expr``."""
+    return f"split(trim(lower({expr})), '\\\\s+')"
+
+
+def _refuse_stage_collision(df: DataFrame, name: str) -> None:
+    """The caller stages a token column ``name`` and drops it again — so
+    an input column of that name (Spark matches names
+    case-insensitively) would be overwritten and lost: refuse it."""
     if any(c.lower() == name.lower() for c in df.columns):
         raise ValueError(
             f"input column {name!r} collides with the token column this "
             "operator stages; rename it first"
         )
+
+
+def _stage_tokens(df: DataFrame, name: str, text_col: str) -> DataFrame:
+    """``df`` plus the token array of ``text_col`` as column ``name``
+    (see :func:`_refuse_stage_collision`)."""
+    _refuse_stage_collision(df, name)
     return df.withColumn(name, _tokens(F.col(text_col)))
 
 
@@ -79,60 +89,74 @@ def _ppm(x: Column) -> Column:
     return F.floor(x * 1000000).cast("long")
 
 
+def _quality_sql(text_col: str, toks: str) -> dict[str, str]:
+    """The eight :func:`with_quality` columns as SQL text over the text
+    column and its staged token array ``toks``.  Fractional literals
+    carry the ``D`` suffix: a bare ``0.2`` is a DECIMAL literal in Spark
+    SQL, and the arithmetic is double, as in the oracle."""
+    c = sql_ident(text_col)
+    n = f"length({c})"
+    n_safe = f"greatest({n}, 1)"
+    # char-class counts via translate (char-map lookup, ~3x faster than a
+    # regex pass, measured at sf0.1): count = len - len(chars removed)
+    alpha_chars = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
+    alpha = f"({n} - length(translate({c}, '{alpha_chars}', '')))"
+    digit = f"({n} - length(translate({c}, '0123456789', '')))"
+    space = f"({n} - length(translate({c}, ' ', '')))"
+    n_toks = f"CASE WHEN trim({c}) = '' THEN 0 ELSE size({toks}) END"
+    n_toks_safe = f"greatest({n_toks}, 1)"
+    stops = ", ".join(f"'{w}'" for w in ENGLISH_STOPWORDS)
+    stop_hits = f"size(filter({toks}, t -> t IN ({stops})))"
+    # composite: favor alphabetic text with spaces and some stopwords,
+    # penalize digit-heavy; clamp to [0,1]
+    score = (
+        f"least(greatest({alpha} / {n_safe}"
+        f" + least({stop_hits} / {n_toks_safe}, 0.2D)"
+        f" + least({space} / {n_safe}, 0.25D)"
+        f" - {digit} / {n_safe}, 0.0D), 1.0D)"
+    )
+
+    def ppm(x: str) -> str:  # _ppm as SQL text
+        return f"CAST(FLOOR(({x}) * 1000000) AS BIGINT)"
+
+    return {
+        "n_chars_c": f"CAST({n} AS INT)",
+        "n_tokens": f"CAST({n_toks} AS INT)",
+        "alpha_ppm": ppm(f"{alpha} / {n_safe}"),
+        "digit_ppm": ppm(f"{digit} / {n_safe}"),
+        "space_ppm": ppm(f"{space} / {n_safe}"),
+        "stopword_ppm": ppm(f"{stop_hits} / {n_toks_safe}"),
+        "avg_token_len_ppm": ppm(f"({alpha} + {digit}) / {n_toks_safe}"),
+        "quality_ppm": ppm(score),
+    }
+
+
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring columns; ratios as integer ppm (see _ppm).
 
-    The token array is STAGED as a real column before the scoring
-    projection (r16 s3, guide §4.2 — the HOF-closure staging class):
-    ``_tokens`` appeared both under ``size`` (codegen) and inside the
-    stopword ``filter`` HOF (interpreted CodegenFallback), and codegen
-    subexpression elimination does not reach into fallback expressions,
-    so every row tokenized twice.  Staging makes it once; CollapseProject
-    keeps the staging projection separate because the alias is referenced
-    more than once.  Values unchanged — same tokens, same counts.
-    """
-    c = F.col(text_col)
-    staged = _stage_tokens(df, "__toks_q", text_col)
-    n = F.length(c)
-    n_safe = F.greatest(n, F.lit(1))
-    # char-class counts via translate (char-map lookup, ~3x faster than a
-    # regex pass, measured at sf0.1): count = len - len(chars removed)
-    _ALPHA = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
-    alpha = n - F.length(F.translate(c, _ALPHA, ""))
-    digit = n - F.length(F.translate(c, "0123456789", ""))
-    space = n - F.length(F.translate(c, " ", ""))
-    toks = F.col("__toks_q")
-    n_toks = F.when(F.trim(c) == "", F.lit(0)).otherwise(F.size(toks))
-    n_toks_safe = F.greatest(n_toks, F.lit(1))
-    stop_hits = F.size(
-        F.filter(toks, lambda t: t.isin(*ENGLISH_STOPWORDS))
-    )
-    avg_tok_len = (alpha + digit) / n_toks_safe
+    All eight columns are one projection of SQL expressions
+    (:func:`_quality_sql`), added by one ``withColumns`` call and one
+    ``drop``; the stopword count is one ``filter(toks, t -> t IN (...))``
+    expression.
 
-    # composite: favor alphabetic text with spaces and some stopwords,
-    # penalize digit-heavy; clamp to [0,1]
-    score = F.least(
-        F.greatest(
-            alpha / n_safe
-            + F.least(stop_hits / n_toks_safe, F.lit(0.2))
-            + F.least(space / n_safe, F.lit(0.25))
-            - digit / n_safe,
-            F.lit(0.0),
-        ),
-        F.lit(1.0),
-    )
-    # one projection: each chained withColumn re-analyzes the whole plan
-    return staged.withColumns(
-        {
-            "n_chars_c": n.cast("int"),
-            "n_tokens": n_toks.cast("int"),
-            "alpha_ppm": _ppm(alpha / n_safe),
-            "digit_ppm": _ppm(digit / n_safe),
-            "space_ppm": _ppm(space / n_safe),
-            "stopword_ppm": _ppm(stop_hits / n_toks_safe),
-            "avg_token_len_ppm": _ppm(avg_tok_len),
-            "quality_ppm": _ppm(score),
-        }
+    The token array is STAGED as a real column before the scoring
+    projection (the HOF-closure staging class, guide §4.2): the tokens
+    appear both under ``size`` (codegen) and inside the stopword
+    ``filter`` HOF (interpreted CodegenFallback), and codegen
+    subexpression elimination does not reach into fallback expressions,
+    so unstaged every row tokenized twice.  Staged, it tokenizes once;
+    CollapseProject keeps the staging projection separate because the
+    alias is referenced more than once.
+    """
+    _refuse_stage_collision(df, "__toks_q")
+    cols = {
+        "__toks_q": _tokens_sql(sql_ident(text_col)),
+        **_quality_sql(text_col, "__toks_q"),
+    }
+    # the quality columns read ``__toks_q`` as a lateral column alias,
+    # which the analyzer stages in a projection of its own
+    return df.withColumns(
+        {name: F.expr(sql) for name, sql in cols.items()}
     ).drop("__toks_q")
 
 
@@ -175,6 +199,17 @@ def with_language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 def normalize_text(col: Column) -> Column:
     """Lowercase, trim, collapse internal whitespace — the exact-dup key."""
     return F.regexp_replace(F.trim(F.lower(col)), "\\s+", " ")
+
+
+def sql_ident(name: str) -> str:
+    """``name`` quoted as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def normalize_text_sql(expr: str) -> str:
+    """:func:`normalize_text` as SQL text over the expression ``expr``
+    (the doubled backslash is the SQL string escape of ``\\s+``)."""
+    return f"regexp_replace(trim(lower({expr})), '\\\\s+', ' ')"
 
 
 def with_fingerprints(

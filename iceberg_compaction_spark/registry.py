@@ -24,7 +24,6 @@ from iceberg_compaction_spark.operators import dedup as dd
 from iceberg_compaction_spark.operators import similarity as sim
 from iceberg_compaction_spark.operators import synthetic as syn
 from iceberg_compaction_spark.operators import text as tx
-from iceberg_compaction_spark.operators.cache import CacheScope
 from iceberg_compaction_spark.operators.mor import (
     EqualityDeleteTable,
     apply_equality_deletes,
@@ -2147,34 +2146,34 @@ def q_pipeline_curation_full(spark, sf_dir):
     are Jaccard-1.0 pairs and always share every LSH band) -> quality
     gates (token count, stopword ratio).  Composes
     minhash_lsh_dedup_pairs + connected_components + with_quality
-    end-to-end; the CC fixpoint loop is the only eager stage, everything
-    else stays lazy.
+    end-to-end; the CC fast path's one edge collect is the only eager
+    stage, everything else stays lazy.  The plan is built from SQL text:
+    the pair subplan is one ``spark.sql`` query holding the expressions
+    the oracle CTEs below spell out, and the quality gates one projection
+    of SQL expressions, so the lazy frame costs a few hundred py4j round
+    trips, not thousands.
 
     Pair generation is the banded-LSH scale path, not the inverted-index
     exact join: at a 10x-scaled fixture the classic shingle self-join
     measured 75 s vs 7.8 s for LSH (the df^2 co-occurrence term grows
     quadratically with corpus density while band buckets stay bounded),
-    and at 100 TB the exact join is not runnable at all.  The banding is
-    deterministic (fixed hash params, mirrored CTE-for-CTE in the
-    oracle), so both engines see the identical candidate set and the
-    demotion output is hash-exact, same as dedup_minhash_lsh."""
+    and at 100 TB the exact join is not runnable at all.  Candidates are
+    verified by ``array_intersect`` of the two docs' distinct shingle
+    arrays.  The banding is deterministic (fixed hash params, mirrored
+    CTE-for-CTE in the oracle), so both engines see the identical
+    candidate set and the demotion output is hash-exact, same as
+    dedup_minhash_lsh."""
     docs = _docs(spark, sf_dir)
-    # CC materializes the pairs (localCheckpoint) and neither its result
-    # nor ``kept`` reads the shingle/signature caches, so they are
-    # released as soon as CC returns
-    with CacheScope() as cs:
-        pairs = dd.minhash_lsh_dedup_pairs(
-            docs, threshold_ppm=JACCARD_THRESHOLD_PPM, scope=cs
-        )
-        cc = dd.connected_components(pairs)
-    demoted = cc.where(F.col("component_id") != F.col("doc_id")).select(
-        "doc_id"
-    )
+    # no CacheScope: the pair plan's four readers of the per-doc shingle
+    # sets share one reused exchange, so the corpus is tokenized once and
+    # nothing is cached (persisting those sets measured slower at the
+    # perfbench corpus and at sf0.01)
+    pairs = dd.minhash_lsh_dedup_pairs(docs, threshold_ppm=JACCARD_THRESHOLD_PPM)
+    cc = dd.connected_components(pairs)
+    demoted = cc.where("component_id != doc_id").select("doc_id")
     kept = docs.join(demoted, "doc_id", "left_anti")
     q = tx.with_quality(kept).select("doc_id", "n_tokens", "stopword_ppm")
-    return q.where(
-        (F.col("n_tokens") >= 40) & (F.col("stopword_ppm") >= 50000)
-    )
+    return q.where("n_tokens >= 40 AND stopword_ppm >= 50000")
 
 
 @register("events_sessionize_salted", ORACLES["events_sessionize"])
@@ -2501,49 +2500,17 @@ def q_dedup_containment(spark, sf_dir):
     inside a long one, which symmetric Jaccard misses (the union term
     drowns the overlap).  Candidates come from the same deterministic
     minhash banding as dedup_minhash_lsh (bucketed, 100 TB-safe); only
-    the verification formula differs, so the oracle reuses the shared
-    CTE chain with a LEAST() denominator."""
-    docs = _docs(spark, sf_dir)
-    # not persisted: the result is a lazy frame, so nothing here could
-    # release a cache; the branches share ``sets`` through the query's
+    the verification formula differs (``dd.lsh_verified_pairs`` with a
+    LEAST() denominator), so the oracle reuses the shared CTE chain with
+    the same denominator."""
+    # no scope: the result is a lazy frame, so nothing here could release
+    # a cache; the branches share the shingle sets through the query's
     # exchange reuse
-    sets = dd.shingle_sets(docs)
-    sigs = dd.minhash_signatures(docs, sets=sets)
-    cand = dd.lsh_candidate_pairs(
-        sigs, "doc_id", dd.DEFAULT_NUM_HASHES, dd.DEFAULT_BAND_SIZE
-    )
-    sa = sets.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sets.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
-    # exact intersection count for candidate pairs (same shape as
-    # minhash_lsh_dedup_pairs' verify stage — but WITHOUT the jaccard
-    # verify join that dedup_minhash_lsh adds; containment only needs
-    # the raw candidates)
-    sh = sets.select(F.col("doc_id"), F.explode("shs").alias("shingle"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(
-        F.col("doc_id").alias("__b_id"), F.col("shingle").alias("__b_sh")
-    )
-    inter = (
-        cand.join(a, "id_a")
-        .join(
-            b,
-            (F.col("id_b") == F.col("__b_id"))
-            & (F.col("shingle") == F.col("__b_sh")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "containment_ppm",
-            F.floor(
-                F.col("c") * 1000000.0 / F.least("sz_a", "sz_b")
-            ).cast("long"),
-        )
-        .where(F.col("containment_ppm") >= CONTAINMENT_THRESHOLD_PPM)
-        .select("id_a", "id_b", "containment_ppm")
+    return dd.lsh_verified_pairs(
+        _docs(spark, sf_dir),
+        dd.CONTAINMENT_PPM_SQL,
+        "containment_ppm",
+        CONTAINMENT_THRESHOLD_PPM,
     )
 
 

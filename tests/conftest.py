@@ -1,3 +1,5 @@
+from contextlib import contextmanager
+
 import pytest
 
 from iceberg_compaction_spark.session import session_builder
@@ -16,3 +18,29 @@ def spark():
     ).getOrCreate()
     yield spark
     spark.stop()
+
+
+class _Count:
+    n = 0
+
+
+@contextmanager
+def py4j_round_trips():
+    """Counts the py4j commands this process sends to the JVM while the
+    block runs (``.n`` of the yielded object); each is one round trip.
+    Garbage-collected Python proxies send detach commands at random
+    moments, so assert bounds, not exact counts."""
+    from py4j.clientserver import ClientServerConnection
+
+    count = _Count()
+    send = ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        count.n += 1
+        return send(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counted
+    try:
+        yield count
+    finally:
+        ClientServerConnection.send_command = send
