@@ -158,10 +158,9 @@ class Compaction:
         )
 
         wcfg = self.config.writer
+        rows = sum(t.record_count for t in g.data_files)
         if wcfg.estimated_row_size_bytes is None:
-            row_size = estimate_row_size(
-                g.total_data_size, sum(t.record_count for t in g.data_files)
-            )
+            row_size = estimate_row_size(g.total_data_size, rows)
             from dataclasses import replace
 
             wcfg = replace(wcfg, estimated_row_size_bytes=row_size)
@@ -184,6 +183,8 @@ class Compaction:
             output_parallelism=g.output_parallelism,
             sort_order=order,
             partition_spec=spec_fields,
+            input_bytes=g.input_size,
+            rows=rows,
         )
         if wcfg.enforce_size_band and not spec_fields:
             from iceberg_compaction_spark.sources.writer import (

@@ -61,13 +61,14 @@ class WriterConfig:
     zorder_by: tuple[str, ...] | None = None
     zorder_bits: int = 12
     # Enforce the reference's output-size band (0.75x-1.8x of target,
-    # core/src/file_selection/strategy.rs:335-343): when the row-width
-    # ESTIMATE drifts (consolidated files compress better than their
-    # fragmented inputs) and pass-1 output lands out of band, re-write
-    # the output once with the now-EXACT width — the Spark-first stand-in
-    # for the reference's byte-exact rolling writer.  Off by default:
-    # the correction pass re-reads+re-writes only the output bytes, but
-    # that is still a second write of the group.
+    # core/src/file_selection/strategy.rs:335-343): pass 1 sizes files
+    # from INPUT bytes, and consolidated files compress better than
+    # their fragmented inputs; when pass-1 output lands out of band,
+    # re-cut it once into round(output bytes / target) files of equal
+    # row counts — the Spark-first stand-in for the reference's
+    # byte-exact rolling writer.  Off by default: the re-cut re-reads
+    # and re-writes only the output bytes, but that is still a second
+    # write of the group.
     enforce_size_band: bool = False
 
 

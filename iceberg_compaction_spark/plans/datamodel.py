@@ -85,7 +85,6 @@ class FileGroup:
     equality_delete_files: list[DeleteFile] = field(default_factory=list)
     input_parallelism: int = 1
     output_parallelism: int = 1
-    expected_output_files: int = 1
     partition: tuple[Any, ...] | None = None
     # Iceberg table format version (datafusion_processor.rs:632-653):
     # v2 -> position deletes are applied by the compaction query (J1

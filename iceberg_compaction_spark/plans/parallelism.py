@@ -13,9 +13,12 @@ core/src/config/mod.rs:40-41,141-147):
 - optional heuristic forcing a single output file when total data is
   smaller than one target file.
 
-In the Spark engine these numbers drive `df.repartition(n)` before the
-write (output parallelism / expected output files) and inform
-`spark.sql.files.maxPartitionBytes` (input splits).  All integer math,
+In the Spark engine the output parallelism is the number of files the
+sized writer cuts a group into: one narrow task writes them when the
+group fits in one input split, an exchange to that many writer tasks
+otherwise (sources/writer.py `write_sized_parquet`).  The input
+parallelism is recorded on the group; Spark's scan splits come from
+`spark.sql.files.maxPartitionBytes`, not from it.  All integer math,
 matching the reference (3/4 and 9/5 ratios instead of floats).
 """
 

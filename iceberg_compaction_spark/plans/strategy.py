@@ -159,7 +159,6 @@ class PlanStrategy:
             inp, out = calculate_parallelism(g, self.config)
             g.input_parallelism = inp
             g.output_parallelism = out
-            g.expected_output_files = out
         return groups
 
     # --- factories (strategy.rs:678-902 / config/mod.rs:127-292) -----------

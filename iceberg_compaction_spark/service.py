@@ -57,9 +57,9 @@ from iceberg_compaction_spark.sources.manifest_rewrite import (
 def _maintenance_engine_config() -> CompactionConfig:
     """Maintenance default: enforce the reference's output-size band.
     The service's whole job is file hygiene — emitting out-of-band
-    files would schedule its own next pass; the correction re-cut costs
-    one extra output-sized write and only when the width estimate
-    actually drifted (sources/writer.py enforce_size_band)."""
+    files would schedule its own next pass; the re-cut costs one extra
+    output-sized write, paid only when pass-1 output actually landed
+    out of band (sources/writer.py enforce_size_band)."""
     from dataclasses import replace
 
     cfg = CompactionConfig()

@@ -896,14 +896,20 @@ def merge_into(
                 inserts = inserts.select(*table_cols)
                 out = inserts if out is None else out.unionByName(inserts)
 
-            has_rows = out is not None and out.limit(1).count() > 0
-            if not has_rows and n == 0:
+            # write first and count from the footers the writer already
+            # read: no probe job ahead of the write; a zero-row file
+            # (nothing updated or inserted) is discarded
+            data_tasks = []
+            if out is not None:
+                for t in _write_dml_data_files(
+                    spark, cur, out, f"merge-{suffix}"
+                ):
+                    if t.record_count:
+                        data_tasks.append(t)
+                    else:
+                        fileio_for(t.data_file_path).remove(t.data_file_path)
+            if not data_tasks and n == 0:
                 return None
-            data_tasks = (
-                _write_dml_data_files(spark, cur, out, f"merge-{suffix}")
-                if has_rows
-                else None
-            )
         finally:
             joined.unpersist()
             if delete_unmatched_target:

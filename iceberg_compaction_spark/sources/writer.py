@@ -4,17 +4,19 @@ The reference rolls output files at ``target_file_size_bytes`` (default
 1 GiB), ZSTD-compressed, with partition fan-out
 (core/src/executor/datafusion/mod.rs:163-223).
 
-Spark-first mapping: Spark sizes files by *rows*, so target bytes are
-translated to ``maxRecordsPerFile`` using an estimated on-disk row width
-(from the input manifest: total bytes / total records — same basis the
-reference plans with).  ``repartition(expected_output_files)`` gives the
-planned file count (L10's math decides it); ``sortWithinPartitions``
-applies the table sort order per output file with NO global sort
-(O1: SortExec with preserve_partitioning, datafusion_processor.rs:193-213);
+Spark-first mapping: Spark sizes files by *rows*, so target bytes become
+``maxRecordsPerFile``.  A group that fits in one input split
+(``spark.sql.files.maxPartitionBytes``) and asks for no partition
+fan-out or z-order is written by ONE task with no exchange
+(``coalesce(1)``): that task cuts the planned file count (L10's math)
+at ``ceil(rows / n)`` rows per file, so a rewrite is one narrow Spark
+job.  Larger groups keep an exchange to the writer parallelism —
+round-robin, hash on the fan-out columns, or range on the Morton code —
+and roll files at an estimated on-disk row width (input bytes / input
+records, the basis the reference plans with).  ``sortWithinPartitions``
+applies the table sort order per output file with NO global sort (O1:
+SortExec with preserve_partitioning, datafusion_processor.rs:193-213);
 ``partitionBy`` is the partition fan-out writer (S11).
-
-At cluster scale this write path is shuffle-minimal: one round-robin
-exchange to the writer parallelism (X1), then narrow sort+write per task.
 """
 
 from __future__ import annotations
@@ -63,6 +65,16 @@ def estimate_row_size(total_bytes: int, total_records: int) -> int | None:
     return max(1, total_bytes // total_records)
 
 
+def fits_one_split(spark, input_bytes: int | None) -> bool:
+    """True when ``input_bytes`` fit in one input split: the session's
+    ``spark.sql.files.maxPartitionBytes``, the per-task read bound
+    ``ExecutionMemoryConfig`` sizes from the memory budget."""
+    if input_bytes is None:
+        return False
+    limit = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return input_bytes <= limit
+
+
 def write_sized_parquet(
     df: DataFrame,
     out_dir: str,
@@ -71,8 +83,14 @@ def write_sized_parquet(
     sort_order: list[SortField] | None = None,
     partition_by: list[str] | None = None,
     partition_spec: "list | None" = None,
+    input_bytes: int | None = None,
+    rows: int | None = None,
 ) -> list[FileScanTask]:
     """Write ``df`` as size-targeted ZSTD parquet; return written files.
+
+    ``input_bytes`` and ``rows`` (an upper bound) describe what ``df``
+    reads; with both known, input that fits in one split
+    (:func:`fits_one_split`) takes the module docstring's narrow write.
 
     ``partition_spec`` (a list of ``functions.transforms.PartitionField``)
     is the transform-aware fan-out (S11 + the reference's computed
@@ -118,8 +136,21 @@ def write_sized_parquet(
         from iceberg_compaction_spark.operators.zorder import zorder_code
 
         df, zcode = zorder_code(df, list(config.zorder_by), config.zorder_bits)
+    mrpf = max_records_per_file(
+        config.target_file_size_bytes, config.estimated_row_size_bytes
+    )
     if output_parallelism and output_parallelism > 0:
-        if partition_by:
+        if (
+            rows
+            and not partition_by
+            and zcode is None
+            and fits_one_split(df.sparkSession, input_bytes)
+        ):
+            # narrow: one task reads the group and cuts the planned
+            # file count itself — no exchange, one job
+            df = df.coalesce(1)
+            mrpf = -(-rows // output_parallelism)
+        elif partition_by:
             # co-locate rows of one partition so fan-out writers produce
             # few files per partition value
             df = df.repartition(output_parallelism, *[F.col(c) for c in partition_by])
@@ -147,9 +178,6 @@ def write_sized_parquet(
         df = df.sortWithinPartitions(zcode)
 
     writer = df.write.mode("overwrite").option("compression", config.compression)
-    mrpf = max_records_per_file(
-        config.target_file_size_bytes, config.estimated_row_size_bytes
-    )
     if mrpf is not None:
         writer = writer.option("maxRecordsPerFile", mrpf)
     if partition_by:
@@ -209,20 +237,21 @@ def enforce_size_band(
     sort_order: list[SortField] | None = None,
     band: tuple[float, float] = SIZE_BAND,
 ) -> list[FileScanTask]:
-    """Correct row-width estimation drift so output files land inside
-    the reference's 0.75x-1.8x target band.
+    """Re-cut output files that landed outside the reference's
+    0.75x-1.8x target band.
 
-    Spark sizes files by rows, so pass 1 plans with an ESTIMATED width
-    (group bytes / group rows).  Consolidated output usually compresses
-    better than its fragmented inputs (dictionaries and footers
-    amortize), so pass-1 files can land below the band floor.  After
-    pass 1 the output width is EXACT — when any file is out of band,
-    one cheap narrow re-read of the output (no MOR joins, no deletes —
-    just the already-consolidated bytes) re-cuts it at the right file
-    count.  The reference never needs this because its writer rolls on
-    actual written bytes (executor/datafusion/mod.rs:163-223); this is
-    the Spark-first equivalent at one extra output-sized write, paid
-    only when the estimate actually drifted.
+    Pass 1 plans its file count from INPUT bytes, and consolidated
+    output usually compresses better than its fragmented inputs
+    (dictionaries and footers amortize), so pass-1 files can land below
+    the band floor.  After pass 1 the output bytes are EXACT — when any
+    file is out of band, one narrow re-read of the output (no MOR
+    joins, no deletes — just the already-consolidated bytes) is written
+    again as ``n = round(total / target)`` files of equal row counts,
+    through the same narrow-or-exchange choice as pass 1.  The
+    reference never needs this because its writer rolls on actual
+    written bytes (executor/datafusion/mod.rs:163-223); this is the
+    Spark-first equivalent at one extra output-sized write, paid only
+    when pass 1 drifted out of band.
 
     Partition-fan-out outputs are returned unchanged (the band applies
     per partition there; callers compact partitions separately).
@@ -242,18 +271,23 @@ def enforce_size_band(
     n = max(1, round(total / target))
     if n == 1 and len(tasks) == 1:
         return tasks  # a table smaller than one target file: nothing to cut
-    # exact width from pass 1; 10% headroom on maxRecordsPerFile so
-    # round-robin imbalance can't shave off a tiny remainder file
-    width = max(1, total // max(rows, 1))
     fixed_dir = out_dir.rstrip("/") + "-sized"
     df = read_listed_parquet(spark, [t.data_file_path for t in tasks])
+    # no row-width roll: the narrow path cuts n files itself, and on the
+    # exchange path each of the n round-robin tasks writes one file (a
+    # width-based roll would shave a tiny remainder off any task that
+    # holds a few more rows than the estimate allows)
     cfg2 = replace(
-        config,
-        estimated_row_size_bytes=max(1, int(width * 0.9)),
-        enforce_size_band=False,
+        config, estimated_row_size_bytes=None, enforce_size_band=False
     )
     fixed = write_sized_parquet(
-        df, fixed_dir, cfg2, output_parallelism=n, sort_order=sort_order
+        df,
+        fixed_dir,
+        cfg2,
+        output_parallelism=n,
+        sort_order=sort_order,
+        input_bytes=total,
+        rows=rows,
     )
     for t in tasks:
         try:

@@ -1,3 +1,4 @@
+import uuid
 from contextlib import contextmanager
 
 import pytest
@@ -44,3 +45,15 @@ def py4j_round_trips():
         yield count
     finally:
         ClientServerConnection.send_command = send
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs started by ``fn()`` on this thread."""
+    sc = spark.sparkContext
+    group = f"pinned-jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "pinned job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

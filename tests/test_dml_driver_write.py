@@ -1,17 +1,17 @@
 """DML delete artifacts written on the driver from one Arrow collect:
-exact Spark job counts per statement, key-type parity of the
-pyarrow-written equality delete, the v2 position trail's order and
-types, the upsert path's key checks, and pruning stats on the
+exact Spark job counts per statement (MERGE's included), key-type
+parity of the pyarrow-written equality delete, the v2 position trail's
+order and types, the upsert path's key checks, and pruning stats on the
 unpartitioned single-file data task."""
 
 import datetime
 import decimal
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import spark_jobs
 
 from iceberg_compaction_spark.plans.datamodel import (
     EQUALITY_DELETE,
@@ -20,6 +20,7 @@ from iceberg_compaction_spark.plans.datamodel import (
 from iceberg_compaction_spark.sources.catalog import FileCatalog
 from iceberg_compaction_spark.sources.ingest import (
     delete_where,
+    merge_into,
     read_table_mor,
     upsert,
 )
@@ -50,18 +51,6 @@ def _base(n=10, start=0):
     )
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs started by ``fn()`` on this thread."""
-    sc = spark.sparkContext
-    group = f"dml-jobs-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "pinned DML job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _deletes(m: Manifest, content: int) -> list:
     found = {
         d.path: d
@@ -79,7 +68,7 @@ def test_unpartitioned_upsert_runs_two_jobs(spark, tmp_path):
     changes = spark.createDataFrame(
         pa.table({"id": pa.array([3, 42], pa.int64()), "val": ["a", "b"]})
     )
-    assert _jobs(
+    assert spark_jobs(
         spark, lambda: upsert(spark, cat, "t", changes, keys=["id"])
     ) == 2
     got = {r["id"]: r["val"] for r in read_table_mor(
@@ -91,12 +80,50 @@ def test_v2_delete_where_runs_one_job(spark, tmp_path):
     """The matched scan collected once as Arrow: no range-sampling job
     for a sort, no write job."""
     cat = _catalog(tmp_path, {"base.parquet": _base()})
-    assert _jobs(
+    assert spark_jobs(
         spark, lambda: delete_where(spark, cat, "t", "id IN (2, 5)")
     ) == 1
     got = {r["id"] for r in read_table_mor(
         spark, cat.load_table("t")).collect()}
     assert got == set(range(10)) - {2, 5}
+
+
+def test_merge_into_runs_no_probe_job(spark, tmp_path):
+    """The updated and inserted rows are written without a row-count
+    probe ahead of the write; rows are counted from the written
+    footers.  A ``limit(1).count()`` probe over the union of updated
+    and inserted rows cost three more jobs here (11)."""
+    cat = _catalog(tmp_path, {"base.parquet": _base()})
+    src = spark.createDataFrame(
+        pa.table({"id": pa.array([3, 42], pa.int64()), "val": ["a", "b"]})
+    )
+    assert spark_jobs(
+        spark, lambda: merge_into(spark, cat, "t", src, keys=["id"])
+    ) == 8
+    got = {r["id"]: r["val"] for r in read_table_mor(
+        spark, cat.load_table("t")).collect()}
+    assert got[3] == "a" and got[42] == "b" and len(got) == 11
+
+
+def test_merge_into_nothing_matched_nothing_inserted_commits_nothing(
+    spark, tmp_path
+):
+    """No match and no insert: the zero-row data file is discarded and
+    no snapshot is committed."""
+    cat = _catalog(tmp_path, {"base.parquet": _base()})
+    before = cat.load_table("t")
+    root = before.table_root
+    files_before = sorted(os.listdir(root))
+    src = spark.createDataFrame(
+        pa.table({"id": pa.array([42], pa.int64()), "val": ["x"]})
+    )
+    merge_into(spark, cat, "t", src, keys=["id"], insert_unmatched=False)
+    after = cat.load_table("t")
+    assert after.snapshot_id == before.snapshot_id
+    assert sorted(os.listdir(root)) == files_before
+    assert {r["id"] for r in read_table_mor(spark, after).collect()} == set(
+        range(10)
+    )
 
 
 _KEY_TYPES = [

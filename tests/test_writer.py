@@ -93,22 +93,19 @@ def test_max_records_per_file_rolls_output(spark, tmp_path):
 # --- round 6: output-file size band (VERDICT r5 #6) --------------------------
 
 
-def test_compaction_output_lands_in_reference_size_band(spark, tmp_path):
-    """Every compacted output file must land inside the reference's
-    0.75x-1.8x target band (core/src/file_selection/strategy.rs:335-343)
-    at TWO target sizes, with row width re-estimated from the group
-    being rewritten — a writer emitting out-of-band files schedules its
-    own future compaction work."""
+def _compact_in_band(spark, tmp_path, sort_order=None):
+    """Compact a 12-file fragmentation of sf0.01 lineitem at TWO target
+    sizes with the size band enforced and the row width re-estimated
+    per group; assert every output lands in the band and every row
+    survives.  Returns the output tasks of both runs."""
     from dataclasses import replace
 
-    from iceberg_compaction_spark.compaction import Compaction
-    from iceberg_compaction_spark.config import CompactionConfig
-    from iceberg_compaction_spark.sources.manifest import Manifest
     from iceberg_compaction_spark.sources.writer import SIZE_BAND
 
     lineitem = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
     lo, hi = SIZE_BAND
     total = None
+    outputs = []
 
     for idx in range(2):
         frag = str(tmp_path / f"frag{idx}")
@@ -127,9 +124,9 @@ def test_compaction_output_lands_in_reference_size_band(spark, tmp_path):
             ),
         )
         out = str(tmp_path / f"out-{target}")
-        new, stats = Compaction(spark=spark, config=cfg).compact(
-            m, out_root=out
-        )
+        new, stats = Compaction(
+            spark=spark, config=cfg, sort_order=sort_order
+        ).compact(m, out_root=out)
         outs = [
             t
             for t in new.data_files
@@ -142,6 +139,41 @@ def test_compaction_output_lands_in_reference_size_band(spark, tmp_path):
         assert all(lo <= r <= hi for r in ratios), (target, ratios)
         # rows preserved across the correction pass
         assert sum(t.record_count for t in outs) == 60000
+        outputs.extend(outs)
+    return outputs
+
+
+def test_compaction_output_lands_in_reference_size_band(spark, tmp_path):
+    """Every compacted output file must land inside the reference's
+    0.75x-1.8x target band (core/src/file_selection/strategy.rs:335-343)
+    at TWO target sizes, with row width re-estimated from the group
+    being rewritten — a writer emitting out-of-band files schedules its
+    own future compaction work."""
+    _compact_in_band(spark, tmp_path)
+
+
+def test_size_band_holds_on_the_exchange_path(spark, tmp_path):
+    """With ``spark.sql.files.maxPartitionBytes`` below the group's input
+    (and output) size, pass 1 and the re-cut both take the round-robin
+    exchange: the band and the row count still hold, and each output
+    file stays sorted."""
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(64 * 1024))
+    try:
+        outs = _compact_in_band(
+            spark,
+            tmp_path,
+            sort_order=[SortField("l_orderkey"), SortField("l_linenumber")],
+        )
+    finally:
+        spark.conf.set(key, before)
+    for t in outs:
+        keys = pq.read_table(
+            t.data_file_path, columns=["l_orderkey", "l_linenumber"]
+        ).to_pylist()
+        keys = [(r["l_orderkey"], r["l_linenumber"]) for r in keys]
+        assert keys == sorted(keys)
 
 
 def test_identity_partition_fanout_keeps_source_column(spark, tmp_path):
