@@ -15,12 +15,9 @@ DEFAULT_TARGET_FILE_SIZE = 1024 * 1024 * 1024  # 1 GiB (mod.rs:29)
 DEFAULT_MAX_RECORD_BATCH_ROWS = 1024  # (mod.rs:31)
 DEFAULT_COMPRESSION = "zstd"  # writer props (mod.rs:295-303)
 DEFAULT_SMALL_FILE_THRESHOLD = 32 * 1024 * 1024  # 32 MiB (mod.rs:39)
-DEFAULT_MIN_SIZE_PER_PARTITION = 512 * 1024 * 1024  # 512 MiB (mod.rs:40)
-DEFAULT_MAX_FILE_COUNT_PER_PARTITION = 32  # (mod.rs:41)
 DEFAULT_MAX_CONCURRENT_COMPACTION_PLANS = 4  # (mod.rs:42)
 DEFAULT_MIN_DELETE_FILE_COUNT = 128  # (mod.rs:43)
 DEFAULT_TARGET_GROUP_SIZE = 100 * 1024 * 1024 * 1024  # 100 GiB (mod.rs:52)
-SPLIT_OVERHEAD = 5 * 1024 * 1024  # 5 MiB per split (mod.rs:55)
 
 # Iceberg-ported output sizing ratios (strategy.rs:335-343) live as
 # integer math in plans/parallelism.py: min = target*3//4, max = target*9//5.
@@ -94,9 +91,6 @@ class CompactionPlanningConfig:
 
     # L10 parallelism (strategy.rs:180-343; caps mod.rs:141-147)
     target_file_size_bytes: int = DEFAULT_TARGET_FILE_SIZE
-    min_size_per_partition: int = DEFAULT_MIN_SIZE_PER_PARTITION
-    max_file_count_per_partition: int = DEFAULT_MAX_FILE_COUNT_PER_PARTITION
-    max_input_parallelism: int = 128  # reference: 4 x CPUs
     max_output_parallelism: int = 32  # reference: CPUs
 
 
@@ -176,80 +170,6 @@ class ExecutionMemoryConfig:
         if self.spill_dir is not None:
             conf["spark.local.dir"] = self.spill_dir
         return conf
-
-
-@dataclass
-class ObjectStoreReadConfig:
-    """S5: whole-file prefetch / object-store read tuning, delegated to
-    the cloud connector (SURVEY delegates S5; the behavior replaced is
-    the reference's explicit prefetching task scan,
-    ``core/src/executor/datafusion/iceberg_file_task_scan.rs:473-580``,
-    which pipelines byte-range fetches ahead of the decoder).
-
-    Spark-first mapping: the S3A connector already implements exactly
-    that pipeline — ``fadvise`` input policy, readahead, and vectored-IO
-    range coalescing — so the engine ships a TUNED PROFILE rather than
-    reimplementing prefetch in Python:
-
-    - ``sequential`` (default here): compaction reads every data file
-      end-to-end; whole-file streaming with a deep readahead window is
-      the S3A equivalent of the reference's whole-file prefetch.
-    - ``random``: MOR point-lookup / selective predicate scans over wide
-      tables; parquet readers seek between column chunks, where
-      whole-file streaming wastes bandwidth.
-    - ``normal``: adaptive (S3A flips sequential->random on first seek).
-
-    These are session-fixed Hadoop confs — apply via the SparkSession
-    builder (``for k, v in cfg.spark_conf().items(): b.config(k, v)``);
-    they are inert on local filesystems, so the profile is safe to set
-    unconditionally.
-    """
-
-    # fadvise policy: sequential | random | normal
-    input_policy: str = "sequential"
-    # bytes the connector streams ahead of the consumer per stream —
-    # the prefetch window (reference: PREFETCH_QUEUE depth x batch)
-    readahead_bytes: int = 4 * 1024 * 1024
-    # vectored IO: parquet column-chunk ranges this close coalesce into
-    # one GET; ranges larger than max_merged split (footer-driven reads)
-    vectored_min_seek_bytes: int = 128 * 1024
-    vectored_max_merged_bytes: int = 2 * 1024 * 1024
-    # connection pool sized for many concurrent column streams per task
-    max_connections: int = 96
-
-    _POLICIES = ("sequential", "random", "normal")
-
-    def spark_conf(self) -> dict[str, str]:
-        if self.input_policy not in self._POLICIES:
-            raise ValueError(
-                f"input_policy must be one of {self._POLICIES}, "
-                f"got {self.input_policy!r}"
-            )
-        return {
-            "spark.hadoop.fs.s3a.experimental.input.fadvise": self.input_policy,
-            "spark.hadoop.fs.s3a.readahead.range": str(self.readahead_bytes),
-            "spark.hadoop.fs.s3a.vectored.read.min.seek.size": str(
-                self.vectored_min_seek_bytes
-            ),
-            "spark.hadoop.fs.s3a.vectored.read.max.merged.size": str(
-                self.vectored_max_merged_bytes
-            ),
-            "spark.hadoop.fs.s3a.connection.maximum": str(
-                self.max_connections
-            ),
-        }
-
-    @staticmethod
-    def for_compaction() -> "ObjectStoreReadConfig":
-        """Whole-file rewrite profile: the reference's S5 behavior."""
-        return ObjectStoreReadConfig(input_policy="sequential")
-
-    @staticmethod
-    def for_point_lookups() -> "ObjectStoreReadConfig":
-        """Selective-scan profile (MOR reads with pushed predicates)."""
-        return ObjectStoreReadConfig(
-            input_policy="random", readahead_bytes=256 * 1024
-        )
 
 
 @dataclass

@@ -30,6 +30,7 @@ import re
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -113,15 +114,14 @@ def bucket_column(col_name: str, n: int, spark_type: str) -> Column:
     strings hash per-row (UTF-8, variable length).  NULL -> NULL, like
     Iceberg (null partition value).
     """
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     spark_type = spark_type.lower()
 
     if spark_type in _INTEGRAL_TYPES or spark_type.startswith("timestamp"):
 
-        @pandas_udf("int", PandasUDFType.SCALAR)
-        def _bucket_long(s):
+        @pandas_udf("int")
+        def _bucket_long(s: pd.Series) -> pd.Series:
             mask = s.isna().to_numpy()
             vals = s.fillna(0).to_numpy(dtype=np.int64)
             out = (murmur3_32_long_vec(vals) & np.int32(0x7FFFFFFF)) % np.int32(n)
@@ -138,8 +138,8 @@ def bucket_column(col_name: str, n: int, spark_type: str) -> Column:
 
     if spark_type == "string":
 
-        @pandas_udf("int", PandasUDFType.SCALAR)
-        def _bucket_str(s):
+        @pandas_udf("int")
+        def _bucket_str(s: pd.Series) -> pd.Series:
             def one(v):
                 if v is None:
                     return None

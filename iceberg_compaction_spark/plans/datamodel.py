@@ -83,7 +83,6 @@ class FileGroup:
     data_files: list[FileScanTask]
     position_delete_files: list[DeleteFile] = field(default_factory=list)
     equality_delete_files: list[DeleteFile] = field(default_factory=list)
-    input_parallelism: int = 1
     output_parallelism: int = 1
     partition: tuple[Any, ...] | None = None
     # Iceberg table format version (datafusion_processor.rs:632-653):

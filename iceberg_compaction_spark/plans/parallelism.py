@@ -2,29 +2,26 @@
 
 Behavioral re-implementation of the reference's Iceberg-ported sizing math
 (core/src/file_selection/strategy.rs:180-343; defaults
-core/src/config/mod.rs:40-41,141-147):
+core/src/config/mod.rs:141-147):
 
 - expected output files from input size vs target file size, with
   remainder rules so a small tail is folded into the last file instead of
   producing a tiny file;
-- input split size `input/expected_files + SPLIT_OVERHEAD`, clamped to
-  [target, write_max];
-- input parallelism = max(size-based, count-based) capped by config;
-- optional heuristic forcing a single output file when total data is
-  smaller than one target file.
+- a heuristic forcing a single output file when total data is smaller
+  than one target file.
 
 In the Spark engine the output parallelism is the number of files the
 sized writer cuts a group into: one narrow task writes them when the
 group fits in one input split, an exchange to that many writer tasks
-otherwise (sources/writer.py `write_sized_parquet`).  The input
-parallelism is recorded on the group; Spark's scan splits come from
-`spark.sql.files.maxPartitionBytes`, not from it.  All integer math,
-matching the reference (3/4 and 9/5 ratios instead of floats).
+otherwise (sources/writer.py `write_sized_parquet`).  The reference's
+input parallelism has no counterpart: Spark's scan splits come from
+`spark.sql.files.maxPartitionBytes`.  All integer math, matching the
+reference (3/4 and 9/5 ratios instead of floats).
 """
 
 from __future__ import annotations
 
-from iceberg_compaction_spark.config import SPLIT_OVERHEAD, CompactionPlanningConfig
+from iceberg_compaction_spark.config import CompactionPlanningConfig
 from iceberg_compaction_spark.plans.datamodel import FileGroup
 
 
@@ -78,35 +75,10 @@ def expected_output_files(
     return with_remainder
 
 
-def input_split_size(
-    input_size: int,
-    target_file_size: int,
-    min_file_size: int | None = None,
-    max_file_size: int | None = None,
-) -> int:
-    """Iceberg's `inputSplitSize`: input/expected + overhead, clamped."""
-    if target_file_size == 0:
-        return input_size + SPLIT_OVERHEAD
-    if min_file_size is None:
-        min_file_size = default_min_file_size(target_file_size)
-    if max_file_size is None:
-        max_file_size = default_max_file_size(target_file_size)
-    expected = expected_output_files(
-        input_size, target_file_size, min_file_size, max_file_size
-    )
-    estimated = input_size // max(1, expected) + SPLIT_OVERHEAD
-    write_max = write_max_file_size(target_file_size, max_file_size)
-    if estimated < target_file_size:
-        return target_file_size
-    return min(estimated, write_max)
-
-
 def calculate_parallelism(
-    group: FileGroup,
-    config: CompactionPlanningConfig,
-    enable_heuristic_output_parallelism: bool = True,
-) -> tuple[int, int]:
-    """Return (input_parallelism, output_parallelism) for a file group.
+    group: FileGroup, config: CompactionPlanningConfig
+) -> int:
+    """Return the output parallelism (file count) for a file group.
 
     Raises ValueError when the group is empty (reference errors on
     input_total_bytes == 0).
@@ -116,23 +88,11 @@ def calculate_parallelism(
         raise ValueError("No files to calculate task parallelism")
 
     target = config.target_file_size_bytes
-    min_fs = default_min_file_size(target)
-    max_fs = default_max_file_size(target)
-
-    out = expected_output_files(input_size, target, min_fs, max_fs)
+    out = expected_output_files(input_size, target)
     out = max(1, min(out, config.max_output_parallelism))
 
     # Heuristic: a group whose *data* is smaller than one target file gets a
     # single writer, preventing several small outputs (strategy.rs:227-250).
-    if enable_heuristic_output_parallelism and out > 1:
-        total_data = group.total_data_size
-        if 0 < total_data < target:
-            out = 1
-
-    split = input_split_size(input_size, target, min_fs, max_fs)
-    by_size = max(1, _ceil_div(input_size, split))
-    by_count = max(
-        1, _ceil_div(group.input_file_count, config.max_file_count_per_partition)
-    )
-    inp = min(max(by_size, by_count), config.max_input_parallelism)
-    return inp, out
+    if out > 1 and 0 < group.total_data_size < target:
+        out = 1
+    return out

@@ -156,9 +156,7 @@ class PlanStrategy:
             groups = gf(groups)
 
         for g in groups:
-            inp, out = calculate_parallelism(g, self.config)
-            g.input_parallelism = inp
-            g.output_parallelism = out
+            g.output_parallelism = calculate_parallelism(g, self.config)
         return groups
 
     # --- factories (strategy.rs:678-902 / config/mod.rs:127-292) -----------

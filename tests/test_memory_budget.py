@@ -108,29 +108,3 @@ def test_compaction_fails_fast_on_infeasible_budget(spark, small_table, tmp_path
     with pytest.raises(MemoryBudgetExceeded):
         Compaction(spark, cfg).compact(small_table, out_root=out)
     assert not os.path.exists(out)  # failed BEFORE any rewrite launched
-
-
-# --- round 7: S5 object-store read profile -----------------------------------
-
-
-def test_object_store_profile_emits_s3a_confs():
-    """The S5 prefetch surface (VERDICT r6 #7): a documented tuning
-    profile mapping to the cloud connector's fadvise/readahead/vectored
-    IO — the Spark-side replacement for the reference's prefetching
-    scan (iceberg_file_task_scan.rs:473-580)."""
-    from iceberg_compaction_spark.config import ObjectStoreReadConfig
-
-    conf = ObjectStoreReadConfig.for_compaction().spark_conf()
-    assert conf["spark.hadoop.fs.s3a.experimental.input.fadvise"] == (
-        "sequential"
-    )
-    assert int(conf["spark.hadoop.fs.s3a.readahead.range"]) >= 1024 * 1024
-    assert "spark.hadoop.fs.s3a.vectored.read.max.merged.size" in conf
-
-    rnd = ObjectStoreReadConfig.for_point_lookups().spark_conf()
-    assert rnd["spark.hadoop.fs.s3a.experimental.input.fadvise"] == "random"
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="input_policy"):
-        ObjectStoreReadConfig(input_policy="warp").spark_conf()

@@ -189,6 +189,38 @@ def test_mor_multiple_equality_schemas(spark, fixture, tmp_path):
     assert ids == [i for i in range(20) if i not in (3, 8)]
 
 
+def test_mor_join_order_is_fixed(spark, fixture, tmp_path):
+    """J3 on the executed plan: the position anti-join is innermost, then
+    one equality anti-join per schema in file order, outermost last."""
+    d1 = fixture.data_files[0].data_file_path
+    pos = fixture.position_delete_files[0]
+    eq = {}
+    for col, val in (("id", pa.array([3], type=pa.int64())), ("name", ["n8"])):
+        path = str(tmp_path / f"eq_{col}.parquet")
+        pq.write_table(
+            pa.table({col: val, "sys_hidden_seq_num": pa.array([9], type=pa.int64())}),
+            path,
+        )
+        eq[col] = DeleteFile(
+            path=path, content=EQUALITY_DELETE, file_size_in_bytes=50,
+            equality_ids=(col,),
+        )
+    for first, second in (("id", "name"), ("name", "id")):
+        t = FileScanTask(
+            data_file_path=d1, length=500, record_count=10, sequence_number=1,
+            deletes=[pos, eq[first], eq[second]],
+        )
+        df = rewrite_file_group(spark, FileGroup.from_tasks([t]))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        joins = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
+        # tree string lists the outermost join first
+        assert len(joins) == 3
+        assert f"[{second}#" in joins[0]
+        assert f"[{first}#" in joins[1]
+        assert "sys_hidden_pos" in joins[2]
+        assert sorted(r["id"] for r in df.collect()) == [1, 2, 4, 5, 6, 7, 9]
+
+
 def test_mor_consecutive_same_schema_files_merge(spark, fixture, tmp_path):
     """Consecutive delete files sharing equality_ids act as ONE logical
     table (datafusion_processor.rs:701-728): both files' keys apply."""

@@ -2,14 +2,13 @@
 
 import pytest
 
-from iceberg_compaction_spark.config import SPLIT_OVERHEAD, CompactionPlanningConfig
+from iceberg_compaction_spark.config import CompactionPlanningConfig
 from iceberg_compaction_spark.plans.datamodel import FileGroup, FileScanTask
 from iceberg_compaction_spark.plans.parallelism import (
     calculate_parallelism,
     default_max_file_size,
     default_min_file_size,
     expected_output_files,
-    input_split_size,
     write_max_file_size,
 )
 
@@ -56,52 +55,25 @@ def test_expected_output_small_remainder_folds_down():
     assert expected_output_files(size, GB) == 4
 
 
-def test_input_split_size_floor_is_target():
-    # small input -> estimated split below target -> clamped up to target
-    assert input_split_size(GB // 2, GB) == GB
-
-
-def test_input_split_size_capped_at_write_max():
-    wm = write_max_file_size(GB, default_max_file_size(GB))
-    # one expected output file, huge input per file -> capped
-    size = 3 * GB + int(0.05 * GB)  # folds to 3 files, est ~1.016GB+overhead
-    est = size // 3 + SPLIT_OVERHEAD
-    assert input_split_size(size, GB) == min(est, wm)
-
-
 def test_calculate_parallelism_small_group():
     cfg = CompactionPlanningConfig()
     g = group_of([10 * MB] * 5)
-    inp, out = calculate_parallelism(g, cfg)
-    assert out == 1  # 50 MB < 1 GiB target
-    assert inp == 1
+    assert calculate_parallelism(g, cfg) == 1  # 50 MB < 1 GiB target
 
 
 def test_calculate_parallelism_output_heuristic_forces_one():
     cfg = CompactionPlanningConfig(target_file_size_bytes=100 * MB)
     # data below target but many files
     g = group_of([2 * MB] * 40)
-    inp, out = calculate_parallelism(g, cfg)
-    assert out == 1
-    # count-based: 43 files... 40 files / 32 per split -> 2
-    assert inp == 2
-
-
-def test_calculate_parallelism_count_based_input():
-    cfg = CompactionPlanningConfig(max_file_count_per_partition=10)
-    g = group_of([1 * MB] * 100)
-    inp, _ = calculate_parallelism(g, cfg)
-    assert inp == 10  # 100 files / 10 per partition
+    assert calculate_parallelism(g, cfg) == 1
 
 
 def test_calculate_parallelism_caps():
     cfg = CompactionPlanningConfig(
-        target_file_size_bytes=MB, max_output_parallelism=3, max_input_parallelism=2
+        target_file_size_bytes=MB, max_output_parallelism=3
     )
     g = group_of([10 * MB] * 10)
-    inp, out = calculate_parallelism(g, cfg)
-    assert out == 3
-    assert inp == 2
+    assert calculate_parallelism(g, cfg) == 3
 
 
 def test_calculate_parallelism_empty_group_raises():

@@ -11,7 +11,6 @@ from iceberg_compaction_spark.plans.parallelism import (
     default_max_file_size,
     default_min_file_size,
     expected_output_files,
-    input_split_size,
     write_max_file_size,
 )
 from iceberg_compaction_spark.plans.datamodel import FileScanTask
@@ -71,19 +70,6 @@ def test_expected_output_files_sizing_bounds(input_size, target):
         avg = input_size / n
         assert avg <= write_max_file_size(target, default_max_file_size(target)) + 1
         assert avg >= target / 2
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=10**14),
-    st.integers(min_value=1, max_value=2 * 10**9),
-)
-def test_input_split_size_clamped(input_size, target):
-    s = input_split_size(input_size, target)
-    assert s >= target
-    assert s <= max(
-        target, write_max_file_size(target, default_max_file_size(target))
-    )
 
 
 @settings(max_examples=500, deadline=None)
