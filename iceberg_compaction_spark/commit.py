@@ -223,36 +223,18 @@ class CommitManager:
                 f.deletes = list(f.deletes) + newer
                 added.append(f)
 
-        kept = [t for t in manifest.data_files if t.data_file_path not in removed]
-        new = Manifest(
-            table_root=manifest.table_root,
-            snapshot_id=manifest.next_snapshot(),
-            sequence_number=manifest.sequence_number,
-            schema_id=manifest.schema_id,
-            format_version=manifest.format_version,
-            data_files=kept + added,
-            properties={
-                **custom_snapshot_properties(manifest.properties),
-                **(snapshot_properties or {}),
-            },
-            partition_spec=[dict(f) for f in manifest.partition_spec],
-            default_spec_id=manifest.default_spec_id,
-            schema_fields=[dict(f) for f in manifest.schema_fields],
-            # carried table-level state a rewrite must never lose:
-            # declared sort order, the monotonic column-id high-water
-            # mark, registered statistics files (dropping them would
-            # turn the registered puffin/parquet into sweepable
-            # orphans), and the v3 row-id high-water mark
-            sort_order=[dict(f) for f in manifest.sort_order],
-            last_column_id=manifest.last_column_id,
-            statistics_files=[dict(s) for s in manifest.statistics_files],
-            partition_statistics_files=[
-                dict(s) for s in manifest.partition_statistics_files
-            ],
-            next_row_id=manifest.next_row_id,
-            # row-preserving rewrite: streaming consumers skip it
-            operation="replace",
-        )
+        # the successor carries the table-level state a rewrite must
+        # never lose (sort order, column-id and row-id high-water marks,
+        # registered statistics files); row-preserving, so streaming
+        # consumers skip it
+        new = manifest.successor("replace")
+        new.data_files = [
+            t for t in new.data_files if t.data_file_path not in removed
+        ] + added
+        new.properties = {
+            **custom_snapshot_properties(manifest.properties),
+            **(snapshot_properties or {}),
+        }
         return new
 
     def overwrite_files(
@@ -300,34 +282,18 @@ class CommitManager:
                 f.deletes = list(f.deletes) + newer
             added.append(f)
 
-        kept = [t for t in manifest.data_files if t.data_file_path not in removed]
-        return Manifest(
-            table_root=manifest.table_root,
-            snapshot_id=manifest.next_snapshot(),
-            sequence_number=manifest.sequence_number,
-            schema_id=manifest.schema_id,
-            format_version=manifest.format_version,
-            data_files=kept + added,
-            properties={
-                **custom_snapshot_properties(manifest.properties),
-                **(snapshot_properties or {}),
-            },
-            partition_spec=[dict(f) for f in manifest.partition_spec],
-            default_spec_id=manifest.default_spec_id,
-            schema_fields=[dict(f) for f in manifest.schema_fields],
-            # same carried state as rewrite_files: dropping these here
-            # would reset the v3 row-id counter (duplicate _row_id on
-            # the next assignment), orphan registered statistics files,
-            # and lose the declared order / column-id high-water mark
-            sort_order=[dict(f) for f in manifest.sort_order],
-            last_column_id=manifest.last_column_id,
-            statistics_files=[dict(s) for s in manifest.statistics_files],
-            partition_statistics_files=[
-                dict(s) for s in manifest.partition_statistics_files
-            ],
-            next_row_id=manifest.next_row_id,
-            operation="overwrite",
-        )
+        new = manifest.successor("overwrite")
+        # T2 keeps the table's data sequence number; added files carry
+        # the pin when one is given, else their own
+        new.sequence_number = manifest.sequence_number
+        new.data_files = [
+            t for t in new.data_files if t.data_file_path not in removed
+        ] + added
+        new.properties = {
+            **custom_snapshot_properties(manifest.properties),
+            **(snapshot_properties or {}),
+        }
+        return new
 
     def commit_with_retry(
         self, do_commit: Callable[[], Manifest], reload: Callable[[], None] | None = None

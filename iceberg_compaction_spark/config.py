@@ -13,7 +13,9 @@ from dataclasses import dataclass, field
 # --- defaults (core/src/config/mod.rs:29-55) -------------------------------
 DEFAULT_TARGET_FILE_SIZE = 1024 * 1024 * 1024  # 1 GiB (mod.rs:29)
 DEFAULT_MAX_RECORD_BATCH_ROWS = 1024  # (mod.rs:31)
-DEFAULT_COMPRESSION = "zstd"  # writer props (mod.rs:295-303)
+# the one parquet codec of every data, delete and statistics file this
+# engine writes (writer props, mod.rs:295-303)
+DEFAULT_COMPRESSION = "zstd"
 DEFAULT_SMALL_FILE_THRESHOLD = 32 * 1024 * 1024  # 32 MiB (mod.rs:39)
 DEFAULT_MAX_CONCURRENT_COMPACTION_PLANS = 4  # (mod.rs:42)
 DEFAULT_MIN_DELETE_FILE_COUNT = 128  # (mod.rs:43)
@@ -47,7 +49,6 @@ class WriterConfig:
     """Output-writer knobs (S10/S11; core/src/config/mod.rs:29-35,295-303)."""
 
     target_file_size_bytes: int = DEFAULT_TARGET_FILE_SIZE
-    compression: str = DEFAULT_COMPRESSION
     # Spark sizes files by rows, not bytes: estimated average row width is
     # used to translate target bytes -> maxRecordsPerFile (SURVEY.md §7.3).
     estimated_row_size_bytes: int | None = None

@@ -535,6 +535,7 @@ def compute_partition_stats(catalog, name: str, to_branch: str | None = None):
     import pyarrow.parquet as pq
 
     from iceberg_compaction_spark.commit import commit_catalog, load_head
+    from iceberg_compaction_spark.config import DEFAULT_COMPRESSION
     from iceberg_compaction_spark.sources.fileio import fileio_for
 
     current = load_head(catalog, name, to_branch)
@@ -592,7 +593,7 @@ def compute_partition_stats(catalog, name: str, to_branch: str | None = None):
         ),
     }
     buf = pa.BufferOutputStream()
-    pq.write_table(pa.table(cols), buf)
+    pq.write_table(pa.table(cols), buf, compression=DEFAULT_COMPRESSION)
     io.write_atomic(path, buf.getvalue().to_pybytes())
     entry = {
         "snapshot-id": analyzed_sid,

@@ -1667,6 +1667,7 @@ class _AppendWriter(DataSourceArrowWriter):
 
         import pyarrow as pa
 
+        from iceberg_compaction_spark.config import DEFAULT_COMPRESSION
         from iceberg_compaction_spark.sources.fileio import fileio_for
 
         target, rg_bytes, root = self._target, self._row_group_bytes, self._root
@@ -1741,7 +1742,7 @@ class _AppendWriter(DataSourceArrowWriter):
                     )
                     self.sink = fileio_for(self.path).open_output(self.path)
                     self.writer = pq.ParquetWriter(
-                        self.sink, batch.schema, compression="zstd"
+                        self.sink, batch.schema, compression=DEFAULT_COMPRESSION
                     )
                 self.buf.append(batch)
                 self.buf_bytes += batch.nbytes

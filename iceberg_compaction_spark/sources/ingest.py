@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_compaction_spark.commit import commit_catalog, load_head
+from iceberg_compaction_spark.config import DEFAULT_COMPRESSION
 from iceberg_compaction_spark.operators.mor import rewrite_file_group
 from iceberg_compaction_spark.plans.datamodel import (
     EQUALITY_DELETE,
@@ -90,7 +91,9 @@ def _write_single_parquet(df: DataFrame, path: str) -> None:
     if isinstance(fileio_for(path), LocalFileIO):
         local = LocalFileIO.strip(path)
         tmp = f"{local}.tmpdir-{uuid.uuid4().hex[:8]}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        df.coalesce(1).write.mode("overwrite").option(
+            "compression", DEFAULT_COMPRESSION
+        ).parquet(tmp)
         part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
         os.replace(os.path.join(tmp, part), local)
         import shutil
@@ -108,7 +111,7 @@ def _write_arrow(table, path: str) -> None:
     import pyarrow.parquet as pq
 
     buf = io.BytesIO()
-    pq.write_table(table, buf, compression="zstd")
+    pq.write_table(table, buf, compression=DEFAULT_COMPRESSION)
     fileio_for(path).write_bytes(path, buf.getvalue())
 
 

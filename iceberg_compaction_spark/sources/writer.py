@@ -27,7 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from iceberg_compaction_spark.config import WriterConfig
+from iceberg_compaction_spark.config import DEFAULT_COMPRESSION, WriterConfig
 from iceberg_compaction_spark.plans import pruning as _pruning
 from iceberg_compaction_spark.plans.datamodel import FileScanTask
 from iceberg_compaction_spark.sources.scan import read_listed_parquet
@@ -177,7 +177,7 @@ def write_sized_parquet(
     elif zcode is not None:
         df = df.sortWithinPartitions(zcode)
 
-    writer = df.write.mode("overwrite").option("compression", config.compression)
+    writer = df.write.mode("overwrite").option("compression", DEFAULT_COMPRESSION)
     if mrpf is not None:
         writer = writer.option("maxRecordsPerFile", mrpf)
     if partition_by:

@@ -278,3 +278,30 @@ def test_unpartitioned_dml_data_file_records_pruning_stats(spark, tmp_path):
     ]
     assert task.column_bounds["id"] == (3, 42)
     assert task.null_counts == {"id": 0, "val": 1}
+
+
+def test_dml_files_share_the_engine_codec(spark, tmp_path):
+    """Upsert data, equality-delete and position-delete files all carry
+    ``config.DEFAULT_COMPRESSION`` in their footers: the local Spark
+    write of the upsert's data file included."""
+    from iceberg_compaction_spark.config import DEFAULT_COMPRESSION
+
+    cat = _catalog(tmp_path, {"base.parquet": _base()})
+    changes = spark.createDataFrame([(3, "a"), (42, "b")], "id long, val string")
+    upsert(spark, cat, "t", changes, keys=["id"])
+    m = delete_where(spark, cat, "t", "id = 5")
+    written = [
+        t.data_file_path for t in m.data_files
+        if not t.data_file_path.endswith("base.parquet")
+    ] + [d.path for c in (EQUALITY_DELETE, POSITION_DELETE) for d in _deletes(m, c)]
+    assert [os.path.basename(p).rsplit("-", 1)[-1] for p in written] == [
+        "data.parquet", "eqdel.parquet", "pos.parquet"
+    ]
+    for path in written:
+        meta = pq.ParquetFile(path).metadata
+        codecs = {
+            meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        }
+        assert codecs == {DEFAULT_COMPRESSION.upper()}, path

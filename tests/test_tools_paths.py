@@ -1,12 +1,15 @@
 """Scripts under ``tools/`` import the package from their own checkout:
 a literal absolute path in ``sys.path`` would make a copy of the
-repository silently import another checkout's package."""
+repository silently import another checkout's package.  Each script is
+also named in the README, so no one-off script outlives its use
+unnoticed."""
 
 import ast
 import os
 import pathlib
 
-TOOLS = pathlib.Path(__file__).resolve().parent.parent / "tools"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+TOOLS = ROOT / "tools"
 
 
 def _absolute_sys_path_entries(tree):
@@ -37,3 +40,12 @@ def test_tools_import_from_their_own_checkout():
     assert offenders == []
     # the guard itself sees a literal entry
     assert list(_absolute_sys_path_entries(ast.parse('sys.path.insert(0, "/x/repo")')))
+
+
+def test_every_tool_is_named_in_readme():
+    readme = (ROOT / "README.md").read_text()
+    unnamed = [
+        py.name for py in sorted(TOOLS.glob("*.py"))
+        if f"tools/{py.name}" not in readme
+    ]
+    assert unnamed == []

@@ -8,12 +8,18 @@ $SPARK_GRAFT_CPUS), runs bench.py's warmup, then times each named
 query with the noop sink ``reps`` times (reporting every rep plus the
 min) and optionally dumps ``explain("formatted")`` to
 ``<DIR>/<name>.txt``.  Jobs are labelled so the (disabled-by-default)
-UI and event logs attribute stages to queries.
+UI and event logs attribute stages to queries.  The last stdout line is
+``{"metrics": {name: min_s}}``, so ``tools/ab.py`` can compare entries
+across revisions:
+
+    python3 tools/ab.py HEAD . --pairs 10 -- \\
+        python3 tools/profile_query.py dedup_contamination
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
@@ -46,6 +52,7 @@ def main() -> None:
     syn.position_delete_table(spark, sf_dir).count()
     syn.equality_delete_table(spark, sf_dir).count()
 
+    mins = {}
     for name in args.queries:
         fn = registry.QUERIES[name]
         if args.explain:
@@ -66,8 +73,10 @@ def main() -> None:
             bench.run_query(fn(spark, sf_dir))
             times.append(round(time.monotonic() - t0, 3))
         spark.sparkContext.setJobDescription(None)
-        print(f"{name}: reps={times} min={min(times)}", flush=True)
+        mins[name] = min(times)
+        print(f"{name}: reps={times} min={mins[name]}", flush=True)
     spark.stop()
+    print(json.dumps({"metrics": mins}))
 
 
 if __name__ == "__main__":
